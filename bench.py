@@ -1,7 +1,10 @@
 """Per-round benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": <float>}.
+(default: the sf0.1 fixture) on a host-sized session
+(``session.get_spark``: local[cores], shuffle width = cores, driver heap
+a quarter of RAM; $SPARK_GRAFT_CPUS overrides the core count) and print
+ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec, ...}, "sf": <float>,
+"host": {"cores", "ram_mb", "driver_heap"}, ...}.
 
 Headline set = every QuerySpec registered with ``bench=True`` (TPC-H core
 shapes + window + count-distinct + sessionization + the LLM dedup/ANN/
@@ -227,26 +230,69 @@ def _drop_control_worktree() -> None:
     )
 
 
+def session_warmup(spark, sf_dir: str, qs: dict) -> str | None:
+    """Warm the session before any timing; return the sibling sf0.001
+    directory for per-query codegen warm runs, or None when there is none.
+
+    Primes the Python/Arrow worker pool, loads every table at the timed
+    SF, and runs one full multi-stage query there: the very first
+    sf-sized AQE execution pays one-off scheduler/memory-manager warmup
+    (~1 s) that would otherwise bill the alphabetically-first query.
+    Warming per query at the smallest SF fills the whole-stage-codegen
+    (Janino) cache, so timed runs measure data-proportional work, not
+    constant JIT compilation (~2-3 s per complex query). When no smaller
+    sibling SF exists the per-query warm pass is SKIPPED rather than run
+    on the timed dataset (that would measure hot-cache second runs)."""
+    from pyblazing_spark.sources.tables import TABLES, load_table
+
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(cores * 4, numPartitions=cores).mapInPandas(
+        lambda it: it, schema="id long"
+    ).collect()
+    for t in TABLES:
+        load_table(spark, sf_dir, t).count()
+    # In ONLY mode (respike subprocess) tpch_q6 may be filtered out —
+    # warm with the query under test instead.
+    qs.get("tpch_q6", qs[sorted(qs)[0]])(spark, sf_dir).collect()
+    warm = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    return warm if os.path.isdir(warm) else None
+
+
+def timed_runs(fn, spark, sf_dir: str, reps: int) -> list[float]:
+    """Wall seconds of ``reps`` fully collected runs of one query."""
+    runs = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).collect()
+        runs.append(round(time.perf_counter() - t0, 3))
+    return runs
+
+
+def trimmed_median(runs: list[float]) -> float:
+    """Drop the min and max (with at least 3 runs), median of the rest."""
+    trimmed = sorted(runs)[1:-1] if len(runs) >= 3 else sorted(runs)
+    return trimmed[len(trimmed) // 2]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    from pyblazing_spark.session import get_spark
+    from pyblazing_spark.session import get_spark, host_ram_mb
 
-    spark = get_spark(
-        app_name="pyblazing_spark-bench",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.sql.shuffle.partitions": cpus,
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        },
-    )
+    spark = get_spark(app_name="pyblazing_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # what the session actually got: PYSPARK_SUBMIT_ARGS can override
+    # the heap without the conf showing it
+    jvm_heap_mb = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() >> 20
+    host = {
+        "cores": spark.sparkContext.defaultParallelism,
+        "ram_mb": host_ram_mb(),
+        "driver_heap": f"{jvm_heap_mb}m",
+    }
 
     from pyblazing_spark.plans import bench_queries
 
@@ -257,32 +303,7 @@ def main() -> None:
         if not qs:
             print(json.dumps({"error": f"unknown bench query {only!r}"}))
             return
-    # Warm-up: prime the Python/Arrow worker pool, then run EVERY headline
-    # query once at the smallest available SF. Identical expression trees
-    # hit the whole-stage-codegen (Janino) cache, so the timed sf runs
-    # measure data-proportional work, not constant JIT compilation —
-    # measured ~2-3 s of one-time compile per complex query, a cost that
-    # is noise at 100 TB but would dominate a 5k-row-table timing.
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).collect()
-    parent = os.path.dirname(sf_dir.rstrip("/"))
-    warm_candidate = os.path.join(parent, "sf0.001")
-    # When no smaller sibling SF exists, SKIP the per-query warm pass
-    # entirely rather than silently warming on the timed dataset (that
-    # would measure hot-cache second executions). The JSON records which
-    # mode ran so the methodology is visible in the results.
-    warm_dir = warm_candidate if os.path.isdir(warm_candidate) else None
-    from pyblazing_spark.sources.tables import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    # one full multi-stage query at the TARGET sf before timing: the very
-    # first sf-sized AQE execution pays one-off scheduler/memory-manager
-    # warmup (~1 s) that would otherwise bill the alphabetically-first
-    # query. In ONLY mode (respike subprocess) tpch_q6 may be filtered
-    # out — warm with the query under test instead.
-    qs.get("tpch_q6", qs[sorted(qs)[0]])(spark, sf_dir).collect()
+    warm_dir = session_warmup(spark, sf_dir, qs)
 
     # Trimmed median per query (round-5 verdict: 3 reps could not
     # resolve a 20% per-query move): each query is timed `reps` times
@@ -299,20 +320,14 @@ def main() -> None:
         # cache entries, re-billing the JIT).
         if warm_dir is not None:
             qs[name](spark, warm_dir).collect()
-        runs = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).collect()
-            runs.append(round(time.perf_counter() - t0, 3))
-        spreads[name] = runs
-        trimmed = sorted(runs)[1:-1] if len(runs) >= 3 else sorted(runs)
-        timings[name] = trimmed[len(trimmed) // 2]
+        spreads[name] = timed_runs(qs[name], spark, sf_dir, reps)
+        timings[name] = trimmed_median(spreads[name])
 
     # Free this process's JVM before the control subprocess starts its
-    # own (two concurrent 48g drivers would contend and bias the A/B).
+    # own (two concurrent drivers would contend and bias the A/B).
     # spark.stop() alone is NOT enough: the py4j gateway JVM survives it
     # (verified: `pgrep -c java` stays 1 after stop + gateway.shutdown),
-    # holding its 48g heap RSS while the control runs — observed 21.9 s
+    # holding its heap RSS while the control runs — observed 21.9 s
     # vs 1.9 s on the control's alphabetically-first query, decaying as
     # the OS reclaimed, which inflates the control total in OUR favor.
     # Terminate the gateway process and quiesce briefly so the A/B is
@@ -361,6 +376,7 @@ def main() -> None:
             "stat": "trimmed-median (drop min/max, median of rest)",
             "sf": sf,
             "warm_dir": warm_dir or "none (no sibling sf0.001; per-query warm pass skipped)",
+            "host": host,
             **control,
             **extra,
         }

@@ -37,16 +37,6 @@ def token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"\S+"))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND
-    letter/digit/punctuation boundaries, approximating a BPE tokenizer's
-    granularity without a vocab (cheap, deterministic)."""
-    pieces = F.split(
-        F.trim(text), r"(\s+|(?<=[a-zA-Z])(?=[0-9])|(?<=[0-9])(?=[a-zA-Z])|(?=[^\w\s])|(?<=[^\w\s]))"
-    )
-    return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
-
-
 def occurrences(text: Column, word: str) -> Column:
     """Count of ``' word '`` occurrences via the length/replace identity
     (portable: no regexp_count)."""
@@ -118,15 +108,6 @@ def digit_ratio(text: Column) -> Column:
     return F.regexp_count(text, F.lit("[0-9]")) / F.length(text)
 
 
-def punct_ratio(text: Column) -> Column:
-    """Share of characters that are neither alphanumeric nor whitespace."""
-    return F.regexp_count(F.lower(text), F.lit("[^a-z0-9 ]")) / F.length(text)
-
-
-def avg_token_len(text: Column) -> Column:
-    return F.length(F.replace(F.trim(text), F.lit(" "), F.lit(""))) / token_count(text)
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length saturation + alphabetic
     share + stopword presence − digit noise. The exact blend mirrors the
@@ -136,19 +117,6 @@ def quality_score(text: Column) -> Column:
     return F.round(
         length_part * 0.3 + alpha_ratio(text) * 0.4 + stop_part * 0.3 - digit_ratio(text) * 0.2,
         4,
-    )
-
-
-def char_shingles(text: Column, n: int = 8) -> Column:
-    """Distinct character n-grams -> array<string> (for Jaccard/MinHash).
-
-    Uses sequence+transform: stays JVM-side; ~len(text) array elements per
-    row, so project only when needed."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(text) - F.lit(n - 1))),
-            lambda i: F.substring(text, i, F.lit(n)),
-        )
     )
 
 

@@ -70,17 +70,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def cosine_udf(a: Column, b: Column) -> Column:
     """Vectorized cosine similarity: numpy einsum over Arrow batches.
 

@@ -509,9 +509,7 @@ def scc_summary(
     edges: DataFrame,
     src: str = "u",
     dst: str = "v",
-    max_rounds: int = 8,
     top: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED edge list over a
     BOUNDED node domain. The distributed work is the projection +
@@ -521,9 +519,7 @@ def scc_summary(
     (node → min-node-of-SCC) assignment is shipped back as a small
     DataFrame feeding the same distributed rollup
     (``scc_id(u) = min({u} ∪ {v : u→*v and v→*u})`` — nodes with no
-    cycle through them become singletons, identical to the former
-    reach-doubling fixpoint, without its ``max_rounds`` convergence
-    cap).
+    cycle through them become singletons).
 
     Returns the ``top`` components by ``(n_nodes DESC, scc_id)``:
     ``(scc_id, n_nodes, node_sum, n_internal_edges)``.
@@ -545,10 +541,7 @@ def scc_summary(
     mutual self-join) to avoid collecting a bounded edge list ~N² times
     SMALLER than that closure. Collecting the distinct edges once and
     running linear-time Tarjan costs less than a single closure round
-    and is exact for any diameter. ``max_rounds`` and ``checkpoint_dir``
-    are retained for API compatibility; they are no-ops (there is no
-    loop left to cap or checkpoint)."""
-    del max_rounds, checkpoint_dir  # no loop left to cap or checkpoint
+    and is exact for any diameter."""
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     if e.schema[0].dataType != e.schema[1].dataType:
@@ -689,8 +682,8 @@ def scc_pivot_fwbw(
     multi-pivot forward-backward decomposition in its coloring form
     (Orzan; the "MultiStep" method of Slota et al. — the standard
     distributed SCC algorithm family). Never materializes a transitive
-    closure, so where :func:`scc_summary`'s reach-doubling is O(N²)
-    pairs this is O(edges x rounds). Per outer round:
+    closure and never collects the edge set to the driver (as
+    :func:`scc_summary` does): O(edges x rounds). Per outer round:
 
     1. **trim** — a node with no in-edge or no out-edge cannot sit on a
        cycle: emitted as a singleton SCC (up to ``trim_rounds`` sweeps;
@@ -719,16 +712,12 @@ def scc_pivot_fwbw(
     constraint propagation scoped off, shuffles sized to cluster
     parallelism. Output shape matches :func:`scc_summary`.
     """
-    import os as _os
-    import time as _time
-
     from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
 
     spark = edges.sparkSession
     ckpt = make_ckpt(spark, checkpoint_dir)
     confs = dict(loop_shuffle_confs(spark))
     confs["spark.sql.constraintPropagation.enabled"] = "false"
-    _dbg = _os.environ.get("PBS_SCC_DEBUG") == "1"
     with scoped_conf(spark, confs):
         # e_all keeps self-loops: they count as internal edges in the
         # rollup (matching scc_summary and the recursive-CTE oracles)
@@ -760,7 +749,6 @@ def scc_pivot_fwbw(
         for _outer in range(max_outer):
             if remaining == 0:
                 break
-            _t0 = _time.time()
             if _outer > 0:
                 ea = ckpt(
                     e0.join(active.select(F.col("node").alias("u")), "u")
@@ -808,16 +796,13 @@ def scc_pivot_fwbw(
                     )
                 )
             remaining = active.count()
-            if _dbg:
-                print(f"[scc] outer {_outer}: trim {_time.time()-_t0:.1f}s rem={remaining}")
             if remaining == 0:
                 break
             # ---- forward max-label coloring to fixpoint (frontier form:
             # only strictly-improved labels propagate next round)
-            _t0 = _time.time()
             col = ckpt(active.select("node", F.col("node").alias("color")))
             changed = col
-            for _i in range(max_rounds):
+            for _ in range(max_rounds):
                 # ONE materializing job per round (r15, guide §1.2/§2.4):
                 # the round's join+aggregate+update is checkpointed
                 # eagerly with an __imp flag, and the convergence check
@@ -856,10 +841,7 @@ def scc_pivot_fwbw(
                     f"scc_pivot_fwbw: coloring exceeded {max_rounds} rounds "
                     "(graph depth too large — raise max_rounds)"
                 )
-            if _dbg:
-                print(f"[scc] color {_time.time()-_t0:.1f}s rounds={_i+1}")
             # ---- backward BFS from every color root within its class
-            _t0 = _time.time()
             ec = ckpt(
                 ea.join(
                     col.select(F.col("node").alias("u"), F.col("color").alias("__cu")),
@@ -876,8 +858,7 @@ def scc_pivot_fwbw(
                 col.where(F.col("node") == F.col("color")).select("color", "node")
             )
             frontier = reach
-            _bi = 0
-            for _bi in range(max_rounds):
+            for _ in range(max_rounds):
                 nxt = ckpt(
                     ec.join(
                         frontier.select("color", F.col("node").alias("v")),
@@ -907,8 +888,6 @@ def scc_pivot_fwbw(
                 eager=False,
             )
             remaining = active.count()
-            if _dbg:
-                print(f"[scc] bwd+emit {_time.time()-_t0:.1f}s rounds={_bi+1} rem={remaining}")
         if remaining > 0:
             raise RuntimeError(
                 f"scc_pivot_fwbw did not decompose the graph in {max_outer} "

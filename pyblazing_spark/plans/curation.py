@@ -2021,17 +2021,6 @@ ORDER BY stage_idx
 """
 
 
-def corpus_e2e_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-build composition (LAZY card; see
-    :func:`pipeline_corpus_e2e` for the contract). Side-input frames
-    (near-dup losers, contaminated ids) are materialized eagerly while
-    building, so the returned plan reads ONLY the stage-1 cache and
-    those bounded id sets — the no-rescan property the plan audit
-    checks. The stage-1 cache stays persisted; callers that consume
-    the card should unpersist via :func:`_corpus_e2e_build`."""
-    return _corpus_e2e_build(spark, sf_dir)[0]
-
-
 def _corpus_e2e_build(
     spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
 ) -> tuple[DataFrame, DataFrame]:

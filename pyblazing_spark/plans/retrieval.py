@@ -1232,19 +1232,19 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order slice — cyclic with a giant core PLUS periphery components
     at the fixture SFs, so the top-20 summary compares real component
     structure, not one saturated blob), via
-    :func:`pyblazing_spark.operators.graph.scc_summary`: transitive
-    closure by reach-DOUBLING self-joins (log2(diameter) rounds, each
-    closure eagerly checkpointed), then mutual-reachability min-ids.
-    Completes the directed-graph family (components/BFS/pagerank are
-    undirected or per-source). The naive (min-reacher, min-reachee)
-    coloring is NOT SCC — two different components can share both
-    labels through a common small source and sink — so the operator
-    pays for real mutual reachability; the oracle recomputes it with a
-    set-semantics recursive closure (DuckDB UNION recursion) and the
-    same min-id rule. Scale contract: closure is O(N^2) — the operator
-    docstring pins it to bounded node domains (bucket projections like
-    this one); unbounded-domain SCC is a different algorithm (pivot
-    FW-BW), documented, not silently absent."""
+    :func:`pyblazing_spark.operators.graph.scc_summary`: one job
+    quotients the orders slice to its distinct edge set, and an exact
+    driver-side Tarjan over those edges assigns each node the min id
+    of its SCC. Completes the directed-graph family (components/BFS/
+    pagerank are undirected or per-source). The naive (min-reacher,
+    min-reachee) coloring is NOT SCC — two different components can
+    share both labels through a common small source and sink — so the
+    operator computes real mutual reachability; the oracle recomputes
+    it with a set-semantics recursive closure (DuckDB UNION recursion)
+    and the same min-id rule. Scale contract: the collected edge set
+    is O(N^2) — the operator docstring pins it to bounded node domains
+    (bucket projections like this one); unbounded-domain SCC is
+    ``scc_pivot_fwbw`` (entry ``graph_scc_pivot``)."""
     from pyblazing_spark.operators.graph import scc_summary
 
     orders = T(spark, sf_dir, "orders").where(F.col("o_orderkey") % 5 == 0)

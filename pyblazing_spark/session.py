@@ -22,9 +22,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-#: Confs that must be set at session-build time.
+#: Confs that must be set at session-build time. The host-sized ones
+#: (shuffle width, driver heap) are added by :func:`build_confs`.
 BUILD_CONFS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -33,7 +33,30 @@ BUILD_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    "spark.ui.showConsoleProgress": "false",
 }
+
+
+def host_cores() -> int:
+    """Cores a local session uses: ``$SPARK_GRAFT_CPUS`` if set, else the
+    cores this process may run on (its CPU affinity mask)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def host_ram_mb() -> int:
+    """Physical RAM of the host, from ``/proc/meminfo``."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return kb // 1024
+
+
+def driver_heap() -> str:
+    """Driver heap: a quarter of host RAM, at least 1 GiB. In local mode
+    the executors run inside the driver JVM; the other three quarters
+    stay with the Python workers, the page cache and other processes."""
+    return f"{max(1024, host_ram_mb() // 4)}m"
+
 
 #: Confs that are runtime-settable; applied idempotently before reads so the
 #: engine behaves the same under an externally provided SparkSession (the
@@ -155,8 +178,13 @@ GPU_CONFS: dict[str, str] = {
 def build_confs(
     extra_conf: dict[str, str] | None = None, gpu: bool = False
 ) -> dict[str, str]:
-    """The session conf set: defaults + optional GPU plugin + overrides."""
-    confs = dict(BUILD_CONFS)
+    """The session conf set: defaults + host sizing + optional GPU plugin
+    + overrides. The host is read at call time, not at import."""
+    confs = {
+        **BUILD_CONFS,
+        "spark.sql.shuffle.partitions": str(host_cores()),
+        "spark.driver.memory": driver_heap(),
+    }
     if gpu:
         confs.update(GPU_CONFS)
     confs.update(extra_conf or {})
@@ -171,16 +199,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local testing;
-    on a cluster, leave it unset and submit through spark-submit/YARN/K8s.
-    ``gpu=True`` adds the RAPIDS accelerator confs (needs the plugin jar
-    on the cluster — not available in this test environment).
+    The session is sized from the host: ``master`` defaults to
+    ``local[host_cores()]``, the shuffle width to the same core count and
+    the driver heap to :func:`driver_heap` (a quarter of RAM).
+    ``$SPARK_GRAFT_CPUS`` overrides the core count; an explicit
+    ``master`` or ``extra_conf`` entry wins over either, and
+    ``--driver-memory`` in ``PYSPARK_SUBMIT_ARGS`` wins over the heap. On
+    a cluster, submit through spark-submit/YARN/K8s with an explicit
+    master. ``gpu=True`` adds the RAPIDS accelerator confs (needs the
+    plugin jar on the cluster).
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+    builder = builder.master(master or f"local[{host_cores()}]")
     for key, value in build_confs(extra_conf, gpu=gpu).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

@@ -27,23 +27,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from pyblazing_spark.session import get_spark
 
 O_OFF = 100_000_000
 
 
 def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", "12g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="avro_monolith_probe")
     spark.sparkContext.setLogLevel("ERROR")
     from pyblazing_spark.sources.avro_files import write_avro
     from pyblazing_spark.sources.avro_split_ds import read_avro_split
@@ -81,7 +74,7 @@ def main() -> int:
         t0 = time.time()
         back = read_avro_split(spark, mono)
         parts = back.rdd.getNumPartitions()
-        want = min(cpus, size // (32 << 20))
+        want = min(spark.sparkContext.defaultParallelism, size // (32 << 20))
         agg = back.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("l_orderkey").alias("s_ok"),

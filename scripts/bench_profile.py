@@ -1,8 +1,8 @@
 """Per-query bench profiler for the optimization rounds (guide §1).
 
 For every bench entry: warm at sf0.001, then time `reps` runs at the
-target SF with collect() (the bench's timed action), record the
-trimmed-ish min/median, the number of Spark JOBS the query triggers
+target SF with collect() — bench.py's own session warm-up, timed runs
+and trimmed median — and record the min/trimmed median, the number of Spark JOBS the query triggers
 (constructor collects + action), and dump `.explain("formatted")` to
 plans/<tag>/<name>_<suffix>.txt with a one-line plan-feature summary
 (Exchange / BatchEvalPython / ArrowEvalPython / scan counts).
@@ -23,11 +23,11 @@ import json
 import os
 import re
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+from bench import session_warmup, timed_runs, trimmed_median  # noqa: E402
 
 
 def plan_summary(plan: str) -> dict:
@@ -60,23 +60,12 @@ def main() -> None:
     ap.add_argument("--no-warm", action="store_true", help="skip the sf0.001 warm run")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyblazing_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench-profile",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.sql.shuffle.partitions": cpus,
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from pyblazing_spark.plans import bench_queries
     from pyblazing_spark.plans.registry import REGISTRY
-    from pyblazing_spark.sources.tables import TABLES, load_table
+    from pyblazing_spark.session import get_spark
+
+    spark = get_spark(app_name="bench-profile")
+    spark.sparkContext.setLogLevel("ERROR")
 
     qs = (
         {name: spec.fn for name, spec in REGISTRY.items()}
@@ -87,13 +76,9 @@ def main() -> None:
         keep = set(args.only.split(","))
         qs = {n: f for n, f in qs.items() if n in keep}
 
-    for t in TABLES:
-        load_table(spark, args.sf, t).count()
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).collect()
-
-    warm_dir = os.path.join(os.path.dirname(args.sf.rstrip("/")), "sf0.001")
+    warm_dir = session_warmup(spark, args.sf, qs)
+    if args.no_warm:
+        warm_dir = None
     plans_dir = os.path.join(_REPO, "plans", args.tag)
     os.makedirs(plans_dir, exist_ok=True)
 
@@ -102,15 +87,11 @@ def main() -> None:
     for name in sorted(qs):
         spark.sparkContext.setJobDescription(f"profile:{name}")
         try:
-            if not args.no_warm:
+            if warm_dir is not None:
                 qs[name](spark, warm_dir).collect()  # warm codegen
             jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-            t_ids0 = tracker.getJobIdsForGroup  # noqa: F841
-            runs = []
-            for _ in range(args.reps):
-                t0 = time.perf_counter()
-                qs[name](spark, args.sf).collect()
-                runs.append(round(time.perf_counter() - t0, 3))
+            runs = timed_runs(qs[name], spark, args.sf, args.reps)
+            med = trimmed_median(runs)
             jobs_after = len(tracker.getJobIdsForGroup(None) or [])
             df = qs[name](spark, args.sf)
             buf = io.StringIO()
@@ -126,12 +107,12 @@ def main() -> None:
             out[name] = {
                 "runs": runs,
                 "min": min(runs),
-                "med": sorted(runs)[len(runs) // 2],
+                "med": med,
                 "jobs_per_run": round((jobs_after - jobs_before) / args.reps, 1),
                 **summ,
             }
             print(
-                f"{name:28s} min={min(runs):6.3f} med={sorted(runs)[len(runs)//2]:6.3f} "
+                f"{name:28s} min={min(runs):6.3f} med={med:6.3f} "
                 f"jobs/run={(jobs_after - jobs_before) / args.reps:5.1f} "
                 f"ex={summ['exchanges']} py={summ['py_eval']}+{summ['map_in_py']} "
                 f"scans={summ['scans']}"

@@ -33,14 +33,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from tests.oracle_utils import assert_frames_match
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from pyblazing_spark.sources.tables import TABLES
+from tests.oracle_utils import assert_frames_match, oracle_connection
 
 # Eight mixed-family queries: aggregation, join+dim broadcast, window,
 # string, dates, group-sets, semi-join shape, scalar math. Every
@@ -101,22 +95,13 @@ def main() -> int:
     from pyblazing_spark.context import BlazingContext
     from pyblazing_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="concurrent-probe",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="concurrent-probe")
     spark.sparkContext.setLogLevel("ERROR")
     bc = BlazingContext(spark)
     for t in TABLES:
         bc.create_table(t, os.path.join(sf_dir, f"{t}.parquet"))
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
 
     # untimed warmup pass: session + per-query codegen warmup out of
     # BOTH timed leg (the first query in any session pays ~10 s —

@@ -8,6 +8,10 @@ N entries of queries() iteration order — exactly the slice the per-round
 driver samples under the coverage rotation (plans/registry.py).
 Mirrors the correctness gate (CORRECTNESS_r{N}.json): row
 count, column names, order-insensitive value compare.
+
+The session is deliberately PLAIN (not ``session.get_spark``): the
+correctness driver builds its own, so the engine must work without our
+build-time confs. Only its core count follows the host.
 """
 
 from __future__ import annotations
@@ -18,23 +22,40 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
-from tests.oracle_utils import assert_frames_match
+from pyblazing_spark.session import host_cores
+from tests.oracle_utils import assert_frames_match, oracle_connection
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+
+def check_entry(spark, con, name: str, fn, data_dir: str,
+                oracle: str | None) -> float | None:
+    """Run one catalog entry at ``data_dir`` and compare it with its
+    DuckDB ``oracle`` SQL (rows only when there is none); print one
+    OK / rows-only / FAIL line. Returns the Spark-side seconds, or None
+    when the entry failed."""
+    t0 = time.time()
+    try:
+        spdf = fn(spark, data_dir).toPandas()
+        dt = time.time() - t0
+        verdict = "rows-only"
+        if oracle is not None:
+            assert_frames_match(spdf, con.execute(oracle).df(), name=name)
+            verdict = "OK"
+        print(f"  {name:28s} {verdict} rows={len(spdf)} ({dt:.1f}s)")
+        return dt
+    except Exception as exc:
+        print(f"  {name:28s} FAIL: {str(exc).splitlines()[0][:150]}")
+        return None
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefixes = tuple(sys.argv[2:])
+    cores = host_cores()
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
@@ -43,10 +64,7 @@ def main() -> int:
 
     import __spark_entry__ as E
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    con = oracle_connection(sf_dir)
     qs, osql = E.queries(), E.oracle_sql()
     head = 0
     for p in prefixes:
@@ -58,20 +76,10 @@ def main() -> int:
     for name in names:
         if prefixes and not name.startswith(prefixes):
             continue
-        t0 = time.time()
-        try:
-            spdf = qs[name](spark, sf_dir).toPandas()
-            if name not in osql:
-                print(f"  {name:28s} rows-only rows={len(spdf)} ({time.time()-t0:.1f}s)")
-                n_ok += 1
-                continue
-            ddf = con.execute(osql[name]).df()
-            assert_frames_match(spdf, ddf, name=name)
-            print(f"  {name:28s} OK rows={len(spdf)} ({time.time()-t0:.1f}s)")
-            n_ok += 1
-        except Exception as exc:
+        if check_entry(spark, con, name, qs[name], sf_dir, osql.get(name)) is None:
             n_bad += 1
-            print(f"  {name:28s} FAIL: {str(exc).splitlines()[0][:150]}")
+        else:
+            n_ok += 1
     print(f"{n_ok} ok, {n_bad} failed @ {sf_dir}")
     return 1 if n_bad else 0
 

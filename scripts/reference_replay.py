@@ -661,10 +661,12 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from pyblazing_spark.context import BlazingContext
+    from pyblazing_spark.session import host_cores
 
+    cores = host_cores()
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

@@ -1,8 +1,11 @@
 """Scale probe: deterministic ~Kx self-replication of the sf0.1 fixtures
 (~sf1 equivalent) + the full bench-query correctness/timing sweep there.
 
-Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 16g pyspark-shell" \\
-           python scripts/scale_probe.py [K] [probe_dir]
+Usage: python scripts/scale_probe.py [K] [probe_dir]
+
+The session is host-sized (``session.get_spark``); on a small host a 10x
+or 100x run may need a larger heap via
+``PYSPARK_SUBMIT_ARGS="--driver-memory 16g pyspark-shell"``.
 
 What it does (VERDICT r3 #4 — the cheapest way to catch scale-dependent
 bugs above the sf0.1 sweep):
@@ -114,20 +117,13 @@ def main() -> int:
     k = int(pos[0]) if pos else 10
     probe_dir = pos[1] if len(pos) > 1 else f"/tmp/scale_probe_{k}x"
     src_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    import duckdb
-    from pyspark.sql import SparkSession
+    from driver_check import check_entry
 
-    from tests.oracle_utils import assert_frames_match
+    from pyblazing_spark.session import get_spark
+    from tests.oracle_utils import oracle_connection
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.time()
@@ -140,14 +136,7 @@ def main() -> int:
     import __spark_entry__ as E
     from pyblazing_spark.plans import REGISTRY
 
-    con = duckdb.connect()
-    from pyblazing_spark.sources.tables import TABLES
-
-    for t in TABLES:
-        # Spark writes each table as a DIRECTORY of part files.
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{probe_dir}/{t}.parquet/*.parquet'"
-        )
+    con = oracle_connection(probe_dir)
     osql = E.oracle_sql()
 
     # Round-4 additions probed alongside the bench set: the heaviest new
@@ -236,22 +225,13 @@ def main() -> int:
                 continue
         elif not (spec.bench or name in extra):
             continue
-        t0 = time.time()
-        try:
-            spdf = spec.fn(spark, probe_dir).toPandas()
-            timings[name] = round(time.time() - t0, 2)
-            if no_oracle:
-                print(f"  {name:24s} timed rows={len(spdf):>8} ({timings[name]:.1f}s)")
-            elif name in osql:
-                ddf = con.execute(osql[name]).df()
-                assert_frames_match(spdf, ddf, name=name)
-                print(f"  {name:24s} OK rows={len(spdf):>8} ({timings[name]:.1f}s)")
-            else:
-                print(f"  {name:24s} rows-only rows={len(spdf)} ({timings[name]:.1f}s)")
-            n_ok += 1
-        except Exception as exc:
+        oracle = None if no_oracle else osql.get(name)
+        dt = check_entry(spark, con, name, spec.fn, probe_dir, oracle)
+        if dt is None:
             n_bad += 1
-            print(f"  {name:24s} FAIL: {str(exc).splitlines()[0][:140]}")
+        else:
+            timings[name] = round(dt, 2)
+            n_ok += 1
     print(
         json.dumps(
             {

@@ -1,13 +1,14 @@
 """SCC algorithm scaling probe (VERDICT r10 #2): pivot/coloring FW-BW
-vs reach-doubling as the NODE DOMAIN grows.
+(``scc_pivot_fwbw``) vs the bounded-domain ``scc_summary`` as the NODE
+DOMAIN grows.
 
-Reach-doubling (``scc_summary``) materializes the transitive closure —
-O(N²) pairs, and each doubling round's self-join produces
-sum_v in(v)×out(v) intermediate rows, i.e. ~m³ per m-node SCC. The
-coloring FW-BW (``scc_pivot_fwbw``) touches O(edges × rounds) rows.
-This probe measures both on a deterministic synthetic graph family
-whose SCC sizes grow with the domain, where the asymptotics actually
-separate:
+``scc_summary`` is one distinct-quotient job plus a driver-side Tarjan
+over the collected edges (the "doubling" labels below name the
+reach-doubling closure it replaced in r15, whose self-joins produced
+~m³ rows per m-node SCC). The coloring FW-BW touches O(edges × rounds)
+rows and never collects the edge set. This probe runs both on a
+deterministic synthetic graph family whose SCC sizes grow with the
+domain:
 
 - graph(N): 8 disjoint groups of m = N/8 nodes; within a group every
   node has forward edges at strides {1, 4, 16, 64, 256} (mod m) — a
@@ -16,10 +17,8 @@ separate:
   SCC size (= m) scales linearly with N.
 - correctness: both algorithms must produce identical top-20 rollups
   at every size they both run.
-- scaling: fwbw runs at 1x/4x/10x the base domain; doubling runs at
-  1x/2x (its 10x point is ~10³ the per-round join volume of 1x —
-  hours, not minutes; the probe records its measured 1x→2x blowup and
-  the analytic factor instead of burning the box).
+- scaling: fwbw runs at 1x/2x/4x/10x the base domain, scc_summary at
+  1x/2x.
 
 Usage: python scripts/scc_scale_probe.py [base_N]
 """
@@ -32,8 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from pyblazing_spark.session import get_spark
 
 GROUPS = 8
 STRIDES = (1, 4, 16, 64, 256)
@@ -65,14 +65,7 @@ def main() -> int:
     smoke = "--smoke" in sys.argv
     pos = [a for a in sys.argv[1:] if not a.startswith("--")]
     base = int(pos[0]) if pos else (300 if smoke else 1000)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="scc_scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
     from pyblazing_spark.operators.graph import scc_pivot_fwbw, scc_summary
 
@@ -103,7 +96,7 @@ def main() -> int:
     if a1 != b1:
         print("MISMATCH — aborting"); return 1
     try:
-        a2, ta2 = run(scc_summary, base * 2, max_rounds=24)
+        a2, ta2 = run(scc_summary, base * 2)
         print(
             f"doubling: N={base*2} {ta2:.1f}s ({ta2/ta:.1f}x for 2x domain; "
             f"per-round join volume is ~m^3 per SCC -> 8x), "

@@ -31,8 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from pyblazing_spark.session import get_spark
 
 
 def build_landing(spark, base: str, rows: int, batches: int) -> str:
@@ -102,14 +103,7 @@ def drain(spark, landing: str, shape: str):
 def main() -> int:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     batches = int(sys.argv[2]) if len(sys.argv) > 2 else 12
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="stream_state_probe")
     spark.sparkContext.setLogLevel("ERROR")
     base = tempfile.mkdtemp(prefix="stream_state_")
     rc = 0

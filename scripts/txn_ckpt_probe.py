@@ -35,16 +35,9 @@ def main() -> int:
     n = 300
     if len(sys.argv) > 1:
         n = 60 if sys.argv[1] == "--smoke" else int(sys.argv[1])
-    from pyspark.sql import SparkSession
+    from pyblazing_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("txn_ckpt_probe")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="txn_ckpt_probe")
     from pyblazing_spark.sources.txn_table import TxnTable
 
     base = tempfile.mkdtemp(prefix="txn_ckpt_probe_")

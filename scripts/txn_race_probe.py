@@ -34,15 +34,11 @@ sys.path.insert(0, _REPO)
 _WRITER = r"""
 import json, os, sys, time
 sys.path.insert(0, sys.argv[5])
-from pyspark.sql import SparkSession
+from pyblazing_spark.session import get_spark
 
 role, path, rounds, start_file = (
     sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4])
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .appName(f"txn_race_{role}").getOrCreate())
+spark = get_spark(app_name=f"txn_race_{role}")
 from pyblazing_spark.sources import txn_table as TT
 
 conflicts = 0
@@ -78,16 +74,9 @@ def main() -> int:
     rounds = 15
     if len(sys.argv) > 1:
         rounds = 5 if sys.argv[1] == "--smoke" else int(sys.argv[1])
-    from pyspark.sql import SparkSession
+    from pyblazing_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("txn_race_parent")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="txn_race_parent")
     from pyblazing_spark.sources.txn_table import TxnTable
 
     base = tempfile.mkdtemp(prefix="txn_race_")

@@ -25,9 +25,9 @@ corpus, proving the runtime re-plan actually fires on real skew (the
 salted_join operator is the always-on alternative that never needs
 the optimizer to notice).
 
-Usage:
-  PYSPARK_SUBMIT_ARGS="--driver-memory 16g pyspark-shell" \\
-      python scripts/zipf_probe.py [K] [zipf_dir] [uniform_dir]
+Usage: python scripts/zipf_probe.py [K] [zipf_dir] [uniform_dir]
+(host-sized session; set a larger heap for K >= 10 on a small host
+with ``PYSPARK_SUBMIT_ARGS="--driver-memory 16g pyspark-shell"``)
 """
 
 from __future__ import annotations
@@ -284,10 +284,10 @@ def _aqe_skew_probe(spark, zipf_dir: str) -> str:
 def main() -> int:
     import json
 
-    import duckdb
-    from pyspark.sql import SparkSession
+    from driver_check import check_entry
 
-    from tests.oracle_utils import assert_frames_match
+    from pyblazing_spark.session import get_spark
+    from tests.oracle_utils import oracle_connection
 
     pos = [a for a in sys.argv[1:] if not a.startswith("--")]
     reuse = "--reuse" in sys.argv
@@ -299,15 +299,8 @@ def main() -> int:
     zipf_dir = pos[1] if len(pos) > 1 else f"/tmp/zipf_probe_{k}x"
     uni_dir = pos[2] if len(pos) > 2 else f"/tmp/scale_probe_{k}x"
     src_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="zipf_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.time()
@@ -326,7 +319,7 @@ def main() -> int:
 
     import __spark_entry__ as E
     from pyblazing_spark.plans import REGISTRY
-    from pyblazing_spark.sources.tables import TABLES, load_table
+    from pyblazing_spark.sources.tables import load_table
 
     # session warmup: without this the FIRST entry absorbs ~10 s of
     # one-time JVM/codegen/Python-worker startup and the zipf-vs-uniform
@@ -338,37 +331,23 @@ def main() -> int:
     osql = E.oracle_sql()
     results: dict[str, dict] = {}
     for tag, d in (("zipf", zipf_dir), ("uniform", uni_dir)):
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet/*.parquet'"
-            )
+        print(f"-- {tag} corpus @ {d}")
+        con = oracle_connection(d)
         for name, mode in (ENTRIES[:3] if smoke else ENTRIES):
-            try:
-                spdf = REGISTRY[name].fn(spark, d).toPandas()
-                # timing from a SECOND run: the first absorbs one-time
-                # session/codegen warmup unevenly (observed 4.7x vs a
-                # steady-state 1.3x on join_salted_skew) — correctness
-                # is checked on the first run's result
-                t0 = time.time()
-                REGISTRY[name].fn(spark, d).toPandas()
-                dt = round(time.time() - t0, 2)
-                note = f"rows={len(spdf)}"
-                do_oracle = mode == "oracle" or (
-                    mode == "oracle-uniform-only" and tag == "uniform"
-                )
-                if do_oracle and name in osql:
-                    ddf = con.execute(osql[name]).df()
-                    assert_frames_match(spdf, ddf, name=name)
-                    note += " oracle-OK"
-                results.setdefault(name, {})[tag] = (dt, note)
-                print(f"  [{tag:7s}] {name:24s} {dt:7.1f}s {note}")
-            except Exception as exc:
-                results.setdefault(name, {})[tag] = (None, "FAIL")
-                print(
-                    f"  [{tag:7s}] {name:24s} FAIL: "
-                    f"{str(exc).splitlines()[0][:120]}"
-                )
+            do_oracle = mode == "oracle" or (
+                mode == "oracle-uniform-only" and tag == "uniform"
+            )
+            fn = REGISTRY[name].fn
+            # correctness on the first run; timing from a SECOND run:
+            # the first absorbs one-time session/codegen warmup unevenly
+            # (observed 4.7x vs a steady-state 1.3x on join_salted_skew)
+            if check_entry(spark, con, name, fn, d,
+                           osql.get(name) if do_oracle else None) is None:
+                results.setdefault(name, {})[tag] = None
+                continue
+            t0 = time.time()
+            fn(spark, d).toPandas()
+            results.setdefault(name, {})[tag] = round(time.time() - t0, 2)
         con.close()
 
     print()
@@ -378,13 +357,13 @@ def main() -> int:
     print(f"{'entry':26s} {'zipf':>8s} {'uniform':>8s} {'ratio':>6s}")
     bad = 0
     for name, r in results.items():
-        z, u = r.get("zipf", (None, "")), r.get("uniform", (None, ""))
-        if z[0] is None or u[0] is None:
+        z, u = r.get("zipf"), r.get("uniform")
+        if z is None or u is None:
             bad += 1
             print(f"{name:26s} {'FAIL':>8s}")
             continue
-        ratio = z[0] / u[0] if u[0] else float("inf")
-        print(f"{name:26s} {z[0]:8.1f} {u[0]:8.1f} {ratio:5.1f}x")
+        ratio = z / u if u else float("inf")
+        print(f"{name:26s} {z:8.1f} {u:8.1f} {ratio:5.1f}x")
     return 1 if bad else 0
 
 

@@ -5,24 +5,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 @pytest.fixture(scope="session")
@@ -42,10 +29,8 @@ def sf_dir() -> str:
 def oracle_con():
     """DuckDB connection with the same tables registered as views,
     mirroring the driver's correctness harness."""
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    from tests.oracle_utils import oracle_connection
+
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()

@@ -8,9 +8,26 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 
+import duckdb
 import numpy as np
 import pandas as pd
+
+from pyblazing_spark.sources.tables import TABLES
+
+
+def oracle_connection(data_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with every fixture table of ``data_dir`` as a
+    view. A table is one parquet file or, as Spark writes it, a
+    directory of part files."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(data_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
 
 
 def _sort_key_cell(v):

@@ -186,10 +186,20 @@ def test_gpu_conf_assembly():
     """gpu=True layers the RAPIDS plugin confs over the defaults without
     disturbing them (plugin jar not present here, so only the conf dict
     is asserted — on a GPU cluster the same flag activates acceleration)."""
-    from pyblazing_spark.session import BUILD_CONFS, GPU_CONFS, build_confs
+    from pyblazing_spark.session import (
+        BUILD_CONFS,
+        GPU_CONFS,
+        build_confs,
+        driver_heap,
+        host_cores,
+    )
 
     base = build_confs()
-    assert base == {**BUILD_CONFS}
+    assert base == {
+        **BUILD_CONFS,
+        "spark.sql.shuffle.partitions": str(host_cores()),
+        "spark.driver.memory": driver_heap(),
+    }
     gpu = build_confs(gpu=True)
     for k, v in GPU_CONFS.items():
         assert gpu[k] == v
@@ -197,6 +207,25 @@ def test_gpu_conf_assembly():
         assert gpu[k] == v
     custom = build_confs({"spark.sql.shuffle.partitions": "7"}, gpu=True)
     assert custom["spark.sql.shuffle.partitions"] == "7"
+
+
+def test_build_confs_sized_from_host(monkeypatch):
+    """Shuffle width and driver heap come from the host at call time:
+    the CPU affinity mask unless $SPARK_GRAFT_CPUS overrides it, and a
+    quarter of /proc/meminfo's RAM (at least 1 GiB)."""
+    import os
+
+    from pyblazing_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(6)))
+    assert session.build_confs()["spark.sql.shuffle.partitions"] == "6"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.build_confs()["spark.sql.shuffle.partitions"] == "3"
+
+    for ram_mb, heap in ((16384, "4096m"), (65536, "16384m"), (2048, "1024m")):
+        monkeypatch.setattr(session, "host_ram_mb", lambda ram_mb=ram_mb: ram_mb)
+        assert session.build_confs()["spark.driver.memory"] == heap
 
 
 def test_sql_algebra_param(bc, spark, sf_dir):
