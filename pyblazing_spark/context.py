@@ -20,11 +20,9 @@ from __future__ import annotations
 
 import itertools
 import os
-import threading
 import time
 import warnings
 from concurrent.futures import Future, ThreadPoolExecutor
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -32,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyblazing_spark.dialect import prepare as _prepare_sql
-from pyblazing_spark.session import ensure_runtime_confs, get_spark
+from pyblazing_spark.session import ensure_runtime_confs, get_spark, scoped_conf
 from pyblazing_spark.sources.files import read_source
 
 #: Reference config_options (context.py:1239-1275) -> Spark conf translation.
@@ -145,9 +143,6 @@ class BlazingContext:
         self._pending: dict[int, Future] = {}
         self._fetched: set[int] = set()
         self._pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bsql-async")
-        self._ansi_lock = threading.Lock()
-        self._ansi_depth = 0
-        self._ansi_prev: str | None = None
         self._peak_memory: dict[str, int] = {}
         self.enable_progress_bar = enable_progress_bar
         if config_options:
@@ -310,7 +305,6 @@ class BlazingContext:
         )
         return df
 
-    @contextmanager
     def _reference_eval(self):
         """Reference evaluation semantics for eager (reference-style) SQL.
 
@@ -320,30 +314,12 @@ class BlazingContext:
         ``dirSuite/TEST_14`` computes ``avg(81619.0/o_orderkey)`` over an
         orderkey domain that includes 0). Spark 4's ANSI mode throws
         instead, so eager execution — the mode that mirrors the
-        reference's eager cudf results — runs with ANSI off and the
-        previous value restored after. Lazy mode returns a plain Spark
-        DataFrame and deliberately keeps session semantics."""
-        key = "spark.sql.ansi.enabled"
-        # refcounted: the conf is SESSION-global, and the async pool runs
-        # up to 4 eager queries concurrently (the reference's own e2e
-        # suites set `concurrent: true` — TPCHSuite.yaml:4-7). A plain
-        # set/restore would re-enable ANSI under a still-running sibling
-        # query; instead the first enter disables, the last exit restores.
-        with self._ansi_lock:
-            if self._ansi_depth == 0:
-                self._ansi_prev = self.spark.conf.get(key, None)
-                self.spark.conf.set(key, "false")
-            self._ansi_depth += 1
-        try:
-            yield
-        finally:
-            with self._ansi_lock:
-                self._ansi_depth -= 1
-                if self._ansi_depth == 0:
-                    if self._ansi_prev is None:
-                        self.spark.conf.unset(key)
-                    else:
-                        self.spark.conf.set(key, self._ansi_prev)
+        reference's eager cudf results — runs with ANSI off. The scope is
+        shared with concurrent eager queries on the async pool: the
+        session value returns only when the last of them finishes. Lazy
+        mode returns a plain Spark DataFrame and deliberately keeps
+        session semantics."""
+        return scoped_conf(self.spark, {"spark.sql.ansi.enabled": "false"})
 
     def _run_eager(self, query: str, query_id: int, started: float):
         try:

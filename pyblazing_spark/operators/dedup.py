@@ -493,7 +493,7 @@ def _hot_shingle_filter(raw: DataFrame, shingle_col: str):
         return None
     masks = {int(r["__w"]): int(r["__mask"]) for r in word_rows}
     # one py4j round-trip for the whole bitmap — F.lit(list) costs one
-    # py4j call PER WORD (~18 s at the 32768 cap; see
+    # py4j call PER WORD (33.4 s at the 32768 cap; see
     # functions.long_array_lit, late r15)
     bitmap = long_array_lit(masks.get(i, 0) for i in range(n_words))
     probes = (

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
+
 
 def _label_stats(labels: DataFrame):
     """(row_count, exact label sum) in one job."""
@@ -51,11 +53,34 @@ def _label_stats(labels: DataFrame):
 _ROWS_PER_TASK = 100_000
 
 
-def _loop_width(spark, n_rows: int) -> int:
+def _loop_width_scope(spark, n_rows: int):
+    """Conf scope, nested inside the loop's own, that narrows the round
+    shuffles to the measured row count."""
     import math
 
     cap = max(1, spark.sparkContext.defaultParallelism * 4)
-    return max(1, min(cap, math.ceil(max(1, n_rows) / _ROWS_PER_TASK)))
+    width = max(1, min(cap, math.ceil(max(1, n_rows) / _ROWS_PER_TASK)))
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)})
+
+
+def _checkpointed_loop_scope(spark):
+    """Conf scope of the checkpoint-per-round loops: cluster-parallelism
+    shuffles (:func:`loop_shuffle_confs`) and constraint propagation off.
+    A ``localCheckpoint``'d plan's LogicalRDD retains constraints that
+    reference attributes pruned from its output, and the next round's
+    self-union trips ``rewriteConstraints`` on the missing attribute
+    (``NoSuchElementException: key not found: v#...``); the constraints
+    buy nothing here — every per-round filter is explicit. The loop's
+    checkpoint jobs AND its eager setup run inside the scope, so any
+    failure (analysis error, OOM) still restores the caller's
+    settings."""
+    return scoped_conf(
+        spark,
+        {
+            **loop_shuffle_confs(spark),
+            "spark.sql.constraintPropagation.enabled": "false",
+        },
+    )
 
 
 def connected_components(
@@ -81,8 +106,6 @@ def connected_components(
     Raises if the label propagation hasn't converged after ``max_iter``
     rounds (diameter > max_iter) rather than returning a wrong answer.
     """
-    from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
-
     spark = edges.sparkSession
     # one ckpt call per round, so make_ckpt's call-counted interval is
     # the round interval: persist (lineage kept, anchored at the last
@@ -107,38 +130,37 @@ def connected_components(
         n_nodes, prev_sum = _label_stats(labels)
         # Narrow the round shuffles to the measured graph size (the edge
         # pipeline above already materialized at cluster parallelism).
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_loop_width(spark, n_nodes))
-        )
         try:
-            for i in range(max_iter):
-                # min over self + neighbors in ONE join + one aggregation:
-                # neighbor labels (v's label keyed back to u) unioned with
-                # the node's own label, then groupBy min.
-                prop = sym.join(labels, sym["v"] == labels["id"]).select(
-                    sym["u"].alias("id"), "label"
-                )
-                new_labels = (
-                    prop.unionAll(labels)
-                    .groupBy("id")
-                    .agg(F.min("label").alias("label"))
-                )
-                # lazy checkpoint: the label-sum action below both
-                # MATERIALIZES it and truncates lineage — one job
-                # per round, not a checkpoint job plus a sum job.
-                new_labels = ckpt(new_labels, eager=False)
-                _n, new_sum = _label_stats(new_labels)  # materializes persist/checkpoint
+            with _loop_width_scope(spark, n_nodes):
+                for i in range(max_iter):
+                    # min over self + neighbors in ONE join + one aggregation:
+                    # neighbor labels (v's label keyed back to u) unioned with
+                    # the node's own label, then groupBy min.
+                    prop = sym.join(labels, sym["v"] == labels["id"]).select(
+                        sym["u"].alias("id"), "label"
+                    )
+                    new_labels = (
+                        prop.unionAll(labels)
+                        .groupBy("id")
+                        .agg(F.min("label").alias("label"))
+                    )
+                    # lazy checkpoint: the label-sum action below both
+                    # MATERIALIZES it and truncates lineage — one job
+                    # per round, not a checkpoint job plus a sum job.
+                    new_labels = ckpt(new_labels, eager=False)
+                    # materializes persist/checkpoint
+                    _n, new_sum = _label_stats(new_labels)
+                    labels.unpersist()
+                    labels = new_labels
+                    if new_sum == prev_sum:
+                        return labels.select("id", F.col("label").alias("component"))
+                    prev_sum = new_sum
                 labels.unpersist()
-                labels = new_labels
-                if new_sum == prev_sum:
-                    return labels.select("id", F.col("label").alias("component"))
-                prev_sum = new_sum
-            labels.unpersist()
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds "
-                "(graph diameter too large — raise max_iter or switch to "
-                "large-star/small-star)"
-            )
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iter} rounds "
+                    "(graph diameter too large — raise max_iter or switch to "
+                    "large-star/small-star)"
+                )
         finally:
             sym.unpersist()
 
@@ -166,21 +188,10 @@ def connected_components_star(
     Catalyst). Convergence = edge-set checksum (count + sum of a 64-bit
     edge hash) unchanged after a full large+small round.
 
-    Constraint propagation is disabled (and restored) around the loop:
-    a ``localCheckpoint``'d plan's LogicalRDD retains constraints that
-    reference attributes pruned from its output, and the next round's
-    self-union trips ``rewriteConstraints`` on the missing attribute
-    (``NoSuchElementException: key not found: v#...``); the constraints
-    buy nothing here — every per-round filter is explicit."""
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
-
+    Constraint propagation is disabled (and restored) around the loop;
+    see :func:`_checkpointed_loop_scope`."""
     spark = edges.sparkSession
-    confs = dict(loop_shuffle_confs(spark))
-    confs["spark.sql.constraintPropagation.enabled"] = "false"
-    # The checkpoint jobs in the loop AND the eager setup both run
-    # inside this scope, so any failure (analysis error, OOM) still
-    # restores the caller's constraint-propagation + shuffle settings.
-    with scoped_conf(spark, confs):
+    with _checkpointed_loop_scope(spark):
         return _star_loop(spark, edges, src, dst, max_iter, checkpoint_dir)
 
 
@@ -192,8 +203,6 @@ def _star_loop(
     max_iter: int,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    from pyblazing_spark.session import make_ckpt
-
     ckpt = make_ckpt(spark, checkpoint_dir)
     # localCheckpoint (not persist): the caller's edge plan (e.g. a full
     # MinHash-LSH pipeline) must not remain the lineage LEAF — the star
@@ -252,56 +261,53 @@ def _star_loop(
 
     prev = _checksum(E)
     # Narrow the round shuffles to the measured edge count (the caller's
-    # edge pipeline already materialized at cluster parallelism above);
-    # the scoped_conf wrapper restores the session value on exit.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_loop_width(spark, prev[0]))
-    )
-    for _ in range(max_iter):
-        # Each FULL round is localCheckpoint'ed, unlike the propagation
-        # variant's persist-with-periodic-checkpoint: a star round
-        # references its input ~3x in each of two branches
-        # (closed-neighborhood union feeding both the min aggregate and
-        # the join), so the LOGICAL plan tree grows ~9x per round even
-        # under persist (persist caches results but not the tree) — by
-        # round 4 Catalyst canonicalization alone OOMs the driver.
-        # The large-star half is PERSISTED (not fused away): the
-        # small-star plan references it twice (closed-neighborhood union
-        # feeding both the min aggregate and the join), physical
-        # common-subtree reuse is not guaranteed, and fusing both stars
-        # into one lazy plan was measured to recompute the large-star
-        # 2x. persist (lazy) rather than an eager checkpoint keeps the
-        # whole round at ONE job: the checksum action computes the half
-        # once into cache, reuses it for the second reference, and
-        # materializes the round-end LAZY localCheckpoint, which
-        # truncates lineage so the per-round plan tree stays a bounded
-        # ~9x of an RDD leaf. Materialized state is two long columns per
-        # round; the half cache is dropped explicitly, checkpoint blocks
-        # by the ContextCleaner as round handles go unreferenced.
-        half = _star(E, large=True).persist()
-        new_e = ckpt(_star(half, large=False), eager=False)
-        cur = _checksum(new_e)
-        half.unpersist()
-        E = new_e
-        if cur == prev:
-            # stars: every edge is (center, member) with center = min.
-            # Materialized HERE (localCheckpoint) so the final plan —
-            # which still unions/joins the stale-constraint
-            # LogicalRDDs — is optimized while constraint propagation
-            # is still off, not lazily after the caller's conf is
-            # restored.
-            members = E.select(
-                F.col("v").alias("id"), F.col("u").alias("component")
-            )
-            out = ckpt(
-                nodes.join(members, "id", "left").select(
-                    "id",
-                    F.coalesce("component", F.col("id")).alias("component"),
+    # edge pipeline already materialized at cluster parallelism above).
+    with _loop_width_scope(spark, prev[0]):
+        for _ in range(max_iter):
+            # Each FULL round is localCheckpoint'ed, unlike the propagation
+            # variant's persist-with-periodic-checkpoint: a star round
+            # references its input ~3x in each of two branches
+            # (closed-neighborhood union feeding both the min aggregate and
+            # the join), so the LOGICAL plan tree grows ~9x per round even
+            # under persist (persist caches results but not the tree) — by
+            # round 4 Catalyst canonicalization alone OOMs the driver.
+            # The large-star half is PERSISTED (not fused away): the
+            # small-star plan references it twice (closed-neighborhood union
+            # feeding both the min aggregate and the join), physical
+            # common-subtree reuse is not guaranteed, and fusing both stars
+            # into one lazy plan was measured to recompute the large-star
+            # 2x. persist (lazy) rather than an eager checkpoint keeps the
+            # whole round at ONE job: the checksum action computes the half
+            # once into cache, reuses it for the second reference, and
+            # materializes the round-end LAZY localCheckpoint, which
+            # truncates lineage so the per-round plan tree stays a bounded
+            # ~9x of an RDD leaf. Materialized state is two long columns per
+            # round; the half cache is dropped explicitly, checkpoint blocks
+            # by the ContextCleaner as round handles go unreferenced.
+            half = _star(E, large=True).persist()
+            new_e = ckpt(_star(half, large=False), eager=False)
+            cur = _checksum(new_e)
+            half.unpersist()
+            E = new_e
+            if cur == prev:
+                # stars: every edge is (center, member) with center = min.
+                # Materialized HERE (localCheckpoint) so the final plan —
+                # which still unions/joins the stale-constraint
+                # LogicalRDDs — is optimized while constraint propagation
+                # is still off, not lazily after the caller's conf is
+                # restored.
+                members = E.select(
+                    F.col("v").alias("id"), F.col("u").alias("component")
                 )
-            )
-            nodes.unpersist()
-            return out
-        prev = cur
+                out = ckpt(
+                    nodes.join(members, "id", "left").select(
+                        "id",
+                        F.coalesce("component", F.col("id")).alias("component"),
+                    )
+                )
+                nodes.unpersist()
+                return out
+            prev = cur
     nodes.unpersist()
     raise RuntimeError(
         f"connected_components_star did not converge in {max_iter} rounds"
@@ -356,20 +362,16 @@ def kcore_peel_summary(
     ``loop_shuffle_confs``; every round's edge survivor set is eagerly
     ``localCheckpoint``ed so round *i* never re-executes rounds
     1..*i-1* and the plan tree stays O(1) deep. Constraint propagation
-    is disabled for the loop's duration for the same LogicalRDD
-    self-union reason documented on :func:`connected_components_star`
-    (the degree pass unions ``src`` and ``dst`` projections of the same
-    checkpointed plan). ``checkpoint_dir`` selects reliable (FS-backed)
+    is disabled for the loop's duration for the LogicalRDD self-union
+    reason documented on :func:`_checkpointed_loop_scope` (the degree
+    pass unions ``src`` and ``dst`` projections of the same checkpointed
+    plan). ``checkpoint_dir`` selects reliable (FS-backed)
     checkpointing — see :func:`pyblazing_spark.session.make_ckpt`."""
-    from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
-
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
     spark = edges.sparkSession
     ckpt = make_ckpt(spark, checkpoint_dir)
-    confs = dict(loop_shuffle_confs(spark))
-    confs["spark.sql.constraintPropagation.enabled"] = "false"
-    with scoped_conf(spark, confs):
+    with _checkpointed_loop_scope(spark):
         cur = ckpt(edges.select(src, dst))
         summaries = []
         for r in range(1, rounds + 1):
@@ -606,15 +608,11 @@ def bfs_distance_histogram(
     round's distance table is eagerly ``localCheckpoint``ed (O(1) plan
     depth) and constraint propagation is scoped off for the
     checkpointed self-union."""
-    from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
-
     if rounds < 1 or seed_mod < 1:
         raise ValueError("rounds and seed_mod must be >= 1")
     spark = edges.sparkSession
     ckpt = make_ckpt(spark, checkpoint_dir)
-    confs = dict(loop_shuffle_confs(spark))
-    confs["spark.sql.constraintPropagation.enabled"] = "false"
-    with scoped_conf(spark, confs):
+    with _checkpointed_loop_scope(spark):
         und = edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v")
         ).unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -712,13 +710,9 @@ def scc_pivot_fwbw(
     constraint propagation scoped off, shuffles sized to cluster
     parallelism. Output shape matches :func:`scc_summary`.
     """
-    from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
-
     spark = edges.sparkSession
     ckpt = make_ckpt(spark, checkpoint_dir)
-    confs = dict(loop_shuffle_confs(spark))
-    confs["spark.sql.constraintPropagation.enabled"] = "false"
-    with scoped_conf(spark, confs):
+    with _checkpointed_loop_scope(spark):
         # e_all keeps self-loops: they count as internal edges in the
         # rollup (matching scc_summary and the recursive-CTE oracles)
         # and a self-loop-only node is still a (singleton) component;

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pyblazing_spark.functions import vectors as VEC
+from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
 
 
 def cosine_topk(
@@ -266,13 +267,17 @@ def centroid_means(
     ``k x dim x n_partitions`` partial sums — never data-sized traffic.
     The k x dim result (a few KB) is collected to the driver to become the
     next iteration's broadcast centroids, the standard distributed-Lloyd
-    round trip."""
-    rows = (
-        df.select(F.col(cluster_col).alias("__c"), F.posexplode(vec_col).alias("__i", "__x"))
-        .groupBy("__c", "__i")
-        .agg(F.avg(F.col("__x").cast("double")).alias("__m"))
-        .collect()
-    )
+    round trip. That one aggregation runs under :func:`loop_shuffle_confs`:
+    a k x dim shuffle wants cluster-parallelism width, not the session's
+    fact-table width."""
+    spark = df.sparkSession
+    with scoped_conf(spark, loop_shuffle_confs(spark)):
+        rows = (
+            df.select(F.col(cluster_col).alias("__c"), F.posexplode(vec_col).alias("__i", "__x"))
+            .groupBy("__c", "__i")
+            .agg(F.avg(F.col("__x").cast("double")).alias("__m"))
+            .collect()
+        )
     if not rows:
         return np.empty((0,), dtype=np.int32), np.empty((0, 0))
     dim = max(r["__i"] for r in rows) + 1
@@ -308,15 +313,15 @@ def kmeans_lloyd(
     :func:`centroid_assign_with_dist`): one map-only assignment pass +
     one k x dim partial-sum shuffle; assignments are ``persist``ed and
     the predecessor unpersisted so round *i* never re-executes rounds
-    1..i-1, with an eager ``localCheckpoint`` every ``checkpoint_every``
+    1..i-1, with a ``localCheckpoint`` every ``checkpoint_every``
     rounds truncating the lineage (the connected-components lesson —
     ``operators/graph.py``). The driver holds only k x dim floats.
     Clusters that empty out between rounds die (no phantom zero-vector
     centroids — see :func:`centroid_means`)."""
-    from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
-
     spark = df.sparkSession
-    ckpt = make_ckpt(spark, checkpoint_dir)
+    # one ckpt call per round: persist between, truncate every
+    # checkpoint_every-th round.
+    ckpt = make_ckpt(spark, checkpoint_dir, ckpt_interval=checkpoint_every)
     # Round shuffles (k x dim partial sums) are sized to cluster
     # parallelism for the loop, not the session's fact-table shuffle
     # width — same rationale as operators/graph.py; restored on exit.
@@ -337,12 +342,9 @@ def kmeans_lloyd(
             new = assigned.select("id", "vec", a.alias("a")).select(
                 "id", "vec", F.col("a.cluster").alias("cluster"), F.col("a.d2").alias("d2")
             )
-            if (i + 1) % checkpoint_every == 0:
-                # lazy: the inertia action below materializes AND
-                # truncates — one job per round.
-                new = ckpt(new, eager=False)
-            else:
-                new = new.persist()
+            # lazy: the inertia action below materializes AND (on a
+            # truncating round) checkpoints — one job per round.
+            new = ckpt(new, eager=False)
             history.append(new.agg(F.sum("d2")).collect()[0][0] or 0.0)
             assigned.unpersist()
             assigned = new

@@ -1971,14 +1971,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign_with_dist,
         centroid_means,
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
 
     emb = T(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2000)
     init = emb.select(
         "vec_id", "embedding", (F.col("vec_id") % _SEM_K).cast("int").alias("c0")
     )
-    with scoped_conf(spark, loop_shuffle_confs(spark)):
-        ids, C = centroid_means(init, "embedding", "c0")
+    ids, C = centroid_means(init, "embedding", "c0")
     a = centroid_assign_with_dist(F.col("embedding"), C, cluster_ids=ids)
     assigned = init.select(
         "vec_id", "embedding", a.getField("cluster").alias("cluster")

@@ -649,7 +649,7 @@ def join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE py4j round-trip for the whole bitmap (late r15, guide §5):
     # F.lit(list) expands to array(lit(w0), lit(w1), ...) — one py4j
     # call per WORD, ~0.5 s of pure driver time at sf0.1's 920 words
-    # and ~18 s at the 32768-word cap. long_array_lit ships the same
+    # and 33.4 s at the 32768-word cap. long_array_lit ships the same
     # values as one parsed SQL expression; Catalyst constant-folds it
     # to a single array Literal before execution.
     arr = long_array_lit(bitmap)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.functions import vectors as VEC
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import materialize_bounded
+from pyblazing_spark.session import loop_shuffle_confs, materialize_bounded, scoped_conf
 from pyblazing_spark.sources.tables import load_table as T
 
 _K = 8  # registered-entry cluster count (production: 2^8-2^12)
@@ -98,10 +98,8 @@ def vector_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = emb.select(
         "vec_id", "embedding", (F.col("vec_id") % _K).cast("int").alias("c0")
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
 
-    with scoped_conf(spark, loop_shuffle_confs(spark)):
-        ids, C = centroid_means(init, "embedding", "c0")
+    ids, C = centroid_means(init, "embedding", "c0")
     a = centroid_assign_with_dist(F.col("embedding"), C, cluster_ids=ids)
     assigned = init.select("vec_id", a.alias("a")).select(
         "vec_id", F.col("a.cluster").alias("cluster"), F.col("a.d2").alias("d2")
@@ -388,7 +386,6 @@ def vector_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign_with_dist,
         centroid_means,
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
 
     emb = T(spark, sf_dir, "embeddings")
     init = emb.select(
@@ -401,14 +398,13 @@ def vector_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     assigns = []
-    with scoped_conf(spark, loop_shuffle_confs(spark)):
-        for s in range(_PQ_M):
-            ids, C = centroid_means(
-                init.select(F.col(f"sub{s}").alias("v"), "c0"), "v", "c0"
-            )
-            assigns.append(
-                centroid_assign_with_dist(F.col(f"sub{s}"), C, cluster_ids=ids)
-            )
+    for s in range(_PQ_M):
+        ids, C = centroid_means(
+            init.select(F.col(f"sub{s}").alias("v"), "c0"), "v", "c0"
+        )
+        assigns.append(
+            centroid_assign_with_dist(F.col(f"sub{s}"), C, cluster_ids=ids)
+        )
     coded = init.select(
         "vec_id", *[a.alias(f"a{s}") for s, a in enumerate(assigns)]
     ).select(
@@ -528,7 +524,6 @@ def _pq_adc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign_with_dist,
         cosine_topk,
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
 
     import numpy as np
 
@@ -741,7 +736,6 @@ def dedup_semantic_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign_with_dist,
         centroid_means,
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
 
     emb = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.unionAll(
@@ -756,8 +750,7 @@ def dedup_semantic_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = corpus.select(
         "vec_id", "embedding", (F.col("vec_id") % _K).cast("int").alias("c0")
     )
-    with scoped_conf(spark, loop_shuffle_confs(spark)):
-        ids, C = centroid_means(init, "embedding", "c0")
+    ids, C = centroid_means(init, "embedding", "c0")
     a = centroid_assign_with_dist(F.col("embedding"), C, cluster_ids=ids)
     assigned = (
         init.select("vec_id", "embedding", a.alias("a"))
@@ -908,15 +901,13 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign_with_dist,
         centroid_means,
     )
-    from pyblazing_spark.session import loop_shuffle_confs, scoped_conf
     from pyblazing_spark.sources.txn_table import TxnTable
 
     out_schema = "query_id long, neighbor_id long, cos double, rank int"
     emb = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = emb.where((F.col("vec_id") >= 5) & (F.col("vec_id") % 10 != 7))
     init = base.withColumn("c0", (F.col("vec_id") % _K).cast("int"))
-    with scoped_conf(spark, loop_shuffle_confs(spark)):
-        ids, C = centroid_means(init, "embedding", "c0")
+    ids, C = centroid_means(init, "embedding", "c0")
     if C.size == 0:  # empty corpus: typed zero-row contract
         return spark.createDataFrame([], out_schema)
 

@@ -18,6 +18,7 @@ Scale stance: these defaults are written for a real cluster (100 TB /
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -218,31 +219,54 @@ def get_spark(
     return ensure_runtime_confs(spark)
 
 
+#: Guards every scoped conf change: the registry below AND the conf calls,
+#: so scopes opened or closed on different threads never interleave.
+_CONF_LOCK = threading.Lock()
+#: (session UUID, key) -> (value before the first open scope, None when
+#: unset; the open scopes' (token, value) entries in opening order).
+_OPEN_CONFS: dict[tuple[str, str], tuple[str | None, list]] = {}
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
-    """Set runtime confs for a bounded scope and restore the caller's
-    values afterwards (unset keys are re-unset). Used by iterative
-    operators and fixture-bounded catalog entries that must size their
-    shuffles themselves instead of inheriting the session's
-    fact-table-scale shuffle width."""
-    saved: dict[str, str | None] = {}
-    for key, value in confs.items():
-        try:
-            saved[key] = spark.conf.get(key, None)
-            spark.conf.set(key, value)
-        except Exception:  # pragma: no cover — unknown conf
-            saved.pop(key, None)
+    """Set runtime confs for a bounded scope — the one way the engine
+    changes a session conf temporarily. Per (session, key): while scopes
+    are open the key holds the value of the most recently opened scope
+    still open; when the last one closes the key gets back its value from
+    before the first (an unset key is unset again). Nested scopes on one
+    thread therefore restore LIFO, and scopes overlapping on different
+    threads (the async query pool) neither flip a sibling's value nor
+    leak their own. Used by iterative operators, fixture-bounded catalog
+    entries and eager reference-dialect SQL."""
+    token = object()
+    opened: list[tuple[tuple[str, str], str]] = []
+    with _CONF_LOCK:
+        sid = spark._jsparkSession.sessionUUID()
+        for key, value in confs.items():
+            try:
+                prev = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+            except Exception:  # pragma: no cover — unknown conf
+                continue
+            _OPEN_CONFS.setdefault((sid, key), (prev, []))[1].append((token, value))
+            opened.append(((sid, key), value))
     try:
         yield spark
     finally:
-        for key, old in saved.items():
-            try:
-                if old is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, old)
-            except Exception:  # pragma: no cover
-                pass
+        with _CONF_LOCK:
+            for slot, value in opened:
+                prev, scopes = _OPEN_CONFS[slot]
+                scopes.remove((token, value))
+                if not scopes:
+                    del _OPEN_CONFS[slot]
+                current = scopes[-1][1] if scopes else prev
+                try:
+                    if current is None:
+                        spark.conf.unset(slot[1])
+                    else:
+                        spark.conf.set(slot[1], current)
+                except Exception:  # pragma: no cover
+                    pass
 
 
 def make_ckpt(

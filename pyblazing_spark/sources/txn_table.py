@@ -72,6 +72,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyblazing_spark.session import scoped_conf
+
 _LOG_DIR = "_txn"
 _DATA_DIR = "data"
 _V_FMT = "v%08d.json"
@@ -85,6 +87,11 @@ _MAX_STATS_COLS = 32
 #: the real maximum, which would over-prune (silent wrong answers).
 #: Dropping the stat is always safe — the file merely survives pruning.
 _MAX_STAT_STR = 60
+#: Rows-per-file goal for ``rows_hint``-adaptive bucketed writes. Sized
+#: so fixture-scale merges collapse to a handful of files; guide §6 aims
+#: output files at 128 MB–1 GB, so a deployment with very wide or very
+#: narrow rows would resize it.
+_TARGET_FILE_ROWS = 1_000_000
 
 
 class CommitConflict(Exception):
@@ -543,7 +550,7 @@ class TxnTable:
         caller knows one WITHOUT an extra job (merge: manifest row
         counts of the hit files + the source count that rides the
         existing min/max job; compact: manifest row counts). A small
-        commit then writes ``ceil(hint / target_file_rows)`` files
+        commit then writes ``ceil(hint / _TARGET_FILE_ROWS)`` files
         instead of one per bucket — each file holds the deterministic
         bucket group ``{b : b mod n_files == g}``, recorded as a
         ``buckets`` list so every prune stays exact (r15, guide §6
@@ -563,35 +570,22 @@ class TxnTable:
         # Spark's default INT96 timestamps carry NO parquet statistics —
         # write the modern TIMESTAMP_MICROS encoding (readers handle
         # both) whenever the frame has a timestamp column, or timestamp
-        # keys silently lose all data skipping. Scoped set/restore: the
-        # flip only changes physical encoding, so a concurrent writer
-        # observing it mid-flight is benign.
-        _ts_conf = "spark.sql.parquet.outputTimestampType"
+        # keys silently lose all data skipping. The flip only changes
+        # physical encoding, so a concurrent writer observing it
+        # mid-flight is benign.
         has_ts = any(
             isinstance(f.dataType, (TimestampType, TimestampNTZType))
             for f in df.schema.fields
         )
-        prev_ts = self.spark.conf.get(_ts_conf) if has_ts else None
-        if has_ts:
-            self.spark.conf.set(_ts_conf, "TIMESTAMP_MICROS")
-        try:
-            adds = self._write_files(
+        confs = (
+            {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+            if has_ts
+            else {}
+        )
+        with scoped_conf(self.spark, confs):
+            return self._write_files(
                 df, key, n_buckets, sub, out_dir, rows_hint, candidate_buckets
             )
-        finally:
-            if has_ts:
-                self.spark.conf.set(_ts_conf, prev_ts)
-        return adds
-
-    @staticmethod
-    def target_file_rows() -> int:
-        """Rows-per-file goal for rows_hint-adaptive bucketed writes.
-        Parameterised (env ``PBS_TXN_TARGET_FILE_ROWS``) because the
-        right value is deployment-dependent (guide §6: aim for output
-        files in the 128 MB–1 GB range — rows-per-file follows row
-        width); the default keeps local layouts stable and is sized so
-        fixture-scale merges collapse to a handful of files."""
-        return int(os.environ.get("PBS_TXN_TARGET_FILE_ROWS", "1000000"))
 
     def _write_files(
         self,
@@ -614,7 +608,7 @@ class TxnTable:
                     1,
                     min(
                         n_buckets,
-                        -(-int(rows_hint) // self.target_file_rows()),
+                        -(-int(rows_hint) // _TARGET_FILE_ROWS),
                     ),
                 )
             bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))

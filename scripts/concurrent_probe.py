@@ -16,11 +16,12 @@ Concurrency model being proven:
   pool). For latency-isolating concurrent workloads set
   ``spark.scheduler.mode=FAIR`` + a pool file — documented, not
   required for correctness.
-- The eager path's ANSI-off reference semantics are applied via a
-  REFCOUNTED session conf (context.py::_reference_eval): the first
-  in-flight query disables, the last restores — a plain set/restore
-  would re-enable ANSI mid-flight under a sibling query. This probe is
-  the regression test for that.
+- The eager path's ANSI-off reference semantics are applied via
+  ``session.scoped_conf``, whose scopes are shared across threads: the
+  first in-flight query disables, the last restores — a plain
+  set/restore would re-enable ANSI mid-flight under a sibling query.
+  This probe checks that the session's ANSI value after the run equals
+  its value before it.
 
 Usage: python scripts/concurrent_probe.py [sf_dir]   (--smoke = sf0.001)
 """
@@ -40,8 +41,8 @@ from tests.oracle_utils import assert_frames_match, oracle_connection
 # string, dates, group-sets, semi-join shape, scalar math. Every
 # computed column aliased identically for the DuckDB compare; 0-divide
 # in q8 exercises the ANSI-off reference semantics CONCURRENTLY (the
-# refcount race is only visible when an ANSI-sensitive query overlaps
-# others).
+# conf-scope race is only visible when an ANSI-sensitive query
+# overlaps others).
 QUERIES: dict[str, str] = {
     "agg": """
         SELECT l_returnflag, l_linestatus,
@@ -98,6 +99,7 @@ def main() -> int:
     spark = get_spark(app_name="concurrent-probe")
     spark.sparkContext.setLogLevel("ERROR")
     bc = BlazingContext(spark)
+    ansi_before = spark.conf.get("spark.sql.ansi.enabled", None)
     for t in TABLES:
         bc.create_table(t, os.path.join(sf_dir, f"{t}.parquet"))
 
@@ -136,12 +138,14 @@ def main() -> int:
         n_ok += 1
 
     # post-flight invariants: ANSI restored, log rows complete
-    assert bc._ansi_depth == 0, "refcount leak"
+    ansi_after = spark.conf.get("spark.sql.ansi.enabled", None)
+    assert ansi_after == ansi_before, f"ANSI leak: {ansi_before} -> {ansi_after}"
     status = [e.status for e in bc._log[-24:]]
     assert status.count("ok") >= 24, status
     print(
         f"concurrent 8-query wall {wall:.1f}s vs warm serial {serial:.1f}s "
-        f"(speedup {serial / max(wall, 1e-9):.2f}x); ansi refcount clean; "
+        f"(speedup {serial / max(wall, 1e-9):.2f}x); ansi refcount clean "
+        f"(restored to {ansi_before}); "
         f"scheduler=FIFO (set spark.scheduler.mode=FAIR + pool file for "
         f"latency isolation)"
     )

@@ -219,6 +219,7 @@ def _aqe_skew_probe(spark, zipf_dir: str) -> str:
     shuffle), which is why the operator exists as the always-on path."""
     from pyspark.sql import functions as F
 
+    from pyblazing_spark.session import scoped_conf
     from pyblazing_spark.sources.tables import load_table
 
     na = load_table(spark, zipf_dir, "nation").select("n_nationkey", "n_name")
@@ -238,15 +239,12 @@ def _aqe_skew_probe(spark, zipf_dir: str) -> str:
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
     }
-    old = {c: spark.conf.get(c, None) for c in confs}
     spread_dir = f"{zipf_dir}/events_spread.parquet"
-    try:
-        load_table(spark, zipf_dir, "events").repartition(32).write.mode(
-            "overwrite"
-        ).parquet(spread_dir)
-        for c, v in confs.items():
-            spark.conf.set(c, v)
-        lines = []
+    load_table(spark, zipf_dir, "events").repartition(32).write.mode(
+        "overwrite"
+    ).parquet(spread_dir)
+    lines = []
+    with scoped_conf(spark, confs):
         for tag, ev in (
             ("clustered", load_table(spark, zipf_dir, "events")),
             ("spread", spark.read.parquet(spread_dir)),
@@ -272,13 +270,7 @@ def _aqe_skew_probe(spark, zipf_dir: str) -> str:
                 f"{final.count('skewed')} skewed read(s) "
                 f"({dt:.1f}s)"
             )
-        return "\n".join(lines)
-    finally:
-        for c, v in old.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
+    return "\n".join(lines)
 
 
 def main() -> int:

@@ -330,3 +330,92 @@ def test_make_ckpt_interval_schedule(spark, tmp_path):
     n_cached = len(spark.sparkContext._jsc.getPersistentRDDs())
     rckpt(spark.range(3))  # drops the pending cache
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) < n_cached
+
+
+_SCOPE_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.parquet.outputTimestampType",  # unset in the session
+)
+
+
+def _conf_values(spark):
+    return tuple(spark.conf.get(k, None) for k in _SCOPE_KEYS)
+
+
+def test_scoped_conf_overlapping_threads(spark):
+    """Two scopes overlapping on different threads (the async query
+    pool): closing the OLDER one first leaves the younger one's values
+    in force, and closing the last one restores the pre-scope values,
+    re-unsetting keys that were unset."""
+    import threading
+
+    from pyblazing_spark.session import scoped_conf
+
+    def on_thread(fn):
+        t = threading.Thread(target=fn)
+        t.start()
+        t.join()
+
+    before = _conf_values(spark)
+    assert before[2] is None
+    a_values = ("false", "4", "TIMESTAMP_MICROS")
+    b_values = ("false", "8", "TIMESTAMP_MILLIS")
+    scope_a = scoped_conf(spark, dict(zip(_SCOPE_KEYS, a_values)))
+    scope_b = scoped_conf(spark, dict(zip(_SCOPE_KEYS, b_values)))
+    on_thread(scope_a.__enter__)
+    assert _conf_values(spark) == a_values
+    with scope_b:
+        assert _conf_values(spark) == b_values
+        on_thread(lambda: scope_a.__exit__(None, None, None))
+        assert _conf_values(spark) == b_values
+    assert _conf_values(spark) == before
+
+
+def test_scoped_conf_nested_same_thread(spark):
+    """Nested scopes on one thread restore LIFO: the inner exit brings
+    back the outer scope's value, the outer exit the session's."""
+    from pyblazing_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key, None)
+    with scoped_conf(spark, {key: "6"}):
+        with scoped_conf(spark, {key: "2"}):
+            assert spark.conf.get(key) == "2"
+        assert spark.conf.get(key) == "6"
+    assert spark.conf.get(key, None) == before
+
+
+def test_scoped_conf_thread_stress(spark):
+    """More threads than cores opening and closing overlapping scopes on
+    one key with a short switch interval: the key ends at its pre-scope
+    value and no open scope is left registered (a lost registry update
+    breaks one or the other)."""
+    import sys
+    import threading
+
+    from pyblazing_spark import session
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key, None)
+    seen = []
+
+    def churn(n: int) -> None:
+        for _ in range(10):
+            with session.scoped_conf(spark, {key: str(100 + n)}):
+                seen.append(spark.conf.get(key))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=churn, args=(n,)) for n in range(1, 9)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 80 and set(seen) <= {str(100 + n) for n in range(1, 9)}
+    assert spark.conf.get(key, None) == before
+    assert not session._OPEN_CONFS
