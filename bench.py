@@ -89,9 +89,13 @@ def _respike(timings: dict, control: dict, reps: int) -> dict:
     regression keeps its gap under isolation."""
     cq = control.get("control_queries") or {}
     wt = control.get("_worktree")
+    # Absolute floor max(0.15 s, 0.3x control): a fixed 0.3 s floor let
+    # sub-second queries regress by 1.6x unflagged (r15 win_running_sum,
+    # 0.554 s vs 0.338 s), while 0.15 s still ignores jitter on the
+    # fastest ones.
     flagged = [
         n for n, v in timings.items()
-        if cq.get(n) and v > 1.5 * cq[n] and v - cq[n] > 0.3
+        if cq.get(n) and v > 1.5 * cq[n] and v - cq[n] > max(0.15, 0.3 * cq[n])
     ]
     out: dict[str, dict] = {}
     # Adjudicate EVERY flagged query (r15, VERDICT r14 #1): the old cap

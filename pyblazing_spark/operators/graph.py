@@ -677,38 +677,50 @@ def scc_pivot_fwbw(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Strongly connected components for UNBOUNDED node domains: trim +
-    multi-pivot forward-backward decomposition in its coloring form
-    (Orzan; the "MultiStep" method of Slota et al. — the standard
-    distributed SCC algorithm family). Never materializes a transitive
-    closure and never collects the edge set to the driver (as
-    :func:`scc_summary` does): O(edges x rounds). Per outer round:
+    two-sided min-label propagation (Yan et al., "Pregel Algorithms for
+    Graph Connectivity Problems with Performance Guarantees", PVLDB
+    2014). Never materializes a transitive closure and never collects
+    the edge set to the driver (as :func:`scc_summary` does):
+    O(edges x rounds). Per wave:
 
     1. **trim** — a node with no in-edge or no out-edge cannot sit on a
        cycle: emitted as a singleton SCC (up to ``trim_rounds`` sweeps;
        trimming eats the acyclic periphery that dominates real graphs);
-    2. **color** — forward max-label propagation to fixpoint:
-       ``color(v) = max id that reaches v``. Every node of an SCC is
-       reached by exactly the same ids, so an SCC never spans two
-       colors — each color class is the FORWARD reachability set of its
-       root (the node whose id equals its color), i.e. the coloring
-       computes the F-sets of ALL pivots simultaneously where classic
-       FW-BW does one pivot per partition per round (measured on the
-       5-region tournament fixture: 5 sequential pivot rounds -> 1
-       coloring round);
-    3. **backward BFS** from every root within its color class —
-       ``SCC(root) = {v in class : v reaches root}`` (= F ∩ B). Members
-       are emitted with ``scc_id = min node id`` (the convention shared
-       with :func:`scc_summary` and the recursive-CTE oracles); the
-       remainder re-colors next round.
+    2. **propagate** — in the SAME synchronous rounds every active node
+       computes ``f(v)`` = the minimum id that reaches ``v`` and
+       ``b(v)`` = the minimum id reachable from ``v`` (frontier form:
+       only labels improved last round are sent);
+    3. **resolve** — nodes with ``f == b`` are emitted with
+       ``scc_id = f``; the rest start the next wave inside their
+       ``(f, b)`` cell.
 
-    Progress is guaranteed (every color loses at least its root's SCC
-    per round); ``max_outer`` bounds pathological chains-of-many-SCCs,
-    and the error message says to raise it rather than running forever.
-    Same loop hygiene as the other iterative operators: every round's
-    state is checkpoint-truncated (``checkpoint_dir=`` selects reliable
-    FS checkpoints, :func:`pyblazing_spark.session.make_ckpt`),
-    constraint propagation scoped off, shuffles sized to cluster
-    parallelism. Output shape matches :func:`scc_summary`.
+    Correctness: if ``f(v) = b(v) = c``, then ``c`` reaches ``v`` and
+    ``v`` reaches ``c``, so ``c`` is in SCC(v). Every member of SCC(v)
+    reaches ``v``, so ``c`` is the minimum of SCC(v) — the ``scc_id``
+    convention shared with :func:`scc_summary` and the recursive-CTE
+    oracles, with no ``groupBy(min)`` and no join. All members of an
+    SCC reach, and are reached by, the same ids, so they share
+    ``(f, b)`` and an SCC is emitted whole.
+
+    Cells: every SCC lies inside one ``(f, b)`` cell, so dropping
+    cross-cell edges loses no SCC. ``f`` and ``b`` are ids from ``v``'s
+    own cell, so the pair alone names the next cell.
+
+    Progress: the minimum-id node of each cell has ``f = b = itself``,
+    so every cell loses at least one SCC per wave. ``max_rounds`` bounds
+    one wave's propagation and ``max_outer`` the waves (deeply nested
+    chains of SCCs); both raise, naming the limit to raise, rather than
+    running forever or returning a wrong answer.
+
+    Jobs: one per round — the round's state is checkpointed lazily and
+    a single aggregate over it returns both the "improved" and the
+    "resolved" counts, so the remaining-node count follows from counts
+    already in hand. Same loop hygiene as the other iterative
+    operators: every round's state is checkpoint-truncated
+    (``checkpoint_dir=`` selects reliable FS checkpoints,
+    :func:`pyblazing_spark.session.make_ckpt`), constraint propagation
+    scoped off, shuffles sized to cluster parallelism. Output shape
+    matches :func:`scc_summary`.
     """
     spark = edges.sparkSession
     ckpt = make_ckpt(spark, checkpoint_dir)
@@ -717,175 +729,122 @@ def scc_pivot_fwbw(
         # rollup (matching scc_summary and the recursive-CTE oracles)
         # and a self-loop-only node is still a (singleton) component;
         # the TRAVERSAL uses e0 without them — a self-loop never
-        # changes SCC membership and only pads every frontier.
+        # changes SCC membership and only pads every frontier. Hashed
+        # on u, so the distinct and every later join on u (each round's
+        # forward step, the rollup) reuse one exchange.
         e_all = ckpt(
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-        )
-        # plain filter over e_all's checkpointed blocks — a second
-        # edge-scale checkpoint materialization bought nothing (r15)
-        e0 = e_all.where(F.col("u") != F.col("v"))
-        active = ckpt(
-            e_all.select(F.col("u").alias("node"))
-            .unionAll(e_all.select(F.col("v").alias("node")))
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .repartition("u")
             .distinct()
         )
+        # Loop expressions are SQL strings: every PySpark Column call
+        # records its Python call site over several py4j round trips
+        # (~5 ms each, measured on a 4-core host), which made plan
+        # construction about half of a fixture-sized round.
+        #
+        # plain filter over e_all's checkpointed blocks — a second
+        # edge-scale checkpoint materialization bought nothing (r15)
+        e0 = e_all.where("u != v")
+        active = ckpt(
+            e_all.selectExpr("u AS node")
+            .unionAll(e_all.selectExpr("v AS node"))
+            .distinct(),
+            eager=False,
+        )
+        remaining = active.count()
         # emitted (node, scc_id) pieces: each derives from an already-
         # checkpointed frame, so deferring the union to the end keeps
         # the final plan a flat union of shallow subtrees
         done_parts: list[DataFrame] = []
-        remaining = active.count()
-        # Round 0's active set is BY CONSTRUCTION every endpoint of
-        # e_all ⊇ every endpoint of e0, so the restrict-to-active
-        # double semi-join is the identity there — skipping it saves
-        # two full-edge-scale shuffles + a job on the heaviest round
-        # (r15, guide §2.4).
+        null = f"CAST(NULL AS {active.schema['node'].dataType.simpleString()})"
+        # Wave 0's active set holds every endpoint of e0 by
+        # construction, so it traverses e0 unrestricted; each later wave's edges are
+        # restricted to their cells when the previous wave resolves.
         ea = e0
         for _outer in range(max_outer):
-            if remaining == 0:
-                break
-            if _outer > 0:
-                ea = ckpt(
-                    e0.join(active.select(F.col("node").alias("u")), "u")
-                    .join(active.select(F.col("node").alias("v")), "v")
-                    .select("u", "v")
-                )
             for _ in range(trim_rounds):
                 # one edge pass with map-side partial aggregation:
-                # keep = nodes with BOTH an out- and an in-edge (the
-                # old u-distinct ⋈ v-distinct form shuffled the edge
-                # list twice and joined the node sets — 3 exchanges
-                # per sweep where this is 1; r15, guide §2.3/§2.4)
+                # keep = nodes with BOTH an out- and an in-edge
                 keep = (
-                    ea.select(
-                        F.col("u").alias("node"),
-                        F.lit(1).alias("__o"),
-                        F.lit(0).alias("__i"),
-                    )
-                    .unionAll(
-                        ea.select(
-                            F.col("v").alias("node"),
-                            F.lit(0).alias("__o"),
-                            F.lit(1).alias("__i"),
-                        )
-                    )
+                    ea.selectExpr("u AS node", "1 AS o", "0 AS i")
+                    .unionAll(ea.selectExpr("v AS node", "0 AS o", "1 AS i"))
                     .groupBy("node")
-                    .agg(F.max("__o").alias("__o"), F.max("__i").alias("__i"))
-                    .where((F.col("__o") == 1) & (F.col("__i") == 1))
-                    .select("node")
+                    .agg(F.expr("max(o) AS o"), F.expr("max(i) AS i"))
+                    .where("o = 1 AND i = 1")
                 )
                 trimmed = ckpt(
                     active.join(keep, "node", "left_anti"), eager=False
                 )
-                if trimmed.count() == 0:
+                n_trimmed = trimmed.count()
+                if n_trimmed == 0:
                     break
-                done_parts.append(
-                    trimmed.select("node", F.col("node").alias("scc_id"))
-                )
+                remaining -= n_trimmed
+                done_parts.append(trimmed.selectExpr("node", "node AS scc_id"))
                 active = ckpt(active.join(trimmed, "node", "left_anti"))
                 ea = ckpt(
-                    ea.join(
-                        trimmed.select(F.col("node").alias("u")), "u", "left_anti"
-                    ).join(
-                        trimmed.select(F.col("node").alias("v")), "v", "left_anti"
-                    )
+                    ea.join(trimmed.selectExpr("node AS u"), "u", "left_anti")
+                    .join(trimmed.selectExpr("node AS v"), "v", "left_anti")
                 )
-            remaining = active.count()
             if remaining == 0:
                 break
-            # ---- forward max-label coloring to fixpoint (frontier form:
-            # only strictly-improved labels propagate next round)
-            col = ckpt(active.select("node", F.col("node").alias("color")))
-            changed = col
+            # ---- two-sided min-label propagation to fixpoint; forward
+            # labels travel u -> v, backward labels v -> u, and one
+            # union feeds a single aggregation exchange for both
+            state = active.selectExpr(
+                "node", "node AS f", "node AS b", "true AS fi", "true AS bi"
+            )
             for _ in range(max_rounds):
-                # ONE materializing job per round (r15, guide §1.2/§2.4):
-                # the round's join+aggregate+update is checkpointed
-                # eagerly with an __imp flag, and the convergence check
-                # is a filter-count over the checkpointed blocks (no
-                # shuffle, no recompute). The old frontier form ran the
-                # edge join twice per round — once to count the
-                # improvements, once to apply them to col.
                 cand = (
-                    ea.join(
-                        changed.select(F.col("node").alias("u"), "color"), "u"
+                    ea.join(state.where("fi").selectExpr("node AS u", "f AS nf"), "u")
+                    .selectExpr("v AS node", "nf", f"{null} AS nb")
+                    .unionAll(
+                        ea.join(
+                            state.where("bi").selectExpr("node AS v", "b AS nb"), "v"
+                        ).selectExpr("u AS node", f"{null} AS nf", "nb")
                     )
-                    .groupBy(F.col("v").alias("node"))
-                    .agg(F.max("color").alias("__nc"))
+                    .groupBy("node")
+                    .agg(F.expr("min(nf) AS nf"), F.expr("min(nb) AS nb"))
                 )
-                flagged = ckpt(
-                    col.join(cand, "node", "left").select(
+                # least() skips NULLs, so a node with no incoming label
+                # keeps its own (never a constant filler: ids may be
+                # negative); a NULL comparison is "not improved"
+                state = ckpt(
+                    state.join(cand, "node", "left").selectExpr(
                         "node",
-                        # coalesce to the node's OWN color, never a
-                        # constant: ids may be negative, and a 0 filler
-                        # would overwrite (and corrupt) their labels
-                        F.greatest(
-                            "color", F.coalesce("__nc", F.col("color"))
-                        ).alias("color"),
-                        # NULL __nc (no incoming changed label) compares
-                        # false -> not improved, matching the old
-                        # inner-join frontier semantics
-                        (F.col("__nc") > F.col("color")).alias("__imp"),
-                    )
-                )
-                col = flagged.select("node", "color")
-                changed = flagged.where(F.col("__imp")).select("node", "color")
-                if changed.count() == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"scc_pivot_fwbw: coloring exceeded {max_rounds} rounds "
-                    "(graph depth too large — raise max_rounds)"
-                )
-            # ---- backward BFS from every color root within its class
-            ec = ckpt(
-                ea.join(
-                    col.select(F.col("node").alias("u"), F.col("color").alias("__cu")),
-                    "u",
-                )
-                .join(
-                    col.select(F.col("node").alias("v"), F.col("color").alias("__cv")),
-                    "v",
-                )
-                .where(F.col("__cu") == F.col("__cv"))
-                .select(F.col("__cu").alias("color"), "u", "v")
-            )
-            reach = ckpt(
-                col.where(F.col("node") == F.col("color")).select("color", "node")
-            )
-            frontier = reach
-            for _ in range(max_rounds):
-                nxt = ckpt(
-                    ec.join(
-                        frontier.select("color", F.col("node").alias("v")),
-                        ["color", "v"],
-                    )
-                    .select("color", F.col("u").alias("node"))
-                    .distinct()
-                    .join(reach, ["color", "node"], "left_anti"),
+                        "least(f, nf) AS f",
+                        "least(b, nb) AS b",
+                        "coalesce(nf < f, false) AS fi",
+                        "coalesce(nb < b, false) AS bi",
+                    ),
                     eager=False,
                 )
-                if nxt.count() == 0:
+                improved, resolved = state.selectExpr(
+                    "count_if(fi OR bi)", "count_if(f = b)"
+                ).first()
+                if improved == 0:
                     break
-                # plain union of CHECKPOINTED leaves: flat plan, no
-                # re-execution
-                reach = reach.unionAll(nxt)
-                frontier = nxt
             else:
                 raise RuntimeError(
-                    f"scc_pivot_fwbw: backward BFS exceeded {max_rounds} rounds "
-                    "(class diameter too large — raise max_rounds)"
+                    f"scc_pivot_fwbw: label propagation exceeded {max_rounds} "
+                    "rounds (graph depth too large — raise max_rounds)"
                 )
-            sccs = reach.groupBy("color").agg(F.min("node").alias("scc_id"))
-            members = ckpt(reach.join(sccs, "color").select("node", "scc_id"))
-            done_parts.append(members)
-            active = ckpt(
-                active.join(members.select("node"), "node", "left_anti"),
-                eager=False,
+            done_parts.append(state.where("f = b").selectExpr("node", "f AS scc_id"))
+            remaining -= resolved
+            if remaining == 0:
+                break
+            # ---- next wave: the unresolved nodes, and the edges inside
+            # their (f, b) cells
+            nxt = state.where("f != b")
+            active = nxt.select("node")
+            ea = ckpt(
+                ea.join(nxt.selectExpr("node AS u", "f", "b"), "u")
+                .join(nxt.selectExpr("node AS v", "f", "b"), ["v", "f", "b"])
+                .select("u", "v")
             )
-            remaining = active.count()
         if remaining > 0:
             raise RuntimeError(
                 f"scc_pivot_fwbw did not decompose the graph in {max_outer} "
-                "trim+color+collect rounds (deeply nested SCC chain — raise "
+                "trim+propagate waves (deeply nested SCC chain — raise "
                 "max_outer)"
             )
         if not done_parts:  # empty edge set: stable empty schema

@@ -1317,15 +1317,15 @@ LIMIT 20
 )
 def graph_scc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCC for UNBOUNDED node domains — the algorithm `graph_scc`'s
-    docstring names as the scale path, now implemented:
+    docstring names as the scale path:
     :func:`pyblazing_spark.operators.graph.scc_pivot_fwbw` (trim +
-    multi-pivot forward-backward decomposition, Fleischer et al.).
-    Never materializes a transitive closure: where reach-doubling is
-    O(N²) pairs, FW-BW is O(edges × rounds) — frontier BFS from one
-    deterministic pivot per partition, F∩B emitted as that pivot's
-    component, remainder split into the three FW-BW cells and
-    recursed. The probe regime where reach-doubling dies (10× the node
-    domain) runs near-linearly here (SCALE.md round-11 table).
+    two-sided min-label propagation, Yan et al., PVLDB 2014). Never
+    materializes a transitive closure: where reach-doubling is O(N²)
+    pairs, this is O(edges × rounds). In the same synchronous rounds
+    every node learns the minimum id that reaches it (``f``) and the
+    minimum id it reaches (``b``); ``f == b`` names its SCC's minimum
+    id, and the rest recurse inside their ``(f, b)`` cells. On this
+    fixture the five regional tournaments all resolve in one wave.
 
     Graph: supplier "dominance" tournament over the REAL key domain
     (no modular bucketing — every distinct l_suppkey is a node).
@@ -1334,21 +1334,24 @@ def graph_scc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (antisymmetric by construction, so cycles are ≥3 nodes and SCC
     structure is non-trivial), restricted to same-region pairs, which
     yields one dense tournament per region — 5 natural partitions
-    exercising the multi-pivot path — plus trimmed periphery at the
+    exercising the multi-component path — plus trimmed periphery at the
     smaller SFs. The oracle recomputes everything with a recursive-CTE
     closure + mutual-reachability min-ids (feasible for the oracle at
     fixture scale; the SPARK side never builds it)."""
     from pyblazing_spark.operators.graph import scc_pivot_fwbw
 
-    # DISTINCT (order, linenumber, suppkey) triples make
-    # (l_linenumber, l_suppkey) a unique — hence deterministic — sort
-    # key within each order (fixture linenumbers are non-consecutive
-    # and duplicated, so a raw lead() over l_linenumber alone would be
-    # tie-order-dependent and a +1 join would skip gaps).
-    lo = (
-        T(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_suppkey")
-        .distinct()
+    # (l_linenumber, l_suppkey) orders each order's line items; rows
+    # that tie on it are identical in every projected column, so the
+    # order is deterministic (fixture linenumbers are non-consecutive
+    # and duplicated, so lead() over l_linenumber alone would be
+    # tie-order-dependent and a +1 join would skip gaps). A duplicated
+    # (order, linenumber, suppkey) triple sorts next to its copy and
+    # leads to itself, and u == v is dropped below, so the transitions
+    # equal those of the DISTINCT triples with no distinct: the
+    # window's exchange is the edge build's only one before the
+    # aggregation.
+    lo = T(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_suppkey"
     )
     nxt = lo.select(
         F.col("l_suppkey").alias("u"),
@@ -1358,15 +1361,6 @@ def graph_scc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("v"),
     ).where(F.col("v").isNotNull() & (F.col("u") != F.col("v")))
-    tr = nxt.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
-    rev = tr.select(
-        F.col("u").alias("v"), F.col("v").alias("u"), F.col("w").alias("rw")
-    )
-    dom = (
-        tr.join(rev, ["u", "v"], "left")
-        .where(F.col("w") > F.coalesce(F.col("rw"), F.lit(0)))
-        .select("u", "v")
-    )
     sup = (
         T(spark, sf_dir, "supplier")
         .join(
@@ -1375,8 +1369,11 @@ def graph_scc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey", F.col("n_regionkey").alias("grp"))
     )
-    edges = (
-        dom.join(
+    # the region test is symmetric in (u, v), so it runs before the
+    # aggregation; one groupBy over the unordered pair then counts both
+    # directions, and the strictly larger one names the edge
+    dom = (
+        nxt.join(
             F.broadcast(sup.select(F.col("s_suppkey").alias("u"),
                                    F.col("grp").alias("gu"))), "u"
         )
@@ -1385,7 +1382,17 @@ def graph_scc_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    F.col("grp").alias("gv"))), "v"
         )
         .where(F.col("gu") == F.col("gv"))
-        .select("u", "v")
+        .groupBy(F.least("u", "v").alias("s_lo"), F.greatest("u", "v").alias("s_hi"))
+        .agg(
+            F.count_if(F.col("u") < F.col("v")).alias("up"),
+            F.count_if(F.col("u") > F.col("v")).alias("down"),
+        )
+        .where(F.col("up") != F.col("down"))
+    )
+    fwd = F.col("up") > F.col("down")
+    edges = dom.select(
+        F.when(fwd, F.col("s_lo")).otherwise(F.col("s_hi")).alias("u"),
+        F.when(fwd, F.col("s_hi")).otherwise(F.col("s_lo")).alias("v"),
     )
     return scc_pivot_fwbw(edges, src="u", dst="v")
 

@@ -1,24 +1,27 @@
-"""SCC algorithm scaling probe (VERDICT r10 #2): pivot/coloring FW-BW
-(``scc_pivot_fwbw``) vs the bounded-domain ``scc_summary`` as the NODE
-DOMAIN grows.
+"""SCC algorithm scaling probe (VERDICT r10 #2): two-sided min-label
+FW-BW (``scc_pivot_fwbw``) vs the bounded-domain ``scc_summary`` as the
+NODE DOMAIN grows.
 
 ``scc_summary`` is one distinct-quotient job plus a driver-side Tarjan
 over the collected edges (the "doubling" labels below name the
 reach-doubling closure it replaced in r15, whose self-joins produced
-~m³ rows per m-node SCC). The coloring FW-BW touches O(edges × rounds)
-rows and never collects the edge set. This probe runs both on a
+~m³ rows per m-node SCC). ``scc_pivot_fwbw`` trims, then propagates in
+the same rounds the minimum id reaching each node and the minimum id
+it reaches; it touches O(edges × rounds) rows, runs one Spark job per
+round, and never collects the edge set. This probe runs both on a
 deterministic synthetic graph family whose SCC sizes grow with the
 domain:
 
 - graph(N): 8 disjoint groups of m = N/8 nodes; within a group every
   node has forward edges at strides {1, 4, 16, 64, 256} (mod m) — a
   ring with skip chords, strongly connected with diameter
-  O(log_4 m × 4), so BFS/coloring round counts stay small while the
+  O(log_4 m × 4), so propagation round counts stay small while the
   SCC size (= m) scales linearly with N.
 - correctness: both algorithms must produce identical top-20 rollups
   at every size they both run.
 - scaling: fwbw runs at 1x/2x/4x/10x the base domain, scc_summary at
-  1x/2x.
+  1x/2x. Each fwbw line gives wall time and Spark jobs (graph
+  generation included).
 
 Usage: python scripts/scc_scale_probe.py [base_N]
 """
@@ -69,11 +72,19 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     from pyblazing_spark.operators.graph import scc_pivot_fwbw, scc_summary
 
+    sc = spark.sparkContext
+    jobs: dict[int, int] = {}
+
     def run(fn, n, **kw):
+        group = f"{fn.__name__}-{n}"
+        sc.setJobGroup(group, group)
         e = gen_graph(spark, n)
         t0 = time.time()
         out = sorted(tuple(r) for r in fn(e, **kw).collect())
-        return out, time.time() - t0
+        dt = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, dt
 
     print(f"graph family: {GROUPS} ring+chord groups, SCC size = N/{GROUPS}")
     # fwbw scaling first (doubling last: its 2x point can OOM the heap,
@@ -91,6 +102,7 @@ def main() -> int:
         f"fwbw: N={base} {tb:.1f}s | 2x {tb2:.1f}s ({tb2/tb:.1f}x) | "
         f"4x {tb4:.1f}s ({tb4/tb:.1f}x) | 10x {tb10:.1f}s ({tb10/tb:.1f}x)"
     )
+    print("fwbw jobs: " + " | ".join(f"N={n} {j}" for n, j in jobs.items()))
     a1, ta = run(scc_summary, base)
     print(f"doubling: N={base} {ta:.1f}s, equal-to-fwbw={a1 == b1}")
     if a1 != b1:

@@ -17,20 +17,35 @@ def test_respike_flags_and_verdicts(monkeypatch):
 
     monkeypatch.setattr(bench, "_isolated_query_run", fake_iso)
     monkeypatch.setattr(bench, "_worktree_supports_only", lambda wt: True)
-    timings = {"spiky": 3.2, "steady": 1.01, "small": 0.31}
+    timings = {"spiky": 3.2, "steady": 1.01, "small": 0.24}
     control = {
         "control_queries": {"spiky": 1.0, "steady": 1.0, "small": 0.1},
         "_worktree": "/fake/wt",
     }
     out = bench._respike(timings, control, reps=5)
     # steady: under 1.5x -> unflagged. small: over 1.5x but under the
-    # 0.3s absolute floor -> unflagged. spiky: flagged, a/control/b.
+    # 0.15s absolute floor -> unflagged. spiky: flagged, a/control/b.
     assert set(out) == {"spiky"}
     assert [c[1] for c in calls] == ["spiky"] * 3
     assert [c[0] for c in calls] == [bench._REPO, "/fake/wt", bench._REPO]
     assert out["spiky"]["verdict"] == "noise"
     assert out["spiky"]["respike_value"] == 1.0
     assert out["spiky"]["control_isolated"] == 1.0
+
+
+def test_respike_floor_scales_with_control(monkeypatch):
+    """The absolute floor is max(0.15 s, 0.3x control): r15's
+    win_running_sum (0.554 s vs control 0.338 s, +0.216 s) slipped
+    under the old fixed 0.3 s floor and now flags; 0.36 s vs 0.25 s
+    stays under 1.5x and does not."""
+    monkeypatch.setattr(bench, "_isolated_query_run", lambda *a, **k: 0.34)
+    monkeypatch.setattr(bench, "_worktree_supports_only", lambda wt: False)
+    out = bench._respike(
+        {"win_running_sum": 0.554, "near": 0.36},
+        {"control_queries": {"win_running_sum": 0.338, "near": 0.25}},
+        5,
+    )
+    assert set(out) == {"win_running_sum"}
 
 
 def test_respike_check_verdict_and_degraded_control(monkeypatch):

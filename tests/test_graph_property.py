@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -263,6 +264,7 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
         connected_components,
         connected_components_star,
         kcore_peel_summary,
+        scc_pivot_fwbw,
     )
 
     # a chain + a clique + an isolated pair: multi-round convergence
@@ -300,6 +302,21 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
     assert rows(pagerank(pe, iterations=3, checkpoint_dir=d)) == rows(
         pagerank(pe, iterations=3)
     )
+
+    # SCC: two cycles (8→1, 12→10 close them), a trimmed pair, and two
+    # chained 2-cycles that split into cells for a second wave — every
+    # lazily checkpointed round must still land on the filesystem
+    se = spark.createDataFrame(
+        edges + [(8, 1), (12, 10), (30, 31), (31, 30), (31, 32), (32, 33), (33, 32)],
+        "u long, v long",
+    )
+
+    def rdd_dirs():
+        return {dp for dp, _, _ in os.walk(d) if os.path.basename(dp).startswith("rdd-")}
+
+    seen = rdd_dirs()
+    assert rows(scc_pivot_fwbw(se, checkpoint_dir=d)) == rows(scc_pivot_fwbw(se))
+    assert rdd_dirs() - seen, "reliable SCC wrote no checkpoint files"
 
 
 def _ref_scc(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -451,3 +468,67 @@ def test_scc_summary_matches_closure_reference(spark, edges):
     )
     assert got == exp
 
+
+def _chained_triangles(forward: bool) -> list[tuple[int, int]]:
+    """Ten 3-cycles, each joined to the next by one edge pointing
+    forward (lower ids reach higher) or backward."""
+    edges = []
+    for k in range(10):
+        a, b, c = 3 * k, 3 * k + 1, 3 * k + 2
+        edges += [(a, b), (b, c), (c, a)]
+        if k < 9:
+            edges.append((c, a + 3) if forward else (a + 3, c))
+    return edges
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # 31-node ring over negative and positive ids: one SCC, 30 rounds
+        [(i, i + 1) for i in range(-15, 15)] + [(15, -15)],
+        # DAG chain longer than trim_rounds: trimming stops early and
+        # the rest resolves through propagation and later waves
+        [(i, i + 1) for i in range(12)],
+        [(a, b) for k in range(50) for a, b in ((2 * k, 2 * k + 1), (2 * k + 1, 2 * k))],
+        _chained_triangles(forward=True),
+        _chained_triangles(forward=False),
+    ],
+    ids=["ring31", "dag_chain", "two_cycles", "triangles_fwd", "triangles_bwd"],
+)
+def test_scc_pivot_fwbw_fixed_graphs_match_tarjan(spark, edges):
+    """Topologies the random strategy rarely draws: a long ring (deep
+    propagation), a chain past the trim limit, many disjoint SCCs in one
+    wave, and SCC chains whose cells split over a second wave."""
+    from pyblazing_spark.operators.graph import _tarjan_min_label, scc_pivot_fwbw
+
+    e = spark.createDataFrame(edges, "u long, v long")
+    got = sorted(tuple(r) for r in scc_pivot_fwbw(e, top=1000).collect())
+
+    comp = _tarjan_min_label(edges)
+    per: dict[int, list[int]] = {}
+    for node, c in comp.items():
+        per.setdefault(c, []).append(node)
+    exp = sorted(
+        (c, len(ns), sum(ns), sum(1 for a, b in set(edges) if comp[a] == comp[b] == c))
+        for c, ns in per.items()
+    )
+    assert got == exp
+
+
+def test_graph_scc_pivot_job_count(spark, sf_dir):
+    """The entry's Spark job count at sf0.001, including the collect, is
+    pinned: two-sided propagation runs one job per round, and repeat
+    table loads pass a cached schema instead of launching an inference
+    job (the coloring + backward-BFS form took 20 here)."""
+    from pyblazing_spark.plans.registry import REGISTRY
+
+    fn = REGISTRY["graph_scc_pivot"].fn
+    fn(spark, sf_dir).collect()  # warm the schema cache
+    sc = spark.sparkContext
+    sc.setJobGroup("scc-pivot-jobs", "graph_scc_pivot job count")
+    try:
+        fn(spark, sf_dir).collect()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("scc-pivot-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs == 14

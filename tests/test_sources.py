@@ -600,3 +600,57 @@ def test_sqlite_bridge_partitioning_and_errors(spark, sqlite_db, tmp_path):
     ).count() == 0
     with pytest.raises(Exception, match="not found"):
         probe_schema(empty, "nope")
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-cache", "schema cache test")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup("schema-cache"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_cached_schema_read_matches_plain_read(spark, sf_dir):
+    """Every table read with its cached schema equals the plain
+    (inferring) read in schema and row count, and launches no job."""
+    from pyblazing_spark.sources.tables import TABLES, _read_parquet
+
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        plain = spark.read.parquet(path)
+        _read_parquet(spark, path)
+        cached = []
+        assert _jobs_run(spark, lambda: cached.append(_read_parquet(spark, path))) == 0
+        assert cached[0].schema == plain.schema, name
+        assert cached[0].count() == plain.count(), name
+
+
+def test_schema_cache_reinfers_rewritten_file(spark, tmp_path):
+    """The cache key holds the file's size and mtime: a rewrite with a
+    new size, or the same bytes under a new mtime, infers again; a
+    directory always takes the plain read."""
+    import os
+
+    import pandas as pd
+
+    from pyblazing_spark.sources import tables
+
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"a": [1, 2]}).to_parquet(path)
+    assert tables._read_parquet(spark, path).columns == ["a"]
+    assert _jobs_run(spark, lambda: tables._read_parquet(spark, path)) == 0
+
+    pd.DataFrame({"a": [3], "b": ["x"]}).to_parquet(path)
+    df = tables._read_parquet(spark, path)
+    assert df.columns == ["a", "b"] and df.count() == 1
+
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert _jobs_run(spark, lambda: tables._read_parquet(spark, path)) > 0
+
+    n_keys = len(tables._SCHEMAS)
+    tables._read_parquet(spark, str(tmp_path))
+    assert len(tables._SCHEMAS) == n_keys
