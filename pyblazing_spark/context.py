@@ -30,7 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyblazing_spark.dialect import prepare as _prepare_sql
-from pyblazing_spark.session import ensure_runtime_confs, get_spark, scoped_conf
+from pyblazing_spark.session import (
+    ensure_runtime_confs,
+    get_spark,
+    local_frame,
+    scoped_conf,
+)
 from pyblazing_spark.sources.files import read_source
 
 #: Reference config_options (context.py:1239-1275) -> Spark conf translation.
@@ -381,9 +386,9 @@ class BlazingContext:
         rows = [
             (e.query_id, e.query, float(e.start_time), float(e.duration_ms), e.status)
             for e in self._log
-        ] or None
+        ]
         schema = "query_id long, query string, start_time double, duration_ms double, status string"
-        df = self.spark.createDataFrame(rows or [], schema=schema)
+        df = local_frame(self.spark, rows, schema)
         df.createOrReplaceTempView("bsql_logs")
         return self.spark.sql(query)
 

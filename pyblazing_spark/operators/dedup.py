@@ -26,10 +26,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from pyblazing_spark.functions import long_array_lit
+from pyblazing_spark.functions import array_lit
 from pyblazing_spark.functions import text as TXT
 from pyblazing_spark.functions import vectors as VEC
+from pyblazing_spark.session import local_frame
 
 
 # --------------------------------------------------------------- exact
@@ -494,8 +496,8 @@ def _hot_shingle_filter(raw: DataFrame, shingle_col: str):
     masks = {int(r["__w"]): int(r["__mask"]) for r in word_rows}
     # one py4j round-trip for the whole bitmap — F.lit(list) costs one
     # py4j call PER WORD (33.4 s at the 32768 cap; see
-    # functions.long_array_lit, late r15)
-    bitmap = long_array_lit(masks.get(i, 0) for i in range(n_words))
+    # functions.array_lit, late r15)
+    bitmap = array_lit((masks.get(i, 0) for i in range(n_words)), LongType())
     probes = (
         f"pmod(xxhash64({shingle_col}), {m})",
         f"pmod(xxhash64(xxhash64({shingle_col}), 1), {m})",
@@ -576,8 +578,8 @@ def ngram_jaccard_pairs(
         cond = _hot_shingle_filter(raw, "__s")
         if cond is None:  # every shingle is a singleton: no pair exists
             idt = dict(df.dtypes)[id_col]
-            return df.sparkSession.createDataFrame(
-                [], f"id_a {idt}, id_b {idt}, jaccard double"
+            return local_frame(
+                df.sparkSession, [], f"id_a {idt}, id_b {idt}, jaccard double"
             )
         # distinct-then-filter == filter-then-distinct for a row-wise
         # predicate on __s: reuse the materialized frame.
@@ -829,7 +831,8 @@ def containment_pairs(
         cond = _hot_shingle_filter(raw, "__s")
         if cond is None:  # every shingle is a singleton: no pair exists
             idt = dict(df.dtypes)[id_col]
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [],
                 f"contained_id {idt}, container_id {idt}, containment double",
             )

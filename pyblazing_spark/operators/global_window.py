@@ -29,6 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from pyblazing_spark.functions import array_lit, sql_literal
 
 
 _EXACT_DOUBLE = 2**53  # largest contiguous int exactly representable
@@ -132,19 +135,25 @@ def _sketch_boundaries(
 
 def _pid_expr(df: DataFrame, key0: str, boundaries: list) -> Column:
     """Literal-comparison bucket id: how many boundaries the row's
-    leading key exceeds. Each literal is cast to the column's exact
-    type (a pandas Timestamp otherwise lands as TIMESTAMP vs a
-    TIMESTAMP_NTZ column). NULL leading keys compare false against
-    every boundary -> bucket 0, matching NULLS-FIRST ascending order;
-    NaN doubles compare GREATER than every boundary in Spark SQL ->
-    last bucket, matching NaN-sorts-last window order."""
+    leading key exceeds, as ONE parsed SQL expression (building it from
+    Column calls cost ~7 py4j calls per boundary, ~220 at 32
+    partitions). Each boundary renders as a literal of the column's
+    exact type (:func:`pyblazing_spark.functions.sql_literal` — e.g. a
+    timestamp lands as TIMESTAMP_NTZ on a TIMESTAMP_NTZ column). NULL
+    leading keys compare false against every boundary -> bucket 0,
+    matching NULLS-FIRST ascending order; NaN doubles compare GREATER
+    than every boundary in Spark SQL -> last bucket, matching
+    NaN-sorts-last window order."""
     if not boundaries:
         return F.lit(0)
     key_type = df.schema[key0].dataType
-    pid: Column = F.lit(0)
-    for b in boundaries:
-        pid = pid + F.when(F.col(key0) > F.lit(b).cast(key_type), 1).otherwise(0)
-    return pid
+    col = "`" + key0.replace("`", "``") + "`"
+    return F.expr(
+        " + ".join(
+            f"CASE WHEN {col} > {sql_literal(b, key_type)} THEN 1 ELSE 0 END"
+            for b in boundaries
+        )
+    )
 
 
 def _range_bucket(
@@ -205,20 +214,17 @@ def _pid_offsets(
     return sorted((tuple(r) for r in rows), key=lambda t: t[0])
 
 
-def _offset_lit(per_pid: dict[int, object], max_pid: int, zero):
-    """Array literal ``offsets[pid + 1]`` lookup column (pids are dense
-    0..max_pid by construction; buckets with no rows never probe it)."""
-    return F.lit([per_pid.get(p, zero) for p in range(max_pid + 1)])
+def _offset_lit(per_pid: dict[int, object], max_pid: int, dtype) -> Column:
+    """Array literal ``offsets[pid + 1]`` lookup column of element type
+    ``dtype`` (pids are dense 0..max_pid by construction; buckets with
+    no rows never probe it) — one parsed expression, not one py4j call
+    per element."""
+    return array_lit([per_pid.get(p, 0) for p in range(max_pid + 1)], dtype)
 
 
-def _is_integral(one_col_df: DataFrame) -> bool:
-    """True iff the single column's Spark dtype is an integral family
-    member — schema-only, no job."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    return isinstance(
-        one_col_df.schema[0].dataType, (ByteType, ShortType, IntegerType, LongType)
-    )
+def _sum_type(df: DataFrame, value: Column):
+    """Spark dtype of ``sum(value)`` over ``df`` — schema-only, no job."""
+    return df.select(F.sum(value)).schema[0].dataType
 
 
 def global_row_number(
@@ -242,7 +248,9 @@ def global_row_number(
         .withColumn(
             out_col,
             (
-                F.element_at(_offset_lit(offs, max_pid, 0), F.col("__pid") + 1)
+                F.element_at(
+                    _offset_lit(offs, max_pid, LongType()), F.col("__pid") + 1
+                )
                 + F.col("__local_rn")
             ).cast("long"),
         )
@@ -270,7 +278,8 @@ def global_running_sum(
     # r14); float sums keep ascending-pid float accumulation, the exact
     # order the single-task window sums in, so doubles stay
     # bit-identical.
-    int_exact = _is_integral(tagged.select(F.sum(value).alias("t")))
+    sum_t = _sum_type(tagged, value)
+    int_exact = isinstance(sum_t, LongType)
     offs: dict[int, object] = {}
     acc = 0 if int_exact else 0.0
     for pid, t in totals:
@@ -281,9 +290,7 @@ def global_running_sum(
     local_w = W.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
-    off_lit = _offset_lit(offs, max_pid, 0 if int_exact else 0.0)
-    if int_exact:
-        off_lit = off_lit.cast("array<long>")
+    off_lit = _offset_lit(offs, max_pid, sum_t)
     return (
         tagged.withColumn("__local_sum", F.sum(value).over(local_w))
         .withColumn(
@@ -318,7 +325,8 @@ def global_prefix_stats(
         tagged, F.count(F.lit(1)).alias("__n"), F.sum(value).alias("__t")
     )
     # schema-driven accumulator dtype — see global_running_sum
-    int_exact = _is_integral(tagged.select(F.sum(value).alias("t")))
+    sum_t = _sum_type(tagged, value)
+    int_exact = isinstance(sum_t, LongType)
     noffs: dict[int, int] = {}
     toffs: dict[int, object] = {}
     nacc, tacc = 0, (0 if int_exact else 0.0)
@@ -333,14 +341,14 @@ def global_prefix_stats(
     local = tagged.withColumn("__lrn", F.row_number().over(rank_w)).withColumn(
         "__lsum", F.sum(value).over(sum_w)
     )
-    t_lit = _offset_lit(toffs, max_pid, 0 if int_exact else 0.0)
-    if int_exact:
-        t_lit = t_lit.cast("array<long>")
+    t_lit = _offset_lit(toffs, max_pid, sum_t)
     return (
         local.withColumn(
             rn_col,
             (
-                F.element_at(_offset_lit(noffs, max_pid, 0), F.col("__pid") + 1)
+                F.element_at(
+                    _offset_lit(noffs, max_pid, LongType()), F.col("__pid") + 1
+                )
                 + F.col("__lrn")
             ).cast("long"),
         )
@@ -449,7 +457,9 @@ def global_ntile_multi(
         local_w = W.partitionBy(pid_cols[i]).orderBy(*order_cols)
         out = out.withColumn(
             rank_col,
-            F.element_at(_offset_lit(offs, max_pid, 0), F.col(pid_cols[i]) + 1)
+            F.element_at(
+                _offset_lit(offs, max_pid, LongType()), F.col(pid_cols[i]) + 1
+            )
             + F.row_number().over(local_w),
         )
         bucket = F.when(

@@ -32,7 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
+from pyblazing_spark.session import (
+    local_frame,
+    loop_shuffle_confs,
+    make_ckpt,
+    scoped_conf,
+)
 
 
 def _label_stats(labels: DataFrame):
@@ -518,8 +523,10 @@ def scc_summary(
     ``distinct`` that quotients the (possibly fact-scale) input down to
     the bounded edge set; the SCC itself runs driver-side as exact
     iterative Tarjan over the collected distinct edges, and the
-    (node → min-node-of-SCC) assignment is shipped back as a small
-    DataFrame feeding the same distributed rollup
+    (node → min-node-of-SCC) assignment and the collected edges are
+    shipped back as small Arrow-built local frames
+    (:func:`pyblazing_spark.session.local_frame` — no Python-worker
+    task on any rollup scan) feeding the same distributed rollup
     (``scc_id(u) = min({u} ∪ {v : u→*v and v→*u})`` — nodes with no
     cycle through them become singletons).
 
@@ -567,21 +574,23 @@ def scc_summary(
 
     u_t, v_t = e.schema[0].dataType, e.schema[1].dataType
     node_t = u_t  # scc ids inherit the source-endpoint type
-    assign = spark.createDataFrame(
-        list(comp.items()),
+    assign = local_frame(
+        spark,
+        comp.items(),
         StructType(
             [StructField("node", node_t), StructField("scc_id", node_t)]
         ),
     )
     # rollup over the ALREADY-COLLECTED pairs re-created as a local
     # DataFrame: the rollup must not re-execute the fact-scale distinct
-    local_e = spark.createDataFrame(
+    local_e = local_frame(
+        spark,
         pairs,
         StructType([StructField("u", u_t), StructField("v", v_t)]),
     )
-    # local relations carry no size stats, so without the hint the
-    # rollup's two assign-probes plan as 200-partition SortMergeJoins;
-    # assign is node-domain-sized (bounded by this operator's contract)
+    # assign is node-domain-sized (bounded by this operator's contract):
+    # the hint keeps the rollup's two assign-probes broadcast even where
+    # its size exceeds a session's autoBroadcastJoinThreshold
     return _scc_rollup(local_e, F.broadcast(assign), top)
 
 
@@ -739,8 +748,10 @@ def scc_pivot_fwbw(
         )
         # Loop expressions are SQL strings: every PySpark Column call
         # records its Python call site over several py4j round trips
-        # (~5 ms each, measured on a 4-core host), which made plan
-        # construction about half of a fixture-sized round.
+        # (about 0.5 ms per call on a 4-core host: the four calls of
+        # (F.col("u") < F.col("v")).alias("x") took 4.6 ms with the
+        # capture and 2.7 ms without), which made plan construction
+        # about half of a fixture-sized round.
         #
         # plain filter over e_all's checkpointed blocks — a second
         # edge-scale checkpoint materialization bought nothing (r15)
@@ -848,8 +859,10 @@ def scc_pivot_fwbw(
                 "max_outer)"
             )
         if not done_parts:  # empty edge set: stable empty schema
-            return spark.createDataFrame(
-                [], "scc_id long, n_nodes long, node_sum long, n_internal_edges long"
+            return local_frame(
+                spark,
+                [],
+                "scc_id long, n_nodes long, node_sum long, n_internal_edges long",
             )
         done = done_parts[0]
         for part_df in done_parts[1:]:

@@ -35,7 +35,12 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pyblazing_spark.functions import vectors as VEC
-from pyblazing_spark.session import loop_shuffle_confs, make_ckpt, scoped_conf
+from pyblazing_spark.session import (
+    local_frame,
+    loop_shuffle_confs,
+    make_ckpt,
+    scoped_conf,
+)
 
 
 def cosine_topk(
@@ -57,8 +62,7 @@ def cosine_topk(
     out_schema = f"query_id {q_type}, neighbor_id {id_type}, cos double"
     q_rows = queries.select(query_id_col, vec_col).collect()
     if not q_rows:
-        spark = corpus.sparkSession
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(corpus.sparkSession, [], out_schema + ", rank int")
     qids = [r[0] for r in q_rows]  # id types pass through untouched
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
@@ -371,11 +375,12 @@ def ivf_ann_topk(
     """
     cents = kmeans_centroids(corpus.select(vec_col), vec_col, n_centroids)
     if cents.size == 0:  # empty corpus
-        spark = corpus.sparkSession
         q_type = dict(queries.dtypes)[query_id_col]
         id_type = dict(corpus.dtypes)[id_col]
-        return spark.createDataFrame(
-            [], f"query_id {q_type}, neighbor_id {id_type}, cos double, rank int"
+        return local_frame(
+            corpus.sparkSession,
+            [],
+            f"query_id {q_type}, neighbor_id {id_type}, cos double, rank int",
         )
     cb = corpus.select(
         F.col(id_col).alias("neighbor_id"),

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.sampling import hash_bucket
+from pyblazing_spark.session import local_frame, materialize_bounded
 from pyblazing_spark.sources.tables import load_table as T
 
 #: Identical regex source for Spark (Java) and DuckDB (RE2) — the subset
@@ -459,7 +460,6 @@ def sink_txn_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyblazing_spark.session import materialize_bounded
     from pyblazing_spark.sources.txn_table import TxnTable
 
     out_dir = tempfile.mkdtemp(prefix="txn_snapshot_log_")
@@ -595,8 +595,6 @@ def txn_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyblazing_spark.session import materialize_bounded
-
     out_dir = tempfile.mkdtemp(prefix="txn_cdf_")
     try:
         t = _txn_three_commit_table(spark, sf_dir, os.path.join(out_dir, "t"))
@@ -630,8 +628,6 @@ def txn_change_feed_written(spark: SparkSession, sf_dir: str) -> DataFrame:
     files it was already rewriting."""
     import shutil
     import tempfile
-
-    from pyblazing_spark.session import materialize_bounded
 
     out_dir = tempfile.mkdtemp(prefix="txn_cdf_written_")
     try:
@@ -707,7 +703,6 @@ def txn_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyblazing_spark.session import materialize_bounded
     from pyblazing_spark.sources.txn_table import TxnTable
 
     # One parquet scan per invocation (r15, guide §6): the projected
@@ -724,7 +719,8 @@ def txn_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
     ).collect()[0]
     if row["lo"] is None:  # empty table: stable schema, zero rows
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "probe string, n_rows long, total_cents long, key_xor long",
         )
@@ -2312,8 +2308,6 @@ def pipeline_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, with exact word-shingle Jaccard standing in for
     MinHash-LSH (deterministically equal on this corpus' similarity
     gap — same argument as dedup_minhash_lsh)."""
-    from pyblazing_spark.session import materialize_bounded
-
     card, feat = _corpus_e2e_build(spark, sf_dir)
     try:
         return materialize_bounded(card)
@@ -2439,7 +2433,6 @@ def pipeline_corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> Data
         _hashed_windows_from_tokens,
         minhash_pairs_from_hashed,
     )
-    from pyblazing_spark.session import materialize_bounded
 
     docs = T(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")

@@ -34,7 +34,7 @@ from pyblazing_spark.operators import dedup as DD
 from pyblazing_spark.operators import similarity as SIM
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.tpch import ratio
-from pyblazing_spark.session import materialize_bounded
+from pyblazing_spark.session import local_frame, materialize_bounded
 from pyblazing_spark.sources.tables import load_table as T
 
 
@@ -1360,8 +1360,6 @@ def text_lm_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # freq feeds the corpus total AND the scoring probe: materialize the
     # vocabulary-sized frame once or the corpus explode plans and runs
     # 3x per invocation (r14).
-    from pyblazing_spark.session import materialize_bounded
-
     freq = materialize_bounded(
         tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2562,7 +2560,10 @@ def text_multi_keyword_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts for both terms — the oracle's per-term replace-trick
     independently reproduces exactly that for border-free terms).
     Per-keyword rollup: docs touched + total occurrences; zero-match
-    terms still emit a row (dictionary left join)."""
+    terms still emit a row (dictionary left join). The ten-term
+    dictionary is an Arrow-built local frame
+    (:func:`pyblazing_spark.session.local_frame`): as pickled rows it
+    cost one Python-worker task per core on every job that scanned it."""
     from pyblazing_spark.operators.keywords import tag_keywords
 
     docs = T(spark, sf_dir, "documents")
@@ -2571,9 +2572,7 @@ def text_multi_keyword_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_matches").cast("long").alias("n_occurrences"),
     )
-    dictionary = spark.createDataFrame(
-        [(t,) for t in _KW_TAG_TERMS], "keyword string"
-    )
+    dictionary = local_frame(spark, [(t,) for t in _KW_TAG_TERMS], "keyword string")
     out = (
         dictionary.join(agg, "keyword", "left")
         .select(
@@ -3018,13 +3017,24 @@ def pipeline_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unpartitioned ntile window; the oracle's plain ntile proves the
     parallel form computes the identical split. Scores are rounded to
     4dp by quality_score itself, so the order key is discrete and the
-    (score, doc_id) tie-break is engine-stable."""
+    (score, doc_id) tie-break is engine-stable.
+
+    The narrow ``(doc_id, score, n_toks)`` projection is checkpointed
+    lazily: global_ntile reads its input three times (boundary sketch,
+    per-bucket counts, final window), and without the checkpoint each
+    read re-runs quality_score over the wide ``text`` column. The
+    sketch job fills the checkpoint as it goes, so no job is added and
+    the counts and final jobs read the cached three columns."""
     from pyblazing_spark.operators.global_window import global_ntile
 
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id",
-        TXT.quality_score(F.col("text")).alias("score"),
-        TXT.token_count(F.col("text")).cast("long").alias("n_toks"),
+    docs = (
+        T(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            TXT.quality_score(F.col("text")).alias("score"),
+            TXT.token_count(F.col("text")).cast("long").alias("n_toks"),
+        )
+        .localCheckpoint(eager=False)
     )
     d = global_ntile(docs, ["score", "doc_id"], 10, out_col="decile")
     return (
@@ -3338,8 +3348,6 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation and the scoring probe, so it is materialized once (r14
     — the corpus explode used to plan and run twice per invocation)."""
     from pyspark.sql import Window
-
-    from pyblazing_spark.session import materialize_bounded
 
     docs = T(spark, sf_dir, "documents")
     tok = docs.select(
@@ -3655,7 +3663,8 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_written == 0:
             # empty input writes no container files (nothing to read a
             # schema from): the round-trip of nothing is an empty frame
-            back = spark.createDataFrame(
+            back = local_frame(
+                spark,
                 [],
                 "o_orderkey bigint, o_totalprice double, "
                 "prio string, o_orderdate timestamp_ntz",
@@ -3716,8 +3725,8 @@ def source_avro_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1)
         n = write_avro(src, out_dir, codec="deflate")
         if n == 0:
-            back = spark.createDataFrame(
-                [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
+            back = local_frame(
+                spark, [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
             )
         else:
             back = read_avro_split(spark, out_dir, split_size=1 << 16)

@@ -24,8 +24,9 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from pyblazing_spark.functions import long_array_lit
+from pyblazing_spark.functions import array_lit
 from pyblazing_spark.operators.global_window import global_ntile
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.session import materialize_bounded
@@ -649,10 +650,10 @@ def join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE py4j round-trip for the whole bitmap (late r15, guide §5):
     # F.lit(list) expands to array(lit(w0), lit(w1), ...) — one py4j
     # call per WORD, ~0.5 s of pure driver time at sf0.1's 920 words
-    # and 33.4 s at the 32768-word cap. long_array_lit ships the same
+    # and 33.4 s at the 32768-word cap. array_lit ships the same
     # values as one parsed SQL expression; Catalyst constant-folds it
     # to a single array Literal before execution.
-    arr = long_array_lit(bitmap)
+    arr = array_lit(bitmap, LongType())
     # A conditional repartition before the probe was measured and
     # REJECTED (late r15): Catalyst pushes the bloom condition below a
     # round-robin exchange, so the md5 probe stays in the scan stage

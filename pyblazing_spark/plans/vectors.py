@@ -28,7 +28,12 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.functions import vectors as VEC
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import loop_shuffle_confs, materialize_bounded, scoped_conf
+from pyblazing_spark.session import (
+    local_frame,
+    loop_shuffle_confs,
+    materialize_bounded,
+    scoped_conf,
+)
 from pyblazing_spark.sources.tables import load_table as T
 
 _K = 8  # registered-entry cluster count (production: 2^8-2^12)
@@ -582,9 +587,7 @@ def _pq_adc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     VEC.nudge_round_np(qs @ qs - 2.0 * (qs @ c) + c @ c, 3)
                 )
                 lut_rows.append((int(qr["query_id"]), int(s), int(cand), d2))
-    lut = spark.createDataFrame(
-        lut_rows, "query_id long, sub int, code int, d2 double"
-    )
+    lut = local_frame(spark, lut_rows, "query_id long, sub int, code int, d2 double")
     codes_long = init.select(
         F.col("vec_id").alias("neighbor_id"),
         *[a.alias(f"a{s}") for s, a in enumerate(assigns)],
@@ -909,7 +912,7 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = base.withColumn("c0", (F.col("vec_id") % _K).cast("int"))
     ids, C = centroid_means(init, "embedding", "c0")
     if C.size == 0:  # empty corpus: typed zero-row contract
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def assigned(df: DataFrame) -> DataFrame:
         a = centroid_assign_with_dist(
@@ -955,7 +958,7 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in qp.select("list_id").distinct().collect()
         )  # bounded: <= 5 queries
         if not probe_lists:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         live = t._live_files()
         parts, touched = [], 0
         for lid in probe_lists:

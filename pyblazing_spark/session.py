@@ -366,6 +366,36 @@ def loop_shuffle_confs(spark: SparkSession) -> dict[str, str]:
     }
 
 
+def local_frame(spark: SparkSession, rows, schema) -> "DataFrame":
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema``
+    order; ``schema`` a StructType or DDL string) — the one way the
+    engine ships driver-built data to the JVM.
+
+    The rows become a ``pyarrow.Table`` typed by the Spark schema and
+    reach the JVM as one Arrow stream, which Spark plans as a local
+    relation (it carries size statistics). The pickled-row path
+    (``createDataFrame(list)``) instead plans a ``PythonRDD`` whose
+    every scan starts one Python-worker task per core: one aggregate
+    over a 1000-row frame took 0.49 s that way against 0.26 s from
+    Arrow (4-core host). Arrow keeps NULLs and int64 above 2^53 exact,
+    and an empty ``rows`` keeps its schema; a naive ``datetime`` in a
+    TIMESTAMP column is read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def materialize_bounded(df: DataFrame) -> "DataFrame":
     """Eagerly execute a FIXTURE-BOUNDED plan at cluster-parallelism
     shuffle width and return the materialized (localCheckpoint'd)

@@ -72,7 +72,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyblazing_spark.session import scoped_conf
+from pyblazing_spark.session import local_frame, scoped_conf
 
 _LOG_DIR = "_txn"
 _DATA_DIR = "data"
@@ -1087,7 +1087,7 @@ class TxnTable:
                     f"snapshot {version or head} is empty and no commit "
                     "recorded a schema"
                 )
-            out = self.spark.createDataFrame([], st)
+            out = local_frame(self.spark, [], st)
         else:
             # mergeSchema: live files may span schema evolution (a column
             # added by a later append/merge) — absent columns read as NULL
@@ -1241,7 +1241,8 @@ class TxnTable:
             )
 
             st = self._schema_at(to_version) or StructType([])
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 StructType(
                     st.fields

@@ -35,7 +35,7 @@ def main() -> int:
     n = 300
     if len(sys.argv) > 1:
         n = 60 if sys.argv[1] == "--smoke" else int(sys.argv[1])
-    from pyblazing_spark.session import get_spark
+    from pyblazing_spark.session import get_spark, local_frame
 
     spark = get_spark(app_name="txn_ckpt_probe")
     from pyblazing_spark.sources.txn_table import TxnTable
@@ -45,13 +45,13 @@ def main() -> int:
     try:
         t = TxnTable.create(
             spark, path,
-            spark.createDataFrame([(0, "v0")], "k long, v string"),
+            local_frame(spark, [(0, "v0")], "k long, v string"),
             key="k", checkpoint_interval=10,
         )
         t0 = time.time()
         for i in range(1, n):
             t.append(
-                spark.createDataFrame([(i, f"v{i}")], "k long, v string"),
+                local_frame(spark, [(i, f"v{i}")], "k long, v string"),
                 app_txn_id=f"probe:{i}",
             )
         print(f"wrote {n} commits in {time.time() - t0:.1f}s "

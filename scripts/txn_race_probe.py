@@ -34,7 +34,7 @@ sys.path.insert(0, _REPO)
 _WRITER = r"""
 import json, os, sys, time
 sys.path.insert(0, sys.argv[5])
-from pyblazing_spark.session import get_spark
+from pyblazing_spark.session import get_spark, local_frame
 
 role, path, rounds, start_file = (
     sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4])
@@ -57,12 +57,11 @@ while not os.path.exists(start_file):  # barrier: maximize overlap
 versions = []
 for r in range(rounds):
     if role == "merger":
-        df = spark.createDataFrame(
-            [(k, f"m{r}_{k}") for k in range(10)], "k long, v string")
+        df = local_frame(
+            spark, [(k, f"m{r}_{k}") for k in range(10)], "k long, v string")
         versions.append(t.merge(df.coalesce(1)))
     else:
-        df = spark.createDataFrame(
-            [(1000 + r, f"a{r}")], "k long, v string")
+        df = local_frame(spark, [(1000 + r, f"a{r}")], "k long, v string")
         versions.append(t.append(df.coalesce(1)))
 print("RESULT " + json.dumps(
     {"role": role, "versions": versions, "conflicts": conflicts}))
@@ -74,7 +73,7 @@ def main() -> int:
     rounds = 15
     if len(sys.argv) > 1:
         rounds = 5 if sys.argv[1] == "--smoke" else int(sys.argv[1])
-    from pyblazing_spark.session import get_spark
+    from pyblazing_spark.session import get_spark, local_frame
 
     spark = get_spark(app_name="txn_race_parent")
     from pyblazing_spark.sources.txn_table import TxnTable
@@ -88,8 +87,8 @@ def main() -> int:
     try:
         t = TxnTable.create(
             spark, path,
-            spark.createDataFrame(
-                [(k, f"base_{k}") for k in range(10)], "k long, v string"
+            local_frame(
+                spark, [(k, f"base_{k}") for k in range(10)], "k long, v string"
             ).coalesce(1),
             key="k",
         )

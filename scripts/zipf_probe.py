@@ -93,6 +93,7 @@ def _solve_c(weights: np.ndarray, target: float) -> float:
 def build_zipf(spark, src_dir: str, out_dir: str, k: int) -> dict:
     from pyspark.sql import functions as F
 
+    from pyblazing_spark.session import local_frame
     from pyblazing_spark.sources.tables import load_table
 
     os.makedirs(out_dir, exist_ok=True)
@@ -117,7 +118,8 @@ def build_zipf(spark, src_dir: str, out_dir: str, k: int) -> dict:
         "head_mult": int(mult[0]),
         "target_rows": int(k * n_events),
     }
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [(int(u.user_id), int(m)) for u, m in zip(users, mult)],
         "user_id long, __m int",
     )
@@ -153,8 +155,8 @@ def build_zipf(spark, src_dir: str, out_dir: str, k: int) -> dict:
         "head_mult": int(dmult[0]),
         "target_rows": int(k * len(ids)),
     }
-    ddf = spark.createDataFrame(
-        [(int(d), int(m)) for d, m in zip(ids, dmult)], "doc_id long, __m int"
+    ddf = local_frame(
+        spark, [(int(d), int(m)) for d, m in zip(ids, dmult)], "doc_id long, __m int"
     )
     drep = (
         docs.join(F.broadcast(ddf), "doc_id")

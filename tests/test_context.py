@@ -419,3 +419,71 @@ def test_scoped_conf_thread_stress(spark):
     assert len(seen) == 80 and set(seen) <= {str(100 + n) for n in range(1, 9)}
     assert spark.conf.get(key, None) == before
     assert not session._OPEN_CONFS
+
+
+def _lineage(df: DataFrame) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_local_frame_is_arrow_built_and_exact(spark):
+    """session.local_frame ships driver rows as one Arrow stream: no
+    PythonRDD in the lineage (so no Python-worker task per scan), NULL
+    and int64 above 2^53 come back exact, and zero rows keep the
+    schema."""
+    from pyblazing_spark.session import local_frame
+
+    big = 2**60 + 1
+    df = local_frame(spark, [(1, None, "a"), (big, 7, None)], "a long, b long, s string")
+    assert "PythonRDD" not in _lineage(df)
+    assert [tuple(r) for r in df.orderBy("a").collect()] == [(1, None, "a"), (big, 7, None)]
+    # the exactness survives a JVM-side computation, not only the collect
+    assert df.selectExpr("max(a) - 1 AS m").collect()[0].m == 2**60
+
+    empty = local_frame(spark, [], "a long, d date, x array<double>")
+    assert empty.schema.simpleString() == "struct<a:bigint,d:date,x:array<double>>"
+    assert empty.collect() == []
+    assert "PythonRDD" not in _lineage(empty)
+
+
+def test_scc_summary_frame_has_no_python_rdd(spark):
+    """scc_summary's rollup scans the driver-built assignment and edge
+    frames; as Arrow-built local frames no scan starts a Python worker."""
+    from pyblazing_spark.operators.graph import scc_summary
+    from pyblazing_spark.session import local_frame
+
+    edges = local_frame(spark, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3)], "u long, v long")
+    out = scc_summary(edges)
+    assert "PythonRDD" not in _lineage(out)
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2, 3, 2), (3, 2, 7, 2)]
+
+
+def test_create_dataframe_only_in_local_frame():
+    """Guard: the engine and its scripts build driver-held frames only
+    through session.local_frame. The pickled-row
+    ``createDataFrame(list)`` path plans a PythonRDD that starts a
+    Python-worker task per core on every scan, and it creeps back
+    silently. sources/files.py is exempt: it hands USER-supplied pandas
+    frames, Arrow tables and inferred-schema row lists to Spark as
+    given."""
+    import pathlib
+    import re
+
+    import pyblazing_spark
+
+    pkg = pathlib.Path(pyblazing_spark.__file__).parent
+    repo = pkg.parent
+    hits = []
+    for path in sorted([*pkg.rglob("*.py"), *(repo / "scripts").glob("*.py")]):
+        if path == pkg / "sources" / "files.py":
+            continue
+        src = path.read_text()
+        if path == pkg / "session.py":
+            # only the body of local_frame may call it
+            body = re.search(r"\ndef local_frame\(.*?(?=\ndef )", src, re.S).group(0)
+            src = src.replace(body, "")
+        hits += [
+            f"{path.relative_to(repo)}: {line.strip()}"
+            for line in src.splitlines()
+            if "createDataFrame(" in line
+        ]
+    assert not hits, hits

@@ -227,25 +227,27 @@ def test_bloom_words_saturation_warns(caplog):
     assert not caplog.records
 
 
-# ------------------------------------------------- long_array_lit helper
+# ------------------------------------------------------ array_lit helper
 def test_long_array_lit_matches_f_lit(spark):
-    """functions.long_array_lit must be value- AND dtype-identical to
+    """functions.array_lit(.., LongType()) must be value- AND dtype-identical to
     the F.lit(list) form it replaces (one py4j call per element, ~0.5 s
     per 1k words of pure driver time — the late-r15 bloom-bitmap fix);
     negatives, zero, int64 extremes and a bare generator all round-trip."""
-    from pyblazing_spark.functions import long_array_lit
+    from pyspark.sql.types import LongType
+
+    from pyblazing_spark.functions import array_lit
 
     vals = [0, 1, -1, 2**63 - 1, -(2**63), 42]
     ref = spark.range(1).select(
         F.lit(vals).cast("array<bigint>").alias("a")
     )
-    got = spark.range(1).select(long_array_lit(iter(vals)).alias("a"))
+    got = spark.range(1).select(array_lit(iter(vals), LongType()).alias("a"))
     assert got.dtypes == ref.dtypes == [("a", "array<bigint>")]
     assert got.collect() == ref.collect()
     # element_at probing (the bloom access pattern) agrees too
     probe = spark.range(1).select(
         *[
-            F.element_at(long_array_lit(vals), i + 1).alias(f"e{i}")
+            F.element_at(array_lit(vals, LongType()), i + 1).alias(f"e{i}")
             for i in range(len(vals))
         ]
     )

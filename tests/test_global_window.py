@@ -141,6 +141,49 @@ def test_global_two_phase_property(spark):
         }
         assert got_sum == serial_sum, f"sum trial={trial}"
 
+    # Every key type the boundary-literal renderer handles. The values
+    # are multiples of 0.25, so double running sums are exact in any
+    # summation order and the float offsets must match bit for bit.
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyblazing_spark.session import local_frame
+
+    t0 = dt.datetime(2021, 3, 4, 5, 6, 7, 891011)
+    domains = {
+        "string": ["it's", "back\\slash", "naïve", "日本語", "", "a'\\'b", "z"],
+        "date": [dt.date(1969, 12, 31) + dt.timedelta(days=d) for d in (0, 1, 59, 400, 9000)],
+        "timestamp_ntz": [t0 + dt.timedelta(microseconds=u) for u in (-1, 0, 1, 10**9, 10**12)],
+        "decimal(12,2)": [Decimal(x) for x in ("-9999999999.99", "-0.01", "0.00", "0.01", "123.45")],
+        "double": [float("nan"), -0.0, 0.0, -1.5, 2.25, 1e300, -float("inf")],
+        "bigint": [2**53 + 1, 2**60 + 1, -(2**62), 2**63 - 1, None],
+    }
+    for ktype, dom in domains.items():
+        rows = [(i, rnd.choice(dom), rnd.randrange(-8, 8) / 4) for i in range(400)]
+        df = local_frame(spark, rows, f"id long, k {ktype}, v double").repartition(4)
+        order = ["k", "id"]
+        pid = GW._range_bucket(df, order, partitions=8)
+        assert df.select(pid.alias("p")).distinct().count() > 1, ktype
+
+        serial = df.select(
+            "id",
+            F.row_number().over(W.orderBy(*order)).alias("rn"),
+            F.ntile(6).over(W.orderBy(*order)).alias("b"),
+            F.sum("v")
+            .over(W.orderBy(*order).rowsBetween(W.unboundedPreceding, W.currentRow))
+            .alias("s"),
+        )
+        exp = {r.id: (r.rn, r.b, r.s) for r in serial.collect()}
+        got_rn = {r.id: r.rn for r in GW.global_row_number(df, order, partitions=8).collect()}
+        got_nt = {r.id: r.bucket for r in GW.global_ntile(df, order, 6, partitions=8).collect()}
+        got_sum = {
+            r.id: r.running_sum
+            for r in GW.global_running_sum(df, order, "v", partitions=8).collect()
+        }
+        assert got_rn == {i: e[0] for i, e in exp.items()}, f"rn {ktype}"
+        assert got_nt == {i: e[1] for i, e in exp.items()}, f"ntile {ktype}"
+        assert got_sum == {i: e[2] for i, e in exp.items()}, f"sum {ktype}"
+
 
 def test_ranked_topk_matches_full_window(spark):
     """ranked_topk (orderBy.limit -> TakeOrderedAndProject + k-row rank

@@ -808,14 +808,17 @@ def test_sequence_packing_window_is_partitioned(spark, sf_dir):
 
 def test_scc_closure_plan_hangs_off_checkpoints(spark, sf_dir):
     """graph_scc's loop hygiene (same contract as the BFS audit): the
-    final summary must read checkpointed RDDs, not re-derive the
-    closure rounds — no parquet scan may survive into the result plan."""
+    final summary must read the driver-built frames, not re-derive the
+    edge set — no parquet scan may survive into the result plan. Those
+    frames are Arrow-built local relations (session.local_frame), never
+    a pickled-row RDD."""
     import pyblazing_spark.plans as plans
 
     df = plans.REGISTRY["graph_scc"].fn(spark, sf_dir)
     phys = _executed_plan(df)
     assert "Scan parquet" not in phys, phys[:2000]
-    assert "Scan ExistingRDD" in phys
+    assert "LocalTableScan" in phys, phys[:2000]
+    assert "Scan ExistingRDD" not in phys, phys[:2000]
 
 
 def test_unpivot_is_expand_only(spark, sf_dir):
