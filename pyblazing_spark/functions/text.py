@@ -118,17 +118,3 @@ def quality_score(text: Column) -> Column:
         length_part * 0.3 + alpha_ratio(text) * 0.4 + stop_part * 0.3 - digit_ratio(text) * 0.2,
         4,
     )
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles -> array<string>."""
-    toks = tokens(text)
-    n = F.size(toks)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.lit(0), n - F.lit(k))),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-            ),
-        )
-    )

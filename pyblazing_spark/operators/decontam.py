@@ -49,21 +49,6 @@ def contaminated_ids(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_words: int = 5,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Corpus minus contaminated docs (``left_anti`` on the flagged ids)."""
-    flagged = contaminated_ids(
-        corpus, benchmark, text_col, id_col, shingle_words, min_hits
-    )
-    return corpus.join(flagged, id_col, "left_anti")
-
-
 def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,

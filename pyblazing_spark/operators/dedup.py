@@ -371,11 +371,6 @@ def simhash(
     return maj.select(F.col(id_col), sig.alias("simhash"))
 
 
-def simhash32(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """32-bit variant (kept for API parity; prefer 64-bit :func:`simhash`)."""
-    return simhash(df, text_col, id_col, bits=32)
-
-
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",

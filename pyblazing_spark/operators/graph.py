@@ -134,7 +134,7 @@ def connected_components(
         )
         n_nodes, prev_sum = _label_stats(labels)
         # Narrow the round shuffles to the measured graph size (the edge
-        # pipeline above already materialized at cluster parallelism).
+        # pipeline above ran at the session's shuffle width).
         try:
             with _loop_width_scope(spark, n_nodes):
                 for i in range(max_iter):
@@ -266,7 +266,7 @@ def _star_loop(
 
     prev = _checksum(E)
     # Narrow the round shuffles to the measured edge count (the caller's
-    # edge pipeline already materialized at cluster parallelism above).
+    # edge pipeline ran at the session's shuffle width).
     with _loop_width_scope(spark, prev[0]):
         for _ in range(max_iter):
             # Each FULL round is localCheckpoint'ed, unlike the propagation
@@ -317,29 +317,6 @@ def _star_loop(
     raise RuntimeError(
         f"connected_components_star did not converge in {max_iter} rounds"
     )
-
-
-def dedup_by_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    method: str = "propagation",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Transitive near-dup dedup: keep the min-id member of every
-    connected component, plus every unpaired doc.
-
-    ``method='propagation'`` (default) is O(diameter) rounds — right for
-    near-dup graphs (unions of small cliques/chains); ``'star'`` picks
-    the large-star/small-star variant, O(log n) rounds on any graph."""
-    if method not in ("propagation", "star"):
-        raise ValueError("method must be 'propagation' or 'star'")
-    cc = connected_components_star if method == "star" else connected_components
-    comp = cc(pairs, checkpoint_dir=checkpoint_dir)
-    losers = comp.where(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
 
 
 def kcore_peel_summary(

@@ -64,17 +64,6 @@ IMAGE_SCHEMA = "doc_id bigint, width int, height int, mean_pixel double"
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, n_bytes int, digest string"
 
 
-def read_binary_dir(spark, path: str, glob: str | None = None) -> DataFrame:
-    """Real binary ingestion: Spark's ``binaryFile`` source
-    (path, modificationTime, length, content). This is the production
-    entry point for on-disk media; tests use :func:`attach_blob` because
-    the container ships no media files."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
 def attach_blob(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Derive a multimodal-shaped table from a text table: ``content`` =
     the UTF-8 bytes, ``meta`` = struct<modality, content_type, n_bytes>.

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.sampling import hash_bucket
-from pyblazing_spark.session import local_frame, materialize_bounded
+from pyblazing_spark.session import local_frame
 from pyblazing_spark.sources.tables import load_table as T
 
 #: Identical regex source for Spark (Java) and DuckDB (RE2) — the subset
@@ -500,7 +500,8 @@ def sink_txn_snapshot_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = frames[0]
         for fdf in frames[1:]:
             out = out.unionByName(fdf)
-        return materialize_bounded(out.orderBy("version"))
+        # lifetime: the snapshots are read before out_dir is removed
+        return out.orderBy("version").localCheckpoint()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -598,7 +599,8 @@ def txn_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="txn_cdf_")
     try:
         t = _txn_three_commit_table(spark, sf_dir, os.path.join(out_dir, "t"))
-        return materialize_bounded(_cdf_feed_rollup(t.change_feed(1)))
+        # lifetime: the table is read before out_dir is removed
+        return _cdf_feed_rollup(t.change_feed(1)).localCheckpoint()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -658,7 +660,8 @@ def txn_change_feed_written(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "write-time feed scanned snapshot files: "
                 f"{sorted(scanned - allowed)[:3]}"
             )
-        return materialize_bounded(_cdf_feed_rollup(feed))
+        # lifetime: the feed is read before out_dir is removed
+        return _cdf_feed_rollup(feed).localCheckpoint()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -785,7 +788,8 @@ def txn_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             16,
             10,
         ).cast("long")
-        return materialize_bounded(
+        # lifetime: the probes are read before base is removed
+        return (
             rows.groupBy("probe")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -795,6 +799,7 @@ def txn_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("key_xor"),
             )
             .orderBy("probe")
+            .localCheckpoint()
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -2310,7 +2315,8 @@ def pipeline_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap — same argument as dedup_minhash_lsh)."""
     card, feat = _corpus_e2e_build(spark, sf_dir)
     try:
-        return materialize_bounded(card)
+        # lifetime: the card is computed before its feature cache is freed
+        return card.localCheckpoint()
     finally:
         feat.unpersist()
 
@@ -2581,7 +2587,8 @@ def pipeline_corpus_ingest_incremental(spark: SparkSession, sf_dir: str) -> Data
             "drop_within_batch",
             "kept_xor",
         )
-        return materialize_bounded(card.orderBy("stage_idx"))
+        # lifetime: the card is computed before its caches are freed
+        return card.orderBy("stage_idx").localCheckpoint()
     finally:
         feat.unpersist()
         snap.unpersist()

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import materialize_bounded
 from pyblazing_spark.plans.tpch import money, ratio
 from pyblazing_spark.sources.tables import load_table as T
 
@@ -240,7 +239,8 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = T(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     buys = ev.where(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    top = materialize_bounded(clicks.orderBy("user_id", "event_id").limit(2000))
+    # reuse: top feeds the purchase semi-filter and the as-of join
+    top = clicks.orderBy("user_id", "event_id").limit(2000).localCheckpoint()
     buys_f = buys.join(
         F.broadcast(top.select("user_id").distinct()), "user_id", "left_semi"
     )
@@ -855,7 +855,8 @@ def join_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (user_id, event_id) is unique (event_id is the event PK), so the
     # top-2000 set is deterministic. Bounded by construction: 2000 rows.
-    top = materialize_bounded(clicks.orderBy("user_id", "event_id").limit(2000))
+    # reuse: top feeds the purchase semi-filter and the as-of join
+    top = clicks.orderBy("user_id", "event_id").limit(2000).localCheckpoint()
     buys_f = buys.join(
         F.broadcast(top.select("user_id").distinct()), "user_id", "left_semi"
     )
@@ -999,7 +1000,8 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = T(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     buys = ev.where(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    top = materialize_bounded(clicks.orderBy("user_id", "event_id").limit(2000))
+    # reuse: top feeds the purchase semi-filter and the as-of join
+    top = clicks.orderBy("user_id", "event_id").limit(2000).localCheckpoint()
     buys_f = buys.join(
         F.broadcast(top.select("user_id").distinct()), "user_id", "left_semi"
     )
@@ -1244,12 +1246,15 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = T(spark, sf_dir, "events")
     purch = ev.where(F.col("event_type") == "purchase")
-    pu = materialize_bounded(
-        purch.groupBy("user_id").agg(
+    # reuse: pu is collected for the max ts, then scored (sketch, counts, final)
+    pu = (
+        purch.groupBy("user_id")
+        .agg(
             F.max("ts").alias("last_ts"),
             F.count(F.lit(1)).alias("freq"),
             F.round(F.coalesce(F.sum("value"), F.lit(0.0)) + 1e-9, 2).alias("money"),
         )
+        .localCheckpoint()
     )
     # bounded driver collect: one row, the global max purchase ts
     gts = pu.agg(F.max("last_ts").alias("gts")).collect()[0]["gts"]

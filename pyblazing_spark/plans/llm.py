@@ -34,7 +34,7 @@ from pyblazing_spark.operators import dedup as DD
 from pyblazing_spark.operators import similarity as SIM
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.tpch import ratio
-from pyblazing_spark.session import local_frame, materialize_bounded
+from pyblazing_spark.session import local_frame
 from pyblazing_spark.sources.tables import load_table as T
 
 
@@ -254,9 +254,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded to doc_id < 500 — the exact-verification baseline the MinHash
     unit tests measure recall against."""
     docs = T(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    return materialize_bounded(
-        DD.ngram_jaccard_pairs(docs, threshold=0.5).orderBy("id_a", "id_b")
-    )
+    return DD.ngram_jaccard_pairs(docs, threshold=0.5).orderBy("id_a", "id_b")
 
 
 @register(
@@ -336,7 +334,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks full result equality, not a property proxy. Production
     callers default to xxhash64/64-bit (faster; same plan shape)."""
     docs = T(spark, sf_dir, "documents")
-    return materialize_bounded(
+    return (
         DD.simhash_pairs(
             docs, max_hamming=3, bits=60, token_hash=DD.md5_hash60
         ).orderBy("id_a", "id_b")
@@ -359,9 +357,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (bounded brute force; LSH-bucketed
     variant is the scale path)."""
     emb = T(spark, sf_dir, "embeddings").where(F.col("vec_id") < 500)
-    return materialize_bounded(
-        DD.embedding_pairs(emb, threshold=0.4).orderBy("id_a", "id_b")
-    )
+    return DD.embedding_pairs(emb, threshold=0.4).orderBy("id_a", "id_b")
 
 
 #: Exact brute-force top-5 — the oracle for ann_cosine_topk AND for the
@@ -407,7 +403,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs; pruned production settings are covered by the ANN recall
     unit tests over the same hyperplane machinery."""
     emb = T(spark, sf_dir, "embeddings").where(F.col("vec_id") < 500)
-    return materialize_bounded(
+    return (
         DD.embedding_pairs_lsh(
             emb, threshold=0.4, n_bits=16, bands=16
         ).orderBy("id_a", "id_b")
@@ -501,7 +497,7 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     production uses the xxhash64 gram hash."""
     docs = T(spark, sf_dir, "documents").where(F.col("doc_id") < 250)
     cov = DD.duplicated_span_coverage(docs, k=24, sample_mod=4)
-    out = (
+    return (
         cov.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
@@ -514,7 +510,6 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    return materialize_bounded(out)
 
 
 @register(
@@ -551,9 +546,8 @@ def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc._pbs_pair_graph = cache
     if sf_dir not in cache:
         docs = T(spark, sf_dir, "documents")
-        cache[sf_dir] = materialize_bounded(
-            DD.minhash_lsh_pairs(docs, threshold=0.5)
-        )
+        # cache: held across calls, so it must not re-read the corpus
+        cache[sf_dir] = DD.minhash_lsh_pairs(docs, threshold=0.5).localCheckpoint()
     return cache[sf_dir]
 
 
@@ -563,7 +557,7 @@ def _components_rollup(spark: SparkSession, sf_dir: str, cc_fn) -> DataFrame:
     oracle genuinely proves algorithm equivalence."""
     pairs = _pair_graph(spark, sf_dir)
     comp = cc_fn(pairs)
-    return materialize_bounded(
+    return (
         comp.groupBy("component")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -598,15 +592,16 @@ def dedup_components_reliable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt_dir = tempfile.mkdtemp(prefix="pbs_reliable_ckpt_")
     try:
+        # lifetime: the rollup reads the round snapshots in ckpt_dir
         return _components_rollup(
             spark,
             sf_dir,
             lambda pairs: connected_components(pairs, checkpoint_dir=ckpt_dir),
-        )
+        ).localCheckpoint()
     finally:
-        # _components_rollup returns an eagerly materialized frame, so
-        # the round snapshots are consumed by now; a real deployment
-        # points checkpoint_dir at a managed path and reaps by job id.
+        # the rollup is materialized above, so the round snapshots are
+        # consumed by now; a real deployment points checkpoint_dir at a
+        # managed path and reaps by job id.
         # NOTE: setCheckpointDir is process-global and still points at
         # the removed path after this — any df.checkpoint() call MUST
         # flow through make_ckpt (which re-sets the dir per call); no
@@ -645,9 +640,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.where(F.col("vec_id") >= 5)
-    return materialize_bounded(
-        SIM.cosine_topk(corpus, queries, k=5, query_id_col="query_id")
-    )
+    return SIM.cosine_topk(corpus, queries, k=5, query_id_col="query_id")
 
 
 @register(
@@ -670,7 +663,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.where(F.col("vec_id") >= 5)
-    return materialize_bounded(
+    return (
         SIM.lsh_ann_topk(
             corpus, queries, k=5, query_id_col="query_id", n_bits=16, bands=16
         )
@@ -695,9 +688,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.where(F.col("vec_id") >= 5)
-    return materialize_bounded(
-        SIM.ivf_ann_topk(corpus, queries, k=5, n_centroids=16, nprobe=16)
-    )
+    return SIM.ivf_ann_topk(corpus, queries, k=5, n_centroids=16, nprobe=16)
 
 
 #: Axis-aligned 8-bit sign bucket shared by ann_recall_eval's engine and
@@ -813,7 +804,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = ap5.join(exact5, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
-    return materialize_bounded(
+    return (
         queries.select("query_id")
         .join(napprox, "query_id", "left")
         .join(hits, "query_id", "left")
@@ -1357,12 +1348,9 @@ def text_lm_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token"),
     ).where(F.col("token") != "")
-    # freq feeds the corpus total AND the scoring probe: materialize the
-    # vocabulary-sized frame once or the corpus explode plans and runs
-    # 3x per invocation (r14).
-    freq = materialize_bounded(
-        tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    )
+    # reuse: freq feeds the corpus total AND the scoring probe; without
+    # the checkpoint the corpus explode runs 3x per invocation (r14).
+    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
     # bounded driver collect: one row, the corpus token total
     tot = freq.agg(F.sum("n").alias("tot")).collect()[0]["tot"]
     scored = tok.join(F.broadcast(freq), "token").withColumn(
@@ -1826,7 +1814,7 @@ def pipeline_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("component", "doc_id").alias("canonical"),
     )
     kept = F.when(F.col("doc_id") == F.col("canonical"), 1).otherwise(0)
-    return materialize_bounded(
+    return (
         decided.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1878,7 +1866,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id < 500 like the other exact-pair baselines; the LSH pipeline
     is the candidate generator at 100 TB."""
     docs = T(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    return materialize_bounded(
+    return (
         DD.containment_pairs(docs, threshold=0.6).orderBy(
             "contained_id", "container_id"
         )
@@ -2002,7 +1990,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("id_b").alias("drop_id_sum"),
         )
     )
-    summary = (
+    return (
         pairs.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_dup_pairs"),
@@ -2020,7 +2008,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster")
     )
-    return materialize_bounded(summary)
 
 
 #: Shared oracle fragments for the BPE entry: wrap each character of a
@@ -2175,9 +2162,7 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(rnd).cast("int").alias("round"), "rank", "p1", "p2", "weight"
         )
 
-    return materialize_bounded(
-        ranked(pairs1, 1).unionAll(ranked(pairs2, 2)).orderBy("round", "rank")
-    )
+    return ranked(pairs1, 1).unionAll(ranked(pairs2, 2)).orderBy("round", "rank")
 
 
 def _bpe_learn_inprocess(
@@ -2351,9 +2336,7 @@ def _bpe_encode_pipeline(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         F.sum("w").cast("long").alias("total_count"),
     )
     ranked = _ranked_topk(stats, 20, F.desc("total_count"), "token")
-    return materialize_bounded(
-        ranked.select("rank", "token", "n_words", "total_count").orderBy("rank")
-    )
+    return ranked.select("rank", "token", "n_words", "total_count").orderBy("rank")
 
 
 @register(
@@ -2513,7 +2496,7 @@ def text_bpe_byte_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w").cast("long").alias("total_count"),
     ).withColumn("n_bytes", (F.length("token_hex") / 2).cast("long"))
     ranked = _ranked_topk(stats, 20, F.desc("total_count"), "token_hex")
-    return materialize_bounded(
+    return (
         ranked.select(
             "rank", "token_hex", "n_bytes", "n_words", "total_count"
         ).orderBy("rank")
@@ -2573,7 +2556,7 @@ def text_multi_keyword_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_matches").cast("long").alias("n_occurrences"),
     )
     dictionary = local_frame(spark, [(t,) for t in _KW_TAG_TERMS], "keyword string")
-    out = (
+    return (
         dictionary.join(agg, "keyword", "left")
         .select(
             "keyword",
@@ -2584,7 +2567,6 @@ def text_multi_keyword_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("keyword")
     )
-    return materialize_bounded(out)
 
 
 # ---------------------------------------------------------------------------
@@ -3353,8 +3335,11 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(TXT.tokens(F.col("text"))).alias("term")
     )
-    tf = materialize_bounded(
-        tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    # reuse: tf feeds the df aggregation and the scoring join
+    tf = (
+        tok.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint()
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -3894,7 +3879,7 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = sum(freqs.values())
     costs = quantized_costs(freqs, total, _UNI_MINF)
     seg = viterbi_encode_frame(vocab, costs, _UNI_MAXP)
-    return materialize_bounded(
+    return (
         seg.groupBy(
             F.length("word").cast("long").alias("wlen"), "n_pieces"
         )
@@ -4132,6 +4117,4 @@ def text_unigram_em_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("used").cast("long").alias("total_used"))
     )
     ranked = _ranked_topk(used, 20, F.desc("total_used"), "piece")
-    return materialize_bounded(
-        ranked.select("rank", "piece", "total_used").orderBy("rank")
-    )
+    return ranked.select("rank", "piece", "total_used").orderBy("rank")

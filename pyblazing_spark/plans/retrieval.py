@@ -29,7 +29,6 @@ from pyspark.sql.types import LongType
 from pyblazing_spark.functions import array_lit
 from pyblazing_spark.operators.global_window import global_ntile
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import materialize_bounded
 from pyblazing_spark.plans.tpch import money
 from pyblazing_spark.sources.tables import load_table as T
 
@@ -97,14 +96,14 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears entirely. Scoring is embarrassingly parallel and the
     final top-k is a TakeOrdered over per-partition top-k — no global
     sort."""
-    from pyblazing_spark.session import materialize_bounded
-
     docs = T(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     ).where(F.col("token") != "")
-    per_doc = materialize_bounded(
-        tok.groupBy("doc_id").agg(
+    # reuse: per_doc is collected for N and avgdl, then feeds idf and tf
+    per_doc = (
+        tok.groupBy("doc_id")
+        .agg(
             F.count(F.lit(1)).alias("dl"),
             *[
                 F.sum(F.when(F.col("token") == t, 1).otherwise(0))
@@ -113,6 +112,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i, t in enumerate(_BM25_TERMS)
             ],
         )
+        .localCheckpoint()
     )
     # bounded driver collect: one row of corpus-global constants
     st = per_doc.agg(
@@ -354,7 +354,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rrf"),
         )
     )
-    return materialize_bounded(
+    return (
         ranked_topk(fused, 10, F.desc("rrf"), "doc_id")
         .select("rank", "doc_id", "lex_rank", "vec_rank", "rrf")
         .orderBy("rank")
@@ -1106,7 +1106,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(F.broadcast(edges.agg(F.count(F.lit(1)).alias("n_edges"))))
     from pyblazing_spark.operators.global_window import ranked_topk
 
-    return materialize_bounded(
+    return (
         ranked_topk(
             pernode.crossJoin(F.broadcast(tot)), 5, F.desc("n_triangles"), "node"
         )
@@ -1465,7 +1465,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select(F.col("u").alias("node"), "label")
     )
-    return materialize_bounded(
+    return (
         l2.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
@@ -1857,7 +1857,7 @@ def retrieval_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy("rank"))
         .cast("long"),
     )
-    return materialize_bounded(
+    return (
         packd.select(
             "rank",
             "doc_id",

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import materialize_bounded
 from pyblazing_spark.plans.tpch import money
 from pyblazing_spark.sources.tables import load_table as T
 
@@ -541,8 +540,8 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate — membership is a pure function of (doc_id, manifest), so
     the sample is identical across engines, reruns, partitionings, and
     cluster sizes, and no corpus-scale shuffle ever happens (same
-    contract as sample_hash_bernoulli; broadcast shape plan-audited on
-    the lazy plan in test_plan_audits). The float thresholds are
+    contract as sample_hash_bernoulli; broadcast shape plan-audited in
+    test_plan_audits). The float thresholds are
     integerized against the 32-bit hash space with a RELATIVE nudge
     (``*(1+1e-12)``, ~4400 ULP of margin at the top of the range where
     one ULP of ``frac*2^32`` is ~9.5e-7 and an absolute 1e-6 alone
@@ -550,11 +549,6 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     near zero, so an engine-side ULP difference in pow/sum cannot flip
     a comparison except for a doc whose hash lands on the exact
     boundary integer — and both engines apply the identical formula."""
-    return materialize_bounded(temperature_mix_plan(spark, sf_dir))
-
-
-def temperature_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAZY mixing plan (un-materialized, for plan audits)."""
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").cast("long").alias("n_chars")
     )
@@ -594,7 +588,7 @@ def temperature_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_sampled"),
         F.sum("n_chars").cast("long").alias("chars_sampled"),
     )
-    out = (
+    return (
         t.join(agg, "source", "left")
         .select(
             "source",
@@ -605,7 +599,6 @@ def temperature_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    return out
 
 
 _QUOTA_N = 100  # eval-set size apportioned across strata
@@ -761,7 +754,7 @@ def sample_quota_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFram
         F.bit_xor(key64).alias("key_xor"),
         F.sum("c_acctbal").alias("bal"),
     )
-    out = (
+    return (
         q.join(agg, "stratum", "left")
         .select(
             "stratum",
@@ -773,4 +766,3 @@ def sample_quota_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .orderBy("stratum")
     )
-    return materialize_bounded(out)

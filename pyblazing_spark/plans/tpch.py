@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import materialize_bounded
 from pyblazing_spark.sources.tables import load_table as T
 
 
@@ -1043,8 +1042,11 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pa = F.broadcast(T(spark, sf_dir, "part").where(F.col("p_name").like("%widget%")))
     su = T(spark, sf_dir, "supplier")
-    shipped = materialize_bounded(
-        li.groupBy("l_suppkey", "l_partkey").agg(F.sum("l_quantity").alias("qty"))
+    # reuse: shipped is collected for the cutoff, then probed for heavy
+    shipped = (
+        li.groupBy("l_suppkey", "l_partkey")
+        .agg(F.sum("l_quantity").alias("qty"))
+        .localCheckpoint()
     )
     # bounded driver collect: one row, the global average cutoff
     cut = shipped.agg((F.avg("qty") * 0.5).alias("cut")).collect()[0]["cut"]

@@ -184,8 +184,6 @@ def tpch_q2_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch and the probe branch, is materialized once instead of
     re-deriving partsupp per branch (22 scans -> bounded; guide §2.3 /
     §7.2)."""
-    from pyblazing_spark.session import materialize_bounded
-
     nat = F.broadcast(T(spark, sf_dir, "nation"))
     reg = F.broadcast(
         T(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
@@ -203,10 +201,12 @@ def tpch_q2_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ps = load_partsupp(spark, sf_dir)
-    eu_ps = materialize_bounded(
+    # reuse: eu_ps feeds both the per-part min and the probe
+    eu_ps = (
         ps.join(pa.select("p_partkey", "p_mfgr"),
                 ps.ps_partkey == F.col("p_partkey"))
         .join(eu_sup, ps.ps_suppkey == eu_sup.s_suppkey)
+        .localCheckpoint()
     )
     best = eu_ps.groupBy(F.col("ps_partkey").alias("bp_key")).agg(
         F.min("ps_supplycost").alias("best_cost")

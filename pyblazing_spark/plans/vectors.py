@@ -28,12 +28,7 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.functions import vectors as VEC
 from pyblazing_spark.plans.registry import register
-from pyblazing_spark.session import (
-    local_frame,
-    loop_shuffle_confs,
-    materialize_bounded,
-    scoped_conf,
-)
+from pyblazing_spark.session import local_frame, loop_shuffle_confs, scoped_conf
 from pyblazing_spark.sources.tables import load_table as T
 
 _K = 8  # registered-entry cluster count (production: 2^8-2^12)
@@ -109,7 +104,7 @@ def vector_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = init.select("vec_id", a.alias("a")).select(
         "vec_id", F.col("a.cluster").alias("cluster"), F.col("a.d2").alias("d2")
     )
-    return materialize_bounded(
+    return (
         assigned.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -236,7 +231,7 @@ def vector_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = T(spark, sf_dir, "embeddings")
     assigned, _C, _hist = kmeans_lloyd(emb, k=_K, iterations=2)
-    return materialize_bounded(
+    return (
         assigned.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -419,7 +414,7 @@ def vector_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int").alias("code"),
         sum(F.col(f"a{s}.d2") for s in range(_PQ_M)).alias("err"),
     )
-    return materialize_bounded(
+    return (
         coded.groupBy("code")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -508,7 +503,12 @@ ORDER BY query_id, rank
 """
 
 
-def _pq_adc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register(
+    "ann_pq_adc",
+    tags=("llm", "ann", "pq", "quantization"),
+    oracle=_pq_adc_oracle(),
+)
+def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (ADC) — the memory-bound half of a FAISS-style IVF-PQ index: the
     corpus is stored as 8-bit PQ codes; each query precomputes a
@@ -627,26 +627,13 @@ def _pq_adc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         members, queries, k=5 * _ADC_SHORTLIST, query_id_col="query_id"
     ).select("query_id", "neighbor_id", "cos")
     w_rank = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    out = (
+    return (
         shortlist.join(cos_all, ["query_id", "neighbor_id"])
         .withColumn("rank", F.row_number().over(w_rank).cast("int"))
         .where(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cos", "rank")
         .orderBy("query_id", "rank")
     )
-    return out
-
-
-@register(
-    "ann_pq_adc",
-    tags=("llm", "ann", "pq", "quantization"),
-    oracle=_pq_adc_oracle(),
-)
-def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered wrapper around :func:`_pq_adc_plan` (the plan itself
-    is audited pre-materialization in tests/test_plan_audits.py; the
-    entry materializes at bounded shuffle width for the driver)."""
-    return materialize_bounded(_pq_adc_plan(spark, sf_dir))
 
 
 # ------------------------------------------------------- semantic dedup
@@ -779,7 +766,7 @@ def dedup_semantic_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("long")
-    return materialize_bounded(
+    return (
         assigned.join(losers, assigned["vec_id"] == losers["id_b"], "left")
         .groupBy("cluster")
         .agg(
@@ -985,11 +972,13 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = W.partitionBy("query_id").orderBy(
             F.desc("cos"), F.col("neighbor_id")
         )
-        return materialize_bounded(
+        # lifetime: the index files are read before out_dir is removed
+        return (
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= 5)
             .select("query_id", "neighbor_id", "cos", "rank")
             .orderBy("query_id", "rank")
+            .localCheckpoint()
         )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

@@ -236,8 +236,8 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     before the first (an unset key is unset again). Nested scopes on one
     thread therefore restore LIFO, and scopes overlapping on different
     threads (the async query pool) neither flip a sibling's value nor
-    leak their own. Used by iterative operators, fixture-bounded catalog
-    entries and eager reference-dialect SQL."""
+    leak their own. Used by iterative operators and eager
+    reference-dialect SQL."""
     token = object()
     opened: list[tuple[tuple[str, str], str]] = []
     with _CONF_LOCK:
@@ -394,33 +394,6 @@ def local_frame(spark: SparkSession, rows, schema) -> "DataFrame":
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
-
-
-def materialize_bounded(df: DataFrame) -> "DataFrame":
-    """Eagerly execute a FIXTURE-BOUNDED plan at cluster-parallelism
-    shuffle width and return the materialized (localCheckpoint'd)
-    result.
-
-    Catalog entries whose output is small by construction (bounded
-    candidate sets, top-k, drained streams) call this so their many-stage
-    pipelines run under entry-appropriate shuffle sizing even on the
-    correctness driver's plain 200-partition session; the operator
-    functions themselves stay declarative and inherit the session width
-    at production scale. Row order is preserved by the checkpoint, so a
-    trailing orderBy survives.
-
-    Unlike the iterative loops (loop_shuffle_confs), AQE stays ON here:
-    one-shot pipelines keep their runtime broadcast-join conversions and
-    skew splitting — only the shuffle width is narrowed (measured: LSH
-    bucket joins regress 2-3x without AQE's broadcast conversion)."""
-    spark = df.sparkSession
-    confs = {
-        "spark.sql.shuffle.partitions": str(
-            spark.sparkContext.defaultParallelism
-        )
-    }
-    with scoped_conf(spark, confs):
-        return df.localCheckpoint()
 
 
 def spread_to_cores(df: DataFrame) -> "DataFrame":

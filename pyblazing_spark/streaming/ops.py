@@ -303,79 +303,6 @@ def interval_join_streams(
     return v.join(p, cond, how)
 
 
-def transform_with_state_totals(stream: DataFrame) -> DataFrame:
-    """Per-user running totals via Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (typed state
-    variables, timers, TTL; requires the RocksDB state-store provider).
-
-    ENVIRONMENT-BLOCKED in this container (probed 2026-08-15, round 9):
-    the API's state-server protocol imports ``google.protobuf`` in the
-    Python worker, which is not installed (and installs are not
-    permitted), so the query crashes with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE before the first
-    micro-batch. The processor below is the full working shape — on an
-    environment with protobuf it is semantically identical to
-    :func:`stateful_user_totals` (whose applyInPandasWithState path IS
-    executable here and driver-verified via stream_stateful_totals);
-    ``tests/test_streaming.py::test_transform_with_state_totals`` runs
-    it when protobuf imports and skips otherwise."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env probe
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf in the "
-            "Python env (absent from this container); use "
-            "stateful_user_totals (applyInPandasWithState) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark = stream.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def session_timeout_stream(
     stream: DataFrame, gap_minutes: int = 30, watermark: str = "1 hour"
 ) -> DataFrame:

@@ -278,16 +278,6 @@ def test_audio_features_real_wav(spark):
     assert r.rms == pytest.approx(0.5, abs=1e-6)
 
 
-def test_read_binary_dir_reads_real_files(spark, tmp_path):
-    p = tmp_path / "media"
-    p.mkdir()
-    payload = bytes(range(256))
-    (p / "a.bin").write_bytes(payload)
-    (p / "b.bin").write_bytes(payload * 2)
-    out = {r.length: bytes(r.content) for r in MM.read_binary_dir(spark, str(p)).collect()}
-    assert out[256] == payload and out[512] == payload * 2
-
-
 def test_resize_image_p6_matches_numpy_slicing(spark):
     """resize_image on a color P6: every 2nd row/col of each channel,
     verified against direct numpy slicing of the source pixels."""

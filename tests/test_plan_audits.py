@@ -433,9 +433,7 @@ def test_pq_adc_scoring_is_a_broadcast_lut_join(spark, sf_dir):
     against the broadcast query LUT — no Exchange may carry the embedding
     vectors (the corpus bulk); only the tiny shortlist re-rank touches
     them again."""
-    from pyblazing_spark.plans.vectors import _pq_adc_plan
-
-    df = _pq_adc_plan(spark, sf_dir)
+    df = plans.REGISTRY["ann_pq_adc"].fn(spark, sf_dir)
     assert "BroadcastHashJoin" in _executed_plan(df)
     for inp in _exchange_inputs(df):
         assert "embedding#" not in inp, inp
@@ -840,9 +838,7 @@ def test_temperature_mix_fact_path_is_broadcast_only(spark, sf_dir):
     the per-source thresholds by BROADCAST only — no SortMergeJoin, no
     shuffle of document rows besides the tiny per-source aggregations
     (at 100 TB the membership test must stay a scan-stage predicate)."""
-    from pyblazing_spark.plans.sampling import temperature_mix_plan
-
-    df = temperature_mix_plan(spark, sf_dir)
+    df = plans.REGISTRY["sample_temperature_mix"].fn(spark, sf_dir)
     plan = _executed_plan(df).split("== Initial Plan ==")[0]
     assert "SortMergeJoin" not in plan, plan[:2000]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, (

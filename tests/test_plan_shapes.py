@@ -11,9 +11,13 @@ into a JVM-only pipeline, or a broadcast join degrading to
 sort-merge. Bounds are UPPER bounds (<=) so AQE run-to-run variance
 can only make plans better, never quietly worse.
 
-``ann_cosine_topk`` records zeros because the entry returns a
-``materialize_bounded`` result (LocalTableScan); its kernel plan is
-audited separately in test_plan_audits.py.
+Entries return their lazy plans, so the counts are those of the
+kernels. Only entries that must materialize before returning (their
+inputs live in a temp dir removed on exit) record zeros: their final
+plan is the checkpoint's scan.
+
+``EXPECTED_JOBS`` caps the Spark jobs one collect of an entry runs,
+eager construction jobs included.
 """
 
 from __future__ import annotations
@@ -33,7 +37,9 @@ EXPECTED_SHAPES: dict[str, dict[str, int]] = {
     "events_sessionize": dict(exch=1, scans=1, py=0, smj=0),
     "text_stats": dict(exch=2, scans=1, py=0, smj=0),
     "dedup_minhash_lsh": dict(exch=8, scans=2, py=0, smj=0),
-    "ann_cosine_topk": dict(exch=0, scans=0, py=0, smj=0),
+    # ann_cosine_topk: one corpus scan into the top-k kernel; exchanges =
+    # the per-query window + final sort.
+    "ann_cosine_topk": dict(exch=2, scans=1, py=0, smj=0),
     "multimodal_features": dict(exch=1, scans=1, py=0, smj=0),
     "win_running_sum": dict(exch=1, scans=1, py=0, smj=0),
     # round-8 bench additions (r7 verdict #8): shapes recorded at entry
@@ -54,29 +60,38 @@ EXPECTED_SHAPES: dict[str, dict[str, int]] = {
     # agg_equidepth_histogram: two-phase global_ntile (range-bucket ids
     # + local ranks + broadcast offsets) then the bucket rollup.
     "agg_equidepth_histogram": dict(exch=6, scans=2, py=0, smj=0),
-    # source_avro_roundtrip materializes via localCheckpoint
-    # (LocalTableScan) like ann_cosine_topk; the I/O path is audited by
-    # its oracle + tests/test_avro.py instead.
+    # the two avro entries checkpoint before their temp dir is removed
+    # (LocalTableScan); the I/O path is audited by their oracles and
+    # tests/test_avro.py instead.
     "source_avro_roundtrip": dict(exch=0, scans=0, py=0, smj=0),
-    # round-10 bench additions: both materialize via localCheckpoint
-    # (bpe: materialize_bounded; avro split: checkpoint before the temp
-    # dir disappears) — I/O and kernel shapes are audited by their
-    # oracles, tests/test_avro.py, and test_plan_audits instead.
-    "text_bpe_encode": dict(exch=0, scans=0, py=0, smj=0),
     "source_avro_split_scan": dict(exch=0, scans=0, py=0, smj=0),
-    # round-11 bench addition: materializes via materialize_bounded; the
-    # one-pass Aho-Corasick scan shape is covered by the operator tests
-    # and the oracle instead.
-    "text_multi_keyword_tag": dict(exch=0, scans=0, py=0, smj=0),
-    # round-12 bench addition: materializes via materialize_bounded; the
-    # vocab pass / piece aggregation / Viterbi kernel shapes are covered
-    # by the oracle and tests/test_unigram.py instead.
-    "text_unigram_tokenize": dict(exch=0, scans=0, py=0, smj=0),
-    # round-14 bench addition (txn-family perf tracker): materializes
-    # via materialize_bounded; the property that matters — manifest
-    # prune actually skipping files — is asserted INSIDE the entry
-    # (raises on a no-skip read) and in tests/test_txn_table.py.
+    # text_bpe_encode: the corpus is checkpointed once inside the entry
+    # (no parquet scan left); the encode UDF is the one Python boundary;
+    # exchanges = the (token, word) and token aggregations (the top-20 is
+    # a TakeOrderedAndProject).
+    "text_bpe_encode": dict(exch=2, scans=0, py=1, smj=0),
+    # text_multi_keyword_tag: one corpus scan through the Aho-Corasick
+    # kernel; exchanges = per-keyword aggregation, its broadcast onto the
+    # keyword list, final sort.
+    "text_multi_keyword_tag": dict(exch=3, scans=1, py=0, smj=0),
+    # text_unigram_tokenize: the Viterbi frame reads the checkpointed
+    # word vocabulary (no parquet scan left); exchanges = the
+    # (wlen, n_pieces) aggregation + final sort.
+    "text_unigram_tokenize": dict(exch=2, scans=0, py=0, smj=0),
+    # txn_data_skipping checkpoints before its temp tables are removed;
+    # the property that matters — manifest prune actually skipping files
+    # — is asserted INSIDE the entry (raises on a no-skip read) and in
+    # tests/test_txn_table.py.
     "txn_data_skipping": dict(exch=0, scans=0, py=0, smj=0),
+}
+
+#: name -> ceiling on the jobs one ``fn(spark, sf_dir).toPandas()`` runs
+#: once the session has cached the tables' schemas.
+EXPECTED_JOBS: dict[str, int] = {
+    "ann_cosine_topk": 5,
+    "text_bpe_encode": 6,
+    "text_multi_keyword_tag": 5,
+    "text_unigram_tokenize": 8,
 }
 
 
@@ -109,3 +124,20 @@ def test_bench_plan_shape_has_not_regressed(spark, sf_dir, name):
         assert got[key] <= ceiling, (
             f"{name}: {key}={got[key]} exceeds shipped ceiling {ceiling}\n{p}"
         )
+
+
+@pytest.mark.parametrize("name", sorted(EXPECTED_JOBS))
+def test_bench_entry_job_count_has_not_regressed(spark, sf_dir, name):
+    fn = plans.REGISTRY[name].fn
+    fn(spark, sf_dir).toPandas()  # warm the per-session table-schema cache
+    sc = spark.sparkContext
+    group = f"job-count-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, sf_dir).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got <= EXPECTED_JOBS[name], (
+        f"{name}: {got} jobs exceeds shipped ceiling {EXPECTED_JOBS[name]}"
+    )

@@ -6,6 +6,8 @@ the regular gate so dialect-shim regressions surface immediately)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -13,6 +15,7 @@ from pyblazing_spark.context import BlazingContext
 from scripts.reference_replay import (
     NEGATIVE_TESTS,
     ORACLE_DIALECT_SKIP,
+    SUITE_DIR,
     _compare,
     _patch_oracle_sql,
     load_corpus,
@@ -20,6 +23,12 @@ from scripts.reference_replay import (
     register_fixtures,
     runnable,
 )
+
+if not os.path.isdir(SUITE_DIR):
+    pytest.skip(
+        f"reference e2e corpus absent: {SUITE_DIR} does not exist",
+        allow_module_level=True,
+    )
 
 
 def _sample():

@@ -156,45 +156,6 @@ def test_late_filter_lags_eviction_by_one_batch(spark, tmp_path):
     assert out == [], out
 
 
-def test_transform_with_state_totals(spark, sf_dir):
-    """transformWithStateInPandas route: executable only where
-    google.protobuf exists (the API's state-server protocol needs it);
-    this container lacks it, so the op must fail with the DESCRIPTIVE
-    ImportError (not a mid-query crash), and on protobuf-equipped
-    environments the drained result must equal the batch group-by."""
-    import pytest
-
-    from pyblazing_spark.streaming.ops import (
-        read_events_stream,
-        run_available_now,
-        transform_with_state_totals,
-    )
-
-    stream = read_events_stream(spark, sf_dir)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            transform_with_state_totals(stream)
-        pytest.skip("google.protobuf absent — transformWithState env-blocked")
-    out = run_available_now(transform_with_state_totals(stream), output_mode="update")
-    from pyspark.sql import functions as F
-
-    final = out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("total_value", "n_events").alias("total_value"),
-    )
-    from pyblazing_spark.sources.tables import load_table
-
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    assert final.exceptAll(batch).count() == 0 and batch.exceptAll(final).count() == 0
-
-
 def test_session_timeout_stream_timer_and_gap_paths(spark, tmp_path):
     """Pins BOTH closure paths of the timer sessionizer across three
     controlled batches: an in-batch gap split emits immediately; a
