@@ -4,7 +4,8 @@
 a quarter of RAM; $SPARK_GRAFT_CPUS overrides the core count) and print
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": <float>,
-"host": {"cores", "ram_mb", "driver_heap"}, ...}.
+"host": {"cores", "ram_mb", "driver_heap"},
+"codegen_compiles": {name: classes compiled during the timed reps}, ...}.
 
 Headline set = every QuerySpec registered with ``bench=True`` (TPC-H core
 shapes + window + count-distinct + sessionization + the LLM dedup/ANN/
@@ -285,7 +286,7 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyblazing_spark.session import get_spark, host_ram_mb
+    from pyblazing_spark.session import codegen_compiles, get_spark, host_ram_mb
 
     spark = get_spark(app_name="pyblazing_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -318,13 +319,19 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name in sorted(qs):
-        # warm THIS query's codegen immediately before timing it (a
-        # single distant warm pass lets later compilations evict earlier
-        # cache entries, re-billing the JIT).
+        # warm THIS query at the smallest SF before timing it: its first
+        # run compiles its generated classes outside the timed reps. The
+        # codegen cache holds the whole bench set, so nothing evicts them
+        # later and the warm's position no longer matters; it stays per
+        # query so the control leg, which warms the same way, stays
+        # comparable. ``compiles`` records what the reps still compile.
         if warm_dir is not None:
             qs[name](spark, warm_dir).collect()
+        c0 = codegen_compiles(spark)
         spreads[name] = timed_runs(qs[name], spark, sf_dir, reps)
+        compiles[name] = codegen_compiles(spark) - c0
         timings[name] = trimmed_median(spreads[name])
 
     # Free this process's JVM before the control subprocess starts its
@@ -381,6 +388,7 @@ def main() -> None:
             "sf": sf,
             "warm_dir": warm_dir or "none (no sibling sf0.001; per-query warm pass skipped)",
             "host": host,
+            "codegen_compiles": compiles,
             **control,
             **extra,
         }

@@ -11,7 +11,9 @@ count, column names, order-insensitive value compare.
 
 The session is deliberately PLAIN (not ``session.get_spark``): the
 correctness driver builds its own, so the engine must work without our
-build-time confs. Only its core count follows the host.
+build-time confs (among them the 4096-class generated-code cache: here
+Spark's 100 applies, and entry timings include recompiles). Only its
+core count follows the host.
 """
 
 from __future__ import annotations
