@@ -6,15 +6,13 @@ composed purely from DataFrame primitives so Catalyst plans them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyblazing_spark.operators.global_window import _range_bucket
+from pyblazing_spark.operators.global_window import global_prefix_max
 
 
-def pareto_frontier_2d(
-    pts: DataFrame, min_col: str, max_col: str, partitions: int = 32
-) -> DataFrame:
+def pareto_frontier_2d(pts: DataFrame, min_col: str, max_col: str) -> DataFrame:
     """Skyline over distinct (min_col, max_col) points: minimize the
     first, maximize the second; a point survives iff no other point is
     <= on the minimized axis AND >= on the maximized axis with at least
@@ -23,44 +21,29 @@ def pareto_frontier_2d(
     Sweep formulation: in (min_col asc, max_col desc) order a point
     survives iff its max_col strictly exceeds the running maximum over
     all strictly-preceding points. O(n log n), no pairwise comparison —
-    and the sweep is TWO-PHASE, never one global window task:
+    and the running maximum is the two-phase
+    :func:`pyblazing_spark.operators.global_window.global_prefix_max`,
+    never one global window task:
 
-    1. deterministic range-bucketing on min_col (same sampled-boundary
-       machinery as operators/global_window; equal min_col values land
-       in one bucket, so every row in an earlier bucket strictly
+    1. deterministic range-bucketing on min_col (equal min_col values
+       land in one bucket, so every row in an earlier bucket strictly
        precedes every row in a later one);
     2. per-bucket local running max (``Window.partitionBy(bucket)``);
-    3. a ≤``partitions``-row broadcast of each bucket's prefix max —
-       the cross-bucket part of the running maximum.
+    3. each bucket's max over the earlier buckets, collected once and
+       folded into the plan as a literal — the cross-bucket part of the
+       running maximum.
 
-    The global running max is greatest(local, earlier-bucket prefix);
-    equality with the serial single-window sweep is pinned in
+    The data path is exchange → sort → window → filter; equality with
+    the serial single-window sweep is pinned in
     tests/test_analytics_property.py.
     """
     distinct = pts.select(min_col, max_col).distinct()
-    tagged = distinct.withColumn(
-        "__pid", _range_bucket(distinct, [min_col], partitions)
+    swept = global_prefix_max(
+        distinct, [min_col, F.desc(max_col)], max_col, "__run_max"
     )
-    local_w = (
-        W.partitionBy("__pid")
-        .orderBy(F.asc(min_col), F.desc(max_col))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = tagged.withColumn("__lmax", F.max(max_col).over(local_w))
-    off_w = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = (
-        tagged.groupBy("__pid")
-        .agg(F.max(max_col).alias("__bmax"))
-        .select("__pid", F.max("__bmax").over(off_w).alias("__omax"))
-    )
-    merged = local.join(F.broadcast(offsets), "__pid").withColumn(
-        # greatest() skips NULLs: first row of the first bucket sees NULL
-        "__run_max",
-        F.greatest(F.col("__lmax"), F.col("__omax")),
-    )
-    return merged.where(
+    return swept.where(
         F.col("__run_max").isNull() | (F.col(max_col) > F.col("__run_max"))
-    ).drop("__pid", "__lmax", "__omax", "__run_max")
+    ).drop("__run_max")
 
 
 def pagerank(

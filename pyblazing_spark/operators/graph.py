@@ -17,9 +17,9 @@ Scale design (the round-2 weak spot, now fixed):
 
 - every round's labels are ``persist``ed and the predecessor is
   unpersisted, so round *i* never re-executes rounds 1..*i-1*;
-- every ``checkpoint_interval`` rounds the labels are
-  ``localCheckpoint``ed (eager), truncating the logical plan so the DAG
-  stays O(interval) deep regardless of diameter;
+- every third round the labels are ``localCheckpoint``ed (eager),
+  truncating the logical plan so the DAG stays O(interval) deep
+  regardless of diameter;
 - convergence is a single aggregation on the new labels, not a
   new-vs-old join: min-label propagation only ever DECREASES labels,
   so sum(label) is strictly monotone non-increasing and
@@ -93,7 +93,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_interval: int = 3,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; component = min node
@@ -114,8 +113,8 @@ def connected_components(
     spark = edges.sparkSession
     # one ckpt call per round, so make_ckpt's call-counted interval is
     # the round interval: persist (lineage kept, anchored at the last
-    # truncation) between, truncate every checkpoint_interval-th round.
-    ckpt = make_ckpt(spark, checkpoint_dir, ckpt_interval=checkpoint_interval)
+    # truncation) between, truncate every third round.
+    ckpt = make_ckpt(spark, checkpoint_dir, ckpt_interval=3)
     # The per-round (node,label) shuffles are sized to CLUSTER
     # PARALLELISM for the loop's duration (see loop_shuffle_confs) —
     # inheriting a fact-table-width spark.sql.shuffle.partitions makes

@@ -299,7 +299,6 @@ def kmeans_lloyd(
     iterations: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_every: int = 4,
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, np.ndarray, list[float]]:
     """Full distributed Lloyd k-means: ``iterations`` rounds of
@@ -317,15 +316,15 @@ def kmeans_lloyd(
     :func:`centroid_assign_with_dist`): one map-only assignment pass +
     one k x dim partial-sum shuffle; assignments are ``persist``ed and
     the predecessor unpersisted so round *i* never re-executes rounds
-    1..i-1, with a ``localCheckpoint`` every ``checkpoint_every``
-    rounds truncating the lineage (the connected-components lesson —
+    1..i-1, with a ``localCheckpoint`` every fourth round truncating
+    the lineage (the connected-components lesson —
     ``operators/graph.py``). The driver holds only k x dim floats.
     Clusters that empty out between rounds die (no phantom zero-vector
     centroids — see :func:`centroid_means`)."""
     spark = df.sparkSession
-    # one ckpt call per round: persist between, truncate every
-    # checkpoint_every-th round.
-    ckpt = make_ckpt(spark, checkpoint_dir, ckpt_interval=checkpoint_every)
+    # one ckpt call per round: persist between, truncate every fourth
+    # round.
+    ckpt = make_ckpt(spark, checkpoint_dir, ckpt_interval=4)
     # Round shuffles (k x dim partial sums) are sized to cluster
     # parallelism for the loop, not the session's fact-table shuffle
     # width — same rationale as operators/graph.py; restored on exit.

@@ -1228,18 +1228,16 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a global ntile is an unpartitioned window — one task — so
     this entry runs the two-phase
     :func:`pyblazing_spark.operators.global_window.global_ntile`
-    (deterministic range buckets + local ranks + broadcast prefix
-    offsets, the closed-form ntile remainder split) and the oracle is
-    DuckDB's NATIVE ntile: the scalable rewrite must equal the
+    (deterministic range buckets + local ranks + prefix offsets folded
+    in as literals, the closed-form ntile remainder split) and the
+    oracle is DuckDB's NATIVE ntile: the scalable rewrite must equal the
     single-task semantics exactly, remainders included."""
     from pyblazing_spark.operators.global_window import global_ntile
 
     li = T(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("price"), "l_orderkey", "l_linenumber"
     )
-    b = global_ntile(
-        li, ["price", "l_orderkey", "l_linenumber"], 8, out_col="bucket"
-    )
+    b = global_ntile(li, [(["price", "l_orderkey", "l_linenumber"], 8, "bucket")])
     return (
         b.groupBy(F.col("bucket").cast("long").alias("bucket"))
         .agg(

@@ -1230,19 +1230,16 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     users-sized (three-long) rows. The oracle uses plain ntile, proving
     the two-phase form exact.
 
-    Plan notes (r14/r15): the per-user frame is eagerly materialized
-    once (fact scanned exactly once; RDD-keyed per invocation, no
-    cross-run caching) and the global max timestamp folds into a
-    literal from a 1-row bounded collect. r15: the three quartiles run
-    through ONE fused :func:`global_ntile_multi` call — one
-    percentile-sketch job boundary-scoring all three metrics, one
-    counts collect marginalized driver-side, three Window stages in one
-    linear plan — instead of the r14 chain of three single ntiles with
-    a materialization between each (2 driver jobs + a checkpoint per
-    stage; 23 jobs/run → 16 measured — the remaining jobs are the
-    per-user materialization, the fused sketch + counts pair, and the
-    consumer aggregation's AQE stages)."""
-    from pyblazing_spark.operators.global_window import global_ntile_multi
+    Plan notes: the per-user frame is eagerly materialized once (fact
+    scanned exactly once; RDD-keyed per invocation, no cross-run
+    caching) and the global max timestamp folds into a literal from a
+    1-row bounded collect. The three quartiles run through ONE
+    :func:`global_ntile` call — one percentile-sketch job for all three
+    metrics, one counts collect marginalized driver-side, three Window
+    stages in one linear plan (15 jobs a run: the per-user
+    materialization, the max-ts collect, the sketch + counts pair, and
+    the consumer aggregation's AQE stages)."""
+    from pyblazing_spark.operators.global_window import global_ntile
 
     ev = T(spark, sf_dir, "events")
     purch = ev.where(F.col("event_type") == "purchase")
@@ -1269,7 +1266,7 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "freq",
         "money",
     )
-    scored = global_ntile_multi(
+    scored = global_ntile(
         per_user,
         [
             (["recency_s", "user_id"], 4, "r_score"),

@@ -1061,15 +1061,15 @@ def pipeline_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and engine-independent).
 
     The prefix sum runs on the SCALE path
-    (:func:`pyblazing_spark.operators.global_window.global_running_sum`,
+    (:func:`pyblazing_spark.operators.global_window.global_prefix_stats`,
     two-phase range-bucketed) — packing 100 TB of documents never
     serializes into one task. The oracle computes the same spec with a
     serial SQL window."""
-    from pyblazing_spark.operators.global_window import global_running_sum
+    from pyblazing_spark.operators.global_window import global_prefix_stats
 
     docs = T(spark, sf_dir, "documents")
     t = docs.select("doc_id", TXT.token_count(F.col("text")).alias("__tok"))
-    c = global_running_sum(t, ["doc_id"], "__tok", out_col="__cum")
+    c = global_prefix_stats(t, ["doc_id"], "__tok", sum_col="__cum")
     return (
         c.select(
             "doc_id",
@@ -2995,9 +2995,9 @@ def pipeline_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-mix owner reads to pick a filter threshold ("dropping the
     bottom 3 deciles costs X% of tokens"). The global decile split uses
     the two-phase :func:`pyblazing_spark.operators.global_window.global_ntile`
-    (range-bucket + per-bucket window + ≤32-row offset broadcast), never
-    an unpartitioned ntile window; the oracle's plain ntile proves the
-    parallel form computes the identical split. Scores are rounded to
+    (range-bucket + per-bucket window + ≤32 prefix offsets folded in as
+    literals), never an unpartitioned ntile window; the oracle's plain
+    ntile proves the parallel form computes the identical split. Scores are rounded to
     4dp by quality_score itself, so the order key is discrete and the
     (score, doc_id) tie-break is engine-stable.
 
@@ -3018,7 +3018,7 @@ def pipeline_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    d = global_ntile(docs, ["score", "doc_id"], 10, out_col="decile")
+    d = global_ntile(docs, [(["score", "doc_id"], 10, "decile")])
     return (
         d.groupBy("decile")
         .agg(

@@ -763,10 +763,10 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bucket assignment is the two-phase `global_ntile`
     (operators/global_window.py): deterministic range-bucketing, a
-    per-bucket local window, and a ≤32-row broadcast of prefix offsets
-    + total — never an unpartitioned `ntile` window (that collapses the
-    whole table into ONE task; oracle still uses plain ntile, proving
-    the parallel form computes the identical split)."""
+    per-bucket local window, and ≤32 prefix offsets + the total folded
+    in as literals — never an unpartitioned `ntile` window (that
+    collapses the whole table into ONE task; oracle still uses plain
+    ntile, proving the parallel form computes the identical split)."""
     li = T(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey % 256 AS zx",
         "l_suppkey % 256 AS zy",
@@ -774,7 +774,7 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     )
-    b = global_ntile(li, ["zcode", "l_orderkey", "l_linenumber"], 16, out_col="bucket")
+    b = global_ntile(li, [(["zcode", "l_orderkey", "l_linenumber"], 16, "bucket")])
     return (
         b.groupBy("bucket")
         .agg(

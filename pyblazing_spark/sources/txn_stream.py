@@ -52,8 +52,10 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 from typing import Iterator, Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -67,6 +69,14 @@ from pyspark.sql.types import (
 )
 
 from pyblazing_spark.sources.txn_table import _LOG_DIR, _V_FMT
+
+# Spark plans a Python stream source in its own Python process, which
+# does not see the package zip that session._ship_package adds with
+# addPyFile: a source pickled by reference fails there with
+# ModuleNotFoundError whenever the driver's working directory is not the
+# repo root. Pickled by value, the source carries its own code and the
+# two log-layout constants above.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _log_entries(path: str, lo: int, hi: int) -> list[dict]:

@@ -89,9 +89,9 @@ def test_pagerank_matches_dense_reference(spark, edges):
 
 
 def test_pareto_sweep_window_is_partitioned(spark, sf_dir):
-    """The frontier sweep must never plan an unpartitioned window over
-    the data path — only the ≤32-row per-bucket prefix-max window may
-    be global (it orders by __pid alone)."""
+    """The frontier sweep must never plan an unpartitioned window: every
+    window partitions by the range-bucket id, and the earlier buckets'
+    maxima arrive as literals, not through a join."""
     from pyblazing_spark.sources.tables import load_table
 
     part = load_table(spark, sf_dir, "part").select(
@@ -101,11 +101,12 @@ def test_pareto_sweep_window_is_partitioned(spark, sf_dir):
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    assert "Join" not in plan, plan
     data_windows = [
         l for l in plan.splitlines() if "windowspecdefinition" in l and "x#" in l
     ]
     assert data_windows, plan
-    for line in data_windows:
+    for line in [l for l in plan.splitlines() if "windowspecdefinition" in l]:
         assert "__pid" in line, f"unpartitioned sweep window: {line}"
 
 

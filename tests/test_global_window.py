@@ -11,11 +11,12 @@ from pyblazing_spark.operators import global_window as GW
 from pyblazing_spark.sources.tables import load_table
 
 
-def test_global_row_number_matches_single_partition(spark, sf_dir):
+def test_global_row_number_matches_single_partition(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     got = {
         r.event_id: r.rn
-        for r in GW.global_row_number(ev, ["ts", "event_id"], partitions=8).collect()
+        for r in GW.global_prefix_stats(ev, ["ts", "event_id"]).collect()
     }
     exp = {
         r.event_id: r.rn
@@ -28,15 +29,16 @@ def test_global_row_number_matches_single_partition(spark, sf_dir):
     assert sorted(got.values()) == list(range(1, len(got) + 1))
 
 
-def test_global_row_number_window_is_partitioned(spark, sf_dir):
+def test_global_row_number_window_is_partitioned(spark, sf_dir, monkeypatch):
     """The heavy per-row window must be keyed on the range-partition id
     (never an empty partition spec, which would serialize onto one task
     — AQE may still coalesce tiny test data, so assert on the plan)."""
     import io
     from contextlib import redirect_stdout
 
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     ev = load_table(spark, sf_dir, "events")
-    out = GW.global_row_number(ev, ["ts", "event_id"], partitions=8)
+    out = GW.global_prefix_stats(ev, ["ts", "event_id"])
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.explain("formatted")
@@ -47,11 +49,12 @@ def test_global_row_number_window_is_partitioned(spark, sf_dir):
         assert "__pid" in line, line
 
 
-def test_global_running_sum_matches_single_partition(spark, sf_dir):
+def test_global_running_sum_matches_single_partition(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     got = {
         r.event_id: round(r.running_sum, 6)
-        for r in GW.global_running_sum(ev, ["ts", "event_id"], "value", partitions=8).collect()
+        for r in GW.global_prefix_stats(ev, ["ts", "event_id"], "value").collect()
     }
     exp_w = W.orderBy("ts", "event_id").rowsBetween(W.unboundedPreceding, W.currentRow)
     exp = {
@@ -63,16 +66,17 @@ def test_global_running_sum_matches_single_partition(spark, sf_dir):
         assert abs(got[k] - exp[k]) < 1e-4, k
 
 
-def test_global_ntile_matches_single_partition(spark, sf_dir):
+def test_global_ntile_matches_single_partition(spark, sf_dir, monkeypatch):
     """global_ntile must reproduce ntile's exact remainder split (the
     first n-mod-k buckets take one extra row) for awkward sizes: k does
     not divide n, n < k, and n == k."""
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     for k, limit in ((7, None), (16, 10), (5, 5)):
         sub = ev if limit is None else ev.orderBy("event_id").limit(limit)
         got = {
             r.event_id: r.bucket
-            for r in GW.global_ntile(sub, ["ts", "event_id"], k, partitions=8).collect()
+            for r in GW.global_ntile(sub, [(["ts", "event_id"], k, "bucket")]).collect()
         }
         exp = {
             r.event_id: r.b
@@ -83,7 +87,7 @@ def test_global_ntile_matches_single_partition(spark, sf_dir):
         assert got == exp, f"k={k} limit={limit}"
 
 
-def test_global_two_phase_property(spark):
+def test_global_two_phase_property(spark, monkeypatch):
     """Property check over adversarial key distributions — duplicates,
     negatives, all-equal runs, sizes around the partition count — the
     exact shapes that stress deterministic boundary sampling: every
@@ -101,6 +105,7 @@ def test_global_two_phase_property(spark):
         ]
         df = spark.createDataFrame(rows, "id long, k long, v double")
         parts = rnd.choice([2, 5, 32])
+        monkeypatch.setattr(GW, "_PARTITIONS", parts)
         order = ["k", "id"]
 
         serial_rn = {
@@ -111,7 +116,7 @@ def test_global_two_phase_property(spark):
         }
         got_rn = {
             r.id: r.rn
-            for r in GW.global_row_number(df, order, partitions=parts).collect()
+            for r in GW.global_prefix_stats(df, order).collect()
         }
         assert got_rn == serial_rn, f"rn trial={trial} n={n} parts={parts}"
 
@@ -122,7 +127,7 @@ def test_global_two_phase_property(spark):
         }
         got_nt = {
             r.id: r.bucket
-            for r in GW.global_ntile(df, order, k, partitions=parts).collect()
+            for r in GW.global_ntile(df, [(order, k, "bucket")]).collect()
         }
         assert got_nt == serial_nt, f"ntile trial={trial} n={n} k={k}"
 
@@ -137,7 +142,7 @@ def test_global_two_phase_property(spark):
         }
         got_sum = {
             r.id: round(r.running_sum, 6)
-            for r in GW.global_running_sum(df, order, "v", partitions=parts).collect()
+            for r in GW.global_prefix_stats(df, order, "v").collect()
         }
         assert got_sum == serial_sum, f"sum trial={trial}"
 
@@ -149,6 +154,7 @@ def test_global_two_phase_property(spark):
 
     from pyblazing_spark.session import local_frame
 
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     t0 = dt.datetime(2021, 3, 4, 5, 6, 7, 891011)
     domains = {
         "string": ["it's", "back\\slash", "naïve", "日本語", "", "a'\\'b", "z"],
@@ -162,7 +168,7 @@ def test_global_two_phase_property(spark):
         rows = [(i, rnd.choice(dom), rnd.randrange(-8, 8) / 4) for i in range(400)]
         df = local_frame(spark, rows, f"id long, k {ktype}, v double").repartition(4)
         order = ["k", "id"]
-        pid = GW._range_bucket(df, order, partitions=8)
+        pid = GW._pid_expr(df, "k", GW._boundaries(df, ["k"])["k"])
         assert df.select(pid.alias("p")).distinct().count() > 1, ktype
 
         serial = df.select(
@@ -174,11 +180,12 @@ def test_global_two_phase_property(spark):
             .alias("s"),
         )
         exp = {r.id: (r.rn, r.b, r.s) for r in serial.collect()}
-        got_rn = {r.id: r.rn for r in GW.global_row_number(df, order, partitions=8).collect()}
-        got_nt = {r.id: r.bucket for r in GW.global_ntile(df, order, 6, partitions=8).collect()}
-        got_sum = {
-            r.id: r.running_sum
-            for r in GW.global_running_sum(df, order, "v", partitions=8).collect()
+        got_rn, got_sum = {}, {}
+        for r in GW.global_prefix_stats(df, order, "v").collect():
+            got_rn[r.id], got_sum[r.id] = r.rn, r.running_sum
+        got_nt = {
+            r.id: r.bucket
+            for r in GW.global_ntile(df, [(order, 6, "bucket")]).collect()
         }
         assert got_rn == {i: e[0] for i, e in exp.items()}, f"rn {ktype}"
         assert got_nt == {i: e[1] for i, e in exp.items()}, f"ntile {ktype}"
@@ -216,12 +223,13 @@ def test_ranked_topk_plans_as_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_range_bucket_huge_int64_with_nulls(spark):
+def test_range_bucket_huge_int64_with_nulls(spark, monkeypatch):
     """Boundary sampling must keep int64 keys EXACT when NULLs are
     present (ADVICE r5 #3: toPandas coerced nullable int64 to float64,
     losing precision above 2^53 and shifting boundary literals). The
-    Arrow path keeps adjacent huge keys distinct, so global_row_number
-    still matches the serial window exactly."""
+    Arrow path keeps adjacent huge keys distinct, so the global row
+    number still matches the serial window exactly."""
+    monkeypatch.setattr(GW, "_PARTITIONS", 8)
     base = 2**60
     rows = [(i, base + i if i % 7 else None) for i in range(400)]
     df = spark.createDataFrame(rows, "id bigint, k bigint").repartition(8)
@@ -233,10 +241,43 @@ def test_range_bucket_huge_int64_with_nulls(spark):
     }
     got = {
         r.id: r.rn
-        for r in GW.global_row_number(df, ["k", "id"], partitions=8).collect()
+        for r in GW.global_prefix_stats(df, ["k", "id"]).collect()
     }
     assert got == serial
     # and the boundary literals themselves are exact integers > 2^53
-    pid = GW._range_bucket(df, ["k", "id"], partitions=8)
+    pid = GW._pid_expr(df, "k", GW._boundaries(df, ["k"])["k"])
     n_buckets = df.select(pid.alias("p")).distinct().count()
     assert n_buckets > 1  # sampling produced real, distinct boundaries
+
+
+def test_cross_bucket_prefixes_live_in_one_module():
+    """Guard: how earlier buckets' totals reach a row is decided once,
+    in operators/global_window.py. Any other module importing its
+    private helpers or building a ``__pid`` column of its own would make
+    that decision a second time."""
+    import ast
+    import pathlib
+
+    import pyblazing_spark
+
+    pkg = pathlib.Path(pyblazing_spark.__file__).parent
+    repo = pkg.parent
+    hits = []
+    for path in sorted([*pkg.rglob("*.py"), *(repo / "scripts").glob("*.py")]):
+        if path == pkg / "operators" / "global_window.py":
+            continue
+        src = path.read_text()
+        where = path.relative_to(repo)
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").endswith(
+                "global_window"
+            ):
+                hits += [f"{where}: {a.name}" for a in node.names if a.name.startswith("_")]
+            elif (
+                isinstance(node, ast.Attribute)
+                and node.attr.startswith("_")
+                and ast.unparse(node.value).endswith("global_window")
+            ):
+                hits.append(f"{where}: {ast.unparse(node)}")
+        hits += [f"{where}: {line.strip()}" for line in src.splitlines() if "__pid" in line]
+    assert not hits, hits

@@ -259,7 +259,7 @@ def test_connected_components_checkpoint_truncates_lineage(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(14)], "id_a long, id_b long"
     )
-    comp = connected_components(chain, checkpoint_interval=3)
+    comp = connected_components(chain)  # truncates every third round
     plan = comp._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
     # 14 propagation rounds ran; without checkpointing the plan would

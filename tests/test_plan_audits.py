@@ -374,10 +374,9 @@ def test_zorder_morton_code_stays_in_codegen(spark, sf_dir):
     WholeStageCodegen — no Python boundary — and the bucket assignment
     must be the PARALLEL two-phase form: every window over the lineitem
     data path partitions by the range-bucket id (never an unpartitioned
-    ntile collapsing the table to one task), and — since the r14
-    optimization folded the ≤32-row prefix offsets into literals
-    (operators/global_window.py::_pid_offsets) — the plan carries NO
-    join at all."""
+    ntile collapsing the table to one task), and, since the ≤32 prefix
+    offsets arrive as literals (operators/global_window.py), the plan
+    carries NO join at all."""
     df = plans.REGISTRY["sort_zorder_cluster"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -385,12 +384,10 @@ def test_zorder_morton_code_stays_in_codegen(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     project = [b for b in plan.split("\n\n") if ") Project" in b][0]
     assert ">>" in project and "& 1" in project, project
-    # r14: offsets are literals — the former broadcast join is GONE and
-    # nothing may reintroduce any join into this single-table plan.
+    # offsets are literals: nothing may put a join into this
+    # single-table plan.
     assert "Join" not in plan, plan
-    # windows over lineitem rows must be partitioned by __pid; the only
-    # unpartitioned windows allowed are over the ≤32-row counts table
-    # (identified by aggregating __n, not carrying zcode).
+    # windows over lineitem rows must be partitioned by __pid.
     big_windows = [
         l
         for l in plan.splitlines()

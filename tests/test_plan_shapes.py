@@ -58,7 +58,7 @@ EXPECTED_SHAPES: dict[str, dict[str, int]] = {
     # on user_id (both union children exchange) + the final sort.
     "join_asof_nearest": dict(exch=3, scans=2, py=0, smj=0),
     # agg_equidepth_histogram: two-phase global_ntile (range-bucket ids
-    # + local ranks + broadcast offsets) then the bucket rollup.
+    # + local ranks + prefix offsets as literals) then the bucket rollup.
     "agg_equidepth_histogram": dict(exch=6, scans=2, py=0, smj=0),
     # the two avro entries checkpoint before their temp dir is removed
     # (LocalTableScan); the I/O path is audited by their oracles and
@@ -92,6 +92,15 @@ EXPECTED_JOBS: dict[str, int] = {
     "text_bpe_encode": 6,
     "text_multi_keyword_tag": 5,
     "text_unigram_tokenize": 8,
+    # the global-window entries: each two-phase call pays one boundary
+    # job and one per-bucket collect (operators/global_window.py)
+    "agg_equidepth_histogram": 9,
+    "events_rfm": 15,
+    "pipeline_quality_deciles": 9,
+    "pipeline_seq_packing": 9,
+    "sort_pareto_frontier": 11,
+    "sort_zorder_cluster": 9,
+    "win_global_scaled": 5,
 }
 
 

@@ -291,3 +291,36 @@ def test_max_files_per_trigger_caps_by_added_files(spark, tmp_path):
     offs = _offset_versions(ckpt)
     drain = offs[: next(i for i, v in enumerate(offs) if v == 4) + 1]
     assert drain == [1, 2, 3, 4]  # one 2-file version per batch
+
+
+def test_stream_txn_source_runs_outside_the_repo(tmp_path, sf_dir):
+    """Spark plans a Python stream source in a Python process of its
+    own, which does not see the package zip the session ships to its
+    workers. Run from a directory outside the repo, with the package on
+    the driver's ``sys.path`` only (not ``PYTHONPATH``, which Spark's
+    Python processes would inherit), the entry must still stream."""
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    code = (
+        f"import sys; sys.path.insert(0, {str(repo)!r})\n"
+        "from pyblazing_spark.session import get_spark\n"
+        "import pyblazing_spark.plans as plans\n"
+        "spark = get_spark(app_name='txn-stream-cwd', master='local[2]')\n"
+        f"rows = plans.REGISTRY['stream_txn_source'].fn(spark, {sf_dir!r}).collect()\n"
+        "print('VERSIONS', [r.version for r in rows])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_SUBMIT_ARGS"] = "--driver-memory 1g pyspark-shell"
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "VERSIONS [1, 2, 3]" in proc.stdout, proc.stdout[-2000:]

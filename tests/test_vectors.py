@@ -21,11 +21,11 @@ def test_lloyd_inertia_is_non_increasing(spark, sf_dir):
     round."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    # checkpoint_every=3: round 3 localCheckpoints (lineage truncation on
-    # the path), round 4 persists — so the returned handle's storage
-    # level is observable below.
-    assigned, C, history = kmeans_lloyd(emb, k=8, iterations=4, checkpoint_every=3)
-    assert len(history) == 4
+    # The loop truncates every fourth round: round 4 localCheckpoints
+    # (lineage truncation on the path), round 5 persists — so the
+    # returned handle's storage level is observable below.
+    assigned, C, history = kmeans_lloyd(emb, k=8, iterations=5)
+    assert len(history) == 5
     slack = 1e-3 * n
     for a, b in zip(history, history[1:]):
         assert b <= a + slack, f"inertia increased: {history}"
