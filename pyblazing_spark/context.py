@@ -293,13 +293,7 @@ class BlazingContext:
             self._pending[query_id] = future
             return query_id
         if eager if eager is not None else self.eager:
-            with self._reference_eval():
-                df = self.spark.sql(query)
-                result = df.toPandas()
-            self._log.append(
-                _LogEntry(query_id, query, started, (time.time() - started) * 1000.0, "ok")
-            )
-            return result
+            return self._run_eager(query, query_id, started)
         df = self.spark.sql(query)
         # Lazy mode only PLANNED the query — nothing executed yet, so an
         # "ok" row with a ~0 ms duration would mislead ``bc.log()``

@@ -2,18 +2,18 @@
 segmentation (Kudo 2018, "Subword Regularization", public literature —
 the second production tokenizer family next to BPE).
 
-Spark-first split of the work, mirroring the BPE path
+Split of the work, the same as the BPE path
 (``plans/llm.py::_bpe_learn_inprocess``):
 
-- **Seed inventory + piece frequencies** run DISTRIBUTED over the
-  corpus' distinct-word vocabulary (substring cells explode in
-  scan-stage codegen; only (piece-hash, partial count) longs shuffle).
-- **EM training** runs in-process over the collected |vocab|-bounded
-  word counts — the same driver bound as the BPE heap learner; one
-  cluster job total, independent of the EM iteration count.
+- **One cluster job** counts the corpus' distinct words; the driver
+  collects those |vocab| (word, count) rows, and nothing else of the
+  corpus.
+- **Seed inventory + EM training** run in-process over the collected
+  rows (:func:`seed_pieces`, :func:`em_train`): the same driver bound
+  as the BPE heap learner, independent of the EM iteration count.
 - **Viterbi segmentation** runs as an Arrow-batched kernel over the
   DISTINCT vocabulary only (never per corpus token); the corpus-scale
-  rollup joins word-level results back by word.
+  rollup weights each word's result by its count.
 
 Two scoring modes:
 

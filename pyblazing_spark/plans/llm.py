@@ -34,6 +34,7 @@ from pyblazing_spark.operators import dedup as DD
 from pyblazing_spark.operators import similarity as SIM
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.tpch import ratio
+from pyblazing_spark.plans.vectors import _sql_d2
 from pyblazing_spark.session import local_frame
 from pyblazing_spark.sources.tables import load_table as T
 
@@ -1877,17 +1878,6 @@ _SEM_K = 8  # SemDeDup cluster count at catalog scale (production: ~sqrt(n))
 _SEM_THR = 0.35  # within-cluster cosine threshold
 
 
-def _sql_sem_d2(p: str, c: str) -> str:
-    from pyblazing_spark.functions.vectors import nudge_round_sql
-
-    return nudge_round_sql(
-        f"list_dot_product({p}.v, {p}.v)"
-        f" - 2 * list_dot_product({p}.v, {c}.cv)"
-        f" + list_dot_product({c}.cv, {c}.cv)",
-        3,
-    )
-
-
 @register(
     "dedup_semantic",
     tags=("llm", "dedup", "embedding", "semantic"),
@@ -1932,7 +1922,7 @@ JOIN (SELECT cluster, count(*) AS n_dropped, sum(id_b) AS drop_id_sum
   USING (cluster)
 GROUP BY p.cluster, n.n_vecs, d.n_dropped, d.drop_id_sum
 ORDER BY p.cluster
-""".replace("{d2}", _sql_sem_d2("v", "c")),
+""".replace("{d2}", _sql_d2("v", "c")),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -2010,6 +2000,18 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _word_counts(spark: SparkSession, sf_dir: str, keep) -> DataFrame:
+    """(word, w): each distinct whitespace token of ``documents`` that
+    the predicate ``keep`` accepts, with its corpus count. The one
+    corpus-scale job of every tokenizer entry (map-side partial counts;
+    text never shuffles); learning then runs in-process over the
+    collected rows."""
+    words = T(spark, sf_dir, "documents").select(
+        F.explode(TXT.tokens(F.col("text"))).alias("word")
+    )
+    return words.where(keep).groupBy("word").agg(F.count(F.lit(1)).alias("w"))
+
+
 #: Shared oracle fragments for the BPE entry: wrap each character of a
 #: word as "(c)" so symbol boundaries are explicit — string replace of
 #: "(p1)(p2)" can then never consume a shared separator, making greedy
@@ -2034,28 +2036,6 @@ def _bpe_pairs_sql(vocab: str) -> str:
   WHERE len(sym) >= 2
   GROUP BY p1, p2
 """
-
-
-def _bpe_pair_counts(v: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts over a (w, s) vocab frame — the
-    Spark twin of :func:`_bpe_pairs_sql`."""
-    syms = v.select(
-        "w", F.split(F.expr("trim(BOTH '()' FROM s)"), r"\)\(").alias("sym")
-    ).where(F.size("sym") >= 2)
-    return (
-        syms.select(
-            "w",
-            "sym",
-            F.explode(F.sequence(F.lit(1), F.size("sym") - 1)).alias("i"),
-        )
-        .select(
-            F.expr("sym[i - 1]").alias("p1"),  # Spark arrays are 0-based
-            F.expr("sym[i]").alias("p2"),
-            "w",
-        )
-        .groupBy("p1", "p2")
-        .agg(F.sum("w").alias("weight"))
-    )
 
 
 def _bpe_learn_rounds_sql(k: int, vocab_sql: str = _BPE_VOCAB_SQL) -> str:
@@ -2118,51 +2098,64 @@ ORDER BY round, rank
 """,
 )
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer-training statistics: two merge rounds
-    over the corpus vocabulary. Round 1 counts adjacent character-pair
+    """BPE tokenizer-training statistics: two merge rounds over the
+    corpus vocabulary. Round 1 counts adjacent character-pair
     frequencies (weighted by word frequency); the top pair merges into
     one symbol across the vocabulary (greedy left-to-right, the classic
     BPE step); round 2 recounts over the merged symbols. Emits the
     top-5 pairs of each round.
 
     Scale shape: the only corpus-scale work is the word-count pass
-    (map-side partials; text never shuffles) — everything after runs on
-    the DISTINCT vocabulary, which is Zipf-bounded and tiny relative to
-    the corpus (the reason corpus-scale BPE training is feasible at
-    all). Symbols are boundary-wrapped as ``(c)`` so the merge is a
-    plain string replace with identical greedy semantics in both
-    engines — no lookbehind regex (RE2 has none) and no per-symbol
-    Python. The chosen pair is a 2-scalar bounded collect, same
-    contract as the runtime-filter bounds."""
-    docs = T(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
-        )
-        .where(F.col("word").rlike("^[a-z]+$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("s", F.regexp_replace("word", r"(.)", r"($1)"))
+    (map-side partials; text never shuffles). Both rounds run
+    in-process over the collected DISTINCT vocabulary
+    (:func:`_bpe_round_tops`), which is Zipf-bounded and tiny relative
+    to the corpus, the same |vocab| driver bound as the heap learner;
+    the ten result rows return as a local frame."""
+    rows = _word_counts(spark, sf_dir, F.col("word").rlike("^[a-z]+$")).collect()
+    return local_frame(
+        spark,
+        _bpe_round_tops([(r["word"], r["w"]) for r in rows]),
+        "round int, rank int, p1 string, p2 string, weight bigint",
     )
 
-    pair_counts = _bpe_pair_counts
-    pairs1 = pair_counts(vocab).localCheckpoint(eager=True)
-    best = pairs1.orderBy(F.desc("weight"), "p1", "p2").select("p1", "p2").first()
-    if best is None:  # empty corpus: no pairs, round 2 == round 1 == empty
-        vocab2 = vocab
-    else:
-        b1, b2 = best
-        vocab2 = vocab.withColumn(
-            "s", F.replace(F.col("s"), F.lit(f"({b1})({b2})"), F.lit(f"({b1}{b2})"))
-        )
-    pairs2 = pair_counts(vocab2)
 
-    def ranked(p: DataFrame, rnd: int) -> DataFrame:
-        return _ranked_topk(p, 5, F.desc("weight"), "p1", "p2").select(
-            F.lit(rnd).cast("int").alias("round"), "rank", "p1", "p2", "weight"
-        )
+def _bpe_round_tops(
+    rows: list[tuple[str, int]],
+) -> list[tuple[int, int, str, str, int]]:
+    """``(round, rank, p1, p2, weight)`` rows of ``text_bpe_merges``
+    over (word, count) ``rows``: the top-5 adjacent pairs by summed
+    word count, ties by the smaller (p1, p2), of round 1 and of round 2
+    (after round 1's best pair merges). A round with no pair adds no
+    rows and merges nothing."""
+    words = [(list(word), w) for word, w in rows]
+    out: list[tuple[int, int, str, str, int]] = []
+    for rnd in (1, 2):
+        weight: dict[tuple[str, str], int] = {}
+        for syms, w in words:
+            for p in zip(syms, syms[1:]):
+                weight[p] = weight.get(p, 0) + w
+        top = sorted(weight.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
+        out += [(rnd, i, p1, p2, w) for i, ((p1, p2), w) in enumerate(top, 1)]
+        if top:
+            (p1, p2), _ = top[0]
+            words = [(_bpe_merge(syms, p1, p2), w) for syms, w in words]
+    return out
 
-    return ranked(pairs1, 1).unionAll(ranked(pairs2, 2)).orderBy("round", "rank")
+
+def _bpe_merge(syms: list[str], p1: str, p2: str) -> list[str]:
+    """``syms`` with each adjacent ``(p1, p2)`` merged into one symbol,
+    left to right and non-overlapping: one BPE merge step, the same as
+    one global replace of ``(p1)(p2)`` on the boundary-wrapped form."""
+    out: list[str] = []
+    i, n = 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == p1 and syms[i + 1] == p2:
+            out.append(p1 + p2)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
 
 def _bpe_learn_inprocess(
@@ -2218,18 +2211,6 @@ def _bpe_learn_inprocess(
     ]
     heapq.heapify(heap)
 
-    def merge_syms(syms: list[str], p1: str, p2: str) -> list[str]:
-        out: list[str] = []
-        i, n = 0, len(syms)
-        while i < n:
-            if i + 1 < n and syms[i] == p1 and syms[i + 1] == p2:
-                out.append(p1 + p2)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
-
     merges: list[tuple[str, str]] = []
     while len(merges) < k:
         # lazy heap: discard stale entries (weight changed since push)
@@ -2252,7 +2233,7 @@ def _bpe_learn_inprocess(
                 pair_w[p] -= w
                 pair_words[p].discard(word)
                 touched.add(p)
-            new = merge_syms(syms, p1, p2)
+            new = _bpe_merge(syms, p1, p2)
             words[word] = new
             for i in range(len(new) - 1):
                 p = (new[i], new[i + 1])
@@ -2292,45 +2273,33 @@ WHERE rank <= 20 ORDER BY rank
 """
 
 
-def _bpe_encode_pipeline(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """Shared encode pipeline: vocab word-count (the only corpus-scale
-    work), in-process heap learn of ``k`` merges, distributed rank-order
-    encode, top-20 token stats. See ``text_bpe_encode`` for the full
-    scale contract."""
-    docs = T(spark, sf_dir, "documents")
+def _bpe_encode_pipeline(
+    spark: SparkSession, sf_dir: str, k: int, keep, sym, unit: int
+) -> DataFrame:
+    """Shared encode pipeline: the vocab word-count over the words
+    ``keep`` accepts (the only corpus-scale work), in-process heap learn
+    of ``k`` merges over the ``sym`` column (``unit`` characters per
+    initial symbol), distributed rank-order encode, top-20 token stats.
+    See ``text_bpe_encode`` for the full scale contract."""
     vocab = (
-        docs.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
-        )
-        .where(F.col("word").rlike("^[a-z]+$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("w"))
+        _word_counts(spark, sf_dir, keep)
+        .select("word", "w", sym.alias("sym"))
         .localCheckpoint(eager=True)  # corpus scanned ONCE
     )
-    vocab_rows = [(r["word"], r["w"]) for r in vocab.collect()]
-    ranks = tuple(_bpe_learn_inprocess(vocab_rows, k))
+    vocab_rows = [(r["sym"], r["w"]) for r in vocab.collect()]
+    ranks = tuple(_bpe_learn_inprocess(vocab_rows, k, unit))
 
     @F.pandas_udf("array<string>")
-    def bpe_enc(words: pd.Series) -> pd.Series:
-        def enc(wd: str) -> list[str]:
-            sym = list(wd)
+    def bpe_enc(syms: pd.Series) -> pd.Series:
+        def enc(s: str) -> list[str]:
+            out = [s[i : i + unit] for i in range(0, len(s), unit)]
             for p1, p2 in ranks:
-                out, i, n = [], 0, len(sym)
-                while i < n:
-                    if i + 1 < n and sym[i] == p1 and sym[i + 1] == p2:
-                        out.append(p1 + p2)
-                        i += 2
-                    else:
-                        out.append(sym[i])
-                        i += 1
-                sym = out
-            return sym
+                out = _bpe_merge(out, p1, p2)
+            return out
 
-        return words.map(enc)
+        return syms.map(enc)
 
-    toks = vocab.select(
-        "word", "w", F.explode(bpe_enc(F.col("word"))).alias("token")
-    )
+    toks = vocab.select("word", "w", F.explode(bpe_enc("sym")).alias("token"))
     stats = toks.groupBy("token").agg(
         F.countDistinct("word").alias("n_words"),
         F.sum("w").cast("long").alias("total_count"),
@@ -2370,7 +2339,10 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-ordered pair merging — two independent formulations of BPE
     whose equivalence (sequential merge application commutes across
     words) the value-compare proves on real data."""
-    return _bpe_encode_pipeline(spark, sf_dir, _BPE_ENC_MERGES)
+    word = F.col("word")
+    return _bpe_encode_pipeline(
+        spark, sf_dir, _BPE_ENC_MERGES, word.rlike("^[a-z]+$"), word, unit=1
+    )
 
 
 @register(
@@ -2389,7 +2361,10 @@ def text_bpe_encode_k64(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap's incremental pair bookkeeping tracks exact global recounts
     through deep merge chains (merged symbols merging again, dry-round
     no-ops), not just the 4 shallow rounds."""
-    return _bpe_encode_pipeline(spark, sf_dir, 64)
+    word = F.col("word")
+    return _bpe_encode_pipeline(
+        spark, sf_dir, 64, word.rlike("^[a-z]+$"), word, unit=1
+    )
 
 
 # Byte-level BPE (VERDICT r12 #6): symbols are RAW UTF-8 BYTES, not
@@ -2456,50 +2431,21 @@ def text_bpe_byte_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical contract to ``text_bpe_encode`` — ONE corpus-scale
     word-count aggregation, learn in-process, encode as a vectorized
     pandas_udf over the DISTINCT vocabulary only."""
-    docs = T(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .select(F.hex(F.col("word").cast("binary")).alias("hx"), "word", "w")
-        .localCheckpoint(eager=True)  # corpus scanned ONCE
+    word = F.col("word")
+    out = _bpe_encode_pipeline(
+        spark,
+        sf_dir,
+        _BPE_BYTE_MERGES,
+        word != "",
+        F.hex(word.cast("binary")),
+        unit=2,
     )
-    vocab_rows = [(r["hx"], r["w"]) for r in vocab.collect()]
-    ranks = tuple(_bpe_learn_inprocess(vocab_rows, _BPE_BYTE_MERGES, unit=2))
-
-    @F.pandas_udf("array<string>")
-    def bpe_enc_bytes(hexes: pd.Series) -> pd.Series:
-        def enc(hx: str) -> list[str]:
-            sym = [hx[i : i + 2] for i in range(0, len(hx), 2)]
-            for p1, p2 in ranks:
-                out, i, n = [], 0, len(sym)
-                while i < n:
-                    if i + 1 < n and sym[i] == p1 and sym[i + 1] == p2:
-                        out.append(p1 + p2)
-                        i += 2
-                    else:
-                        out.append(sym[i])
-                        i += 1
-                sym = out
-            return sym
-
-        return hexes.map(enc)
-
-    toks = vocab.select(
-        "word", "w", F.explode(bpe_enc_bytes(F.col("hx"))).alias("token_hex")
-    )
-    stats = toks.groupBy("token_hex").agg(
-        F.countDistinct("word").alias("n_words"),
-        F.sum("w").cast("long").alias("total_count"),
-    ).withColumn("n_bytes", (F.length("token_hex") / 2).cast("long"))
-    ranked = _ranked_topk(stats, 20, F.desc("total_count"), "token_hex")
-    return (
-        ranked.select(
-            "rank", "token_hex", "n_bytes", "n_words", "total_count"
-        ).orderBy("rank")
+    return out.select(
+        "rank",
+        F.col("token").alias("token_hex"),
+        (F.length("token") / 2).cast("long").alias("n_bytes"),
+        "n_words",
+        "total_count",
     )
 
 
@@ -3805,22 +3751,11 @@ FROM res GROUP BY wlen, n_pieces ORDER BY wlen, n_pieces
 
 
 def _unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct lowercase-word vocabulary with corpus multiplicities —
-    the ONLY corpus-scale job of the unigram entries (same contract as
-    the BPE vocab pass; text never shuffles)."""
-    docs = T(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
-        )
-        .where(
-            F.col("word").rlike("^[a-z]+$")
-            & (F.length("word") <= _UNI_MAXW)
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    """The unigram entries' checkpointed vocabulary: lowercase words of
+    at most ``_UNI_MAXW`` characters, with their corpus counts."""
+    word = F.col("word")
+    keep = word.rlike("^[a-z]+$") & (F.length(word) <= _UNI_MAXW)
+    return _word_counts(spark, sf_dir, keep).localCheckpoint(eager=True)
 
 
 @register(
@@ -3843,40 +3778,23 @@ def text_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation enumeration instead.
 
     Scale shape: one corpus-scale word-count job (text never
-    shuffles); the substring seed inventory explodes over the DISTINCT
-    vocabulary in scan-stage codegen and aggregates on piece hashes;
-    the driver collects only the culled (piece, cost) table (bounded
-    by distinct <=4-char substrings — a production run caps the
-    inventory per SentencePiece's seed heuristics); Viterbi runs in an
-    Arrow-batched kernel over the vocabulary frame, never per corpus
-    token. Output: per (word length, piece count) class — word count,
-    corpus occurrences, and the exact summed fixed-point cost."""
+    shuffles); the driver collects the DISTINCT vocabulary (the same
+    |vocab| bound as the BPE and EM learners) and builds the seed
+    inventory in-process (:func:`~pyblazing_spark.operators.unigram.seed_pieces`);
+    Viterbi runs in an Arrow-batched kernel over the checkpointed
+    vocabulary frame, never per corpus token. Output: per (word length,
+    piece count) class — word count, corpus occurrences, and the exact
+    summed fixed-point cost."""
     from pyblazing_spark.operators.unigram import (
         quantized_costs,
+        seed_pieces,
         viterbi_encode_frame,
     )
 
     vocab = _unigram_vocab(spark, sf_dir)
-    posi = vocab.select(
-        "word", "w", F.explode(F.sequence(F.lit(1), F.length("word"))).alias("i")
+    freqs, total = seed_pieces(
+        [(r["word"], r["w"]) for r in vocab.collect()], _UNI_MAXP
     )
-    cells = posi.select(
-        "word",
-        "w",
-        "i",
-        F.explode(F.array(*[F.lit(L) for L in range(1, _UNI_MAXP + 1)])).alias(
-            "L"
-        ),
-    ).where(F.col("i") + F.col("L") - 1 <= F.length("word"))
-    freq = (
-        cells.select(F.col("word").substr(F.col("i"), F.col("L")).alias("piece"), "w")
-        .groupBy("piece")
-        .agg(F.sum("w").cast("long").alias("freq"))
-    )
-    # bounded driver collect: the distinct <=4-char substring inventory
-    rows = freq.collect()
-    freqs = {r["piece"]: int(r["freq"]) for r in rows}
-    total = sum(freqs.values())
     costs = quantized_costs(freqs, total, _UNI_MINF)
     seg = viterbi_encode_frame(vocab, costs, _UNI_MAXP)
     return (

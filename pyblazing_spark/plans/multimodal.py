@@ -18,34 +18,12 @@ from pyspark.sql import functions as F
 
 from pyblazing_spark.operators import multimodal as MM
 from pyblazing_spark.plans.registry import register
+from pyblazing_spark.session import spread_to_cores
 from pyblazing_spark.sources.tables import load_table as T
 
 
 def _blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.attach_blob(T(spark, sf_dir, "documents"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a NARROW projection to full parallelism before an
-    expensive per-row Python codec kernel (the r8 multimodal_video_frames
-    pattern): file-split parallelism follows input BYTES, so a ~48 B/doc
-    payload collapses to a couple of partitions and most cores idle
-    through the CPU-bound encode/decode. Only worth it when the kernel
-    dominates the ~0.2 s shuffle — cheap numpy/stdlib kernels measured
-    SLOWER with it (see "Measured and REJECTED", OPTIMIZATION_r14.md).
-
-    r15 (VERDICT r14 #8): CONDITIONAL on the observed scan partition
-    count — when the input layout already covers the cores (many-files
-    layouts, where the r14 gif/png/transcode probes showed the shuffle
-    is pure cost), the frame passes through untouched; the RoundRobin
-    exchange appears only when partitions < cores. ``getNumPartitions``
-    plans the scan (file listing) but runs no job. Shared as
-    :func:`pyblazing_spark.session.spread_to_cores` since late r15 (the
-    same gate pays off before compute-bound JVM stages, e.g. the bloom
-    md5 probe)."""
-    from pyblazing_spark.session import spread_to_cores
-
-    return spread_to_cores(df)
 
 
 @register(
@@ -290,7 +268,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["doc_id", "ok"])
             rows = []
 
-    scored = _spread(payload).mapInPandas(rt, schema="doc_id bigint, ok int")
+    scored = spread_to_cores(payload).mapInPandas(rt, schema="doc_id bigint, ok int")
     return scored.agg(
         F.count(F.lit(1)).alias("n_blobs"),
         F.sum("ok").cast("long").alias("n_ok"),
@@ -1083,7 +1061,7 @@ def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    blobs = _spread(payload).mapInPandas(enc, schema="doc_id bigint, content binary")
+    blobs = spread_to_cores(payload).mapInPandas(enc, schema="doc_id bigint, content binary")
     return MM.decode_image(blobs).orderBy("doc_id")
 
 

@@ -71,6 +71,18 @@ def test_lazy_log_rows_marked_planned(bc):
     assert rows["SELECT 42 AS eager_probe"] == "ok"
 
 
+def test_failing_eager_query_logs_error(bc):
+    """A synchronous eager query that fails leaves one "error" row in
+    bsql_logs, the same as a failing async query."""
+    query = "SELECT raise_error('eager_fail_probe') AS x"
+    with pytest.raises(Exception, match="eager_fail_probe"):
+        bc.sql(query, eager=True)
+    rows = bc.log(
+        "SELECT status FROM bsql_logs WHERE query LIKE '%eager_fail_probe%'"
+    ).collect()
+    assert [r.status for r in rows] == ["error"]
+
+
 def test_catalog_roundtrip(bc, sf_dir):
     bc.create_table("tmp_cat", f"{sf_dir}/region.parquet")
     assert "tmp_cat" in bc.list_tables()

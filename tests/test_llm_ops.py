@@ -531,17 +531,19 @@ from hypothesis import given as _given, settings as _settings
 from hypothesis import strategies as _st
 
 
-def _naive_bpe_learn(rows, k):
-    """Reference learner: full pair recount every round. O(k x vocab)."""
+def _naive_bpe_rounds(rows, k):
+    """Reference learner: full pair recount every round. O(k x vocab).
+    Returns the merges and each round's full pair-count table."""
     words = {w: list(w) for w, _ in rows}
     weight = dict(rows)
-    merges = []
+    merges, rounds = [], []
     for _ in range(k):
         counts = {}
         for w, syms in words.items():
             for i in range(len(syms) - 1):
                 p = (syms[i], syms[i + 1])
                 counts[p] = counts.get(p, 0) + weight[w]
+        rounds.append(counts)
         if not counts:
             break
         best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
@@ -557,7 +559,11 @@ def _naive_bpe_learn(rows, k):
                     out.append(syms[i])
                     i += 1
             words[w] = out
-    return merges
+    return merges, rounds
+
+
+def _naive_bpe_learn(rows, k):
+    return _naive_bpe_rounds(rows, k)[0]
 
 
 @_st.composite
@@ -581,6 +587,25 @@ def test_bpe_heap_learner_matches_naive_recount(rows, k):
     from pyblazing_spark.plans.llm import _bpe_learn_inprocess
 
     assert _bpe_learn_inprocess(list(rows), k) == _naive_bpe_learn(rows, k)
+
+
+@_settings(max_examples=120, deadline=None)
+@_given(_vocab())
+def test_bpe_round_tops_match_naive_recount(rows):
+    """text_bpe_merges' in-process learn: each round's top-5 pair table
+    equals a naive full recount of that round, ranked by weight, then
+    (p1, p2); a dry round 1 leaves round 2 empty too."""
+    from pyblazing_spark.plans.llm import _bpe_round_tops
+
+    _, rounds = _naive_bpe_rounds(rows, 2)
+    want = [
+        (rnd, rank, p1, p2, w)
+        for rnd, counts in enumerate(rounds, 1)
+        for rank, ((p1, p2), w) in enumerate(
+            sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:5], 1
+        )
+    ]
+    assert _bpe_round_tops(list(rows)) == want
 
 
 def _naive_byte_bpe(word_counts, k):

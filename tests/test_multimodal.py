@@ -719,12 +719,12 @@ def test_wav_pcm_widths_8_24_32():
 
 
 def test_spread_is_conditional_on_observed_partitions(spark, tmp_path):
-    """r15 (VERDICT r14 #8): _spread repartitions a narrow payload to
+    """r15 (VERDICT r14 #8): spread_to_cores repartitions a narrow payload to
     full parallelism ONLY when the scan under-covers the cores; a
     many-files layout that already covers them must pass through with
     no RoundRobin exchange (the r14 gif/png probes measured that
     shuffle as pure cost)."""
-    from pyblazing_spark.plans.multimodal import _spread
+    from pyblazing_spark.session import spread_to_cores
 
     cores = spark.sparkContext.defaultParallelism
     base = spark.range(0, 1000).select(
@@ -737,9 +737,9 @@ def test_spread_is_conditional_on_observed_partitions(spark, tmp_path):
 
     under = spark.read.parquet(few)
     assert under.rdd.getNumPartitions() < cores
-    assert "RoundRobinPartitioning" in _spread(under)._jdf.queryExecution().toString()
+    assert "RoundRobinPartitioning" in spread_to_cores(under)._jdf.queryExecution().toString()
 
     covered = spark.read.parquet(many)
     assert covered.rdd.getNumPartitions() >= cores
-    plan = _spread(covered)._jdf.queryExecution().toString()
+    plan = spread_to_cores(covered)._jdf.queryExecution().toString()
     assert "RoundRobinPartitioning" not in plan

@@ -91,7 +91,13 @@ EXPECTED_JOBS: dict[str, int] = {
     "ann_cosine_topk": 5,
     "text_bpe_encode": 6,
     "text_multi_keyword_tag": 5,
-    "text_unigram_tokenize": 8,
+    # the tokenizer entries: one word-count job pair, a vocabulary
+    # collect, then the encode (text_bpe_merges returns a local frame)
+    "text_bpe_byte_level": 6,
+    "text_bpe_encode_k64": 6,
+    "text_bpe_merges": 3,
+    "text_unigram_em_learn": 5,
+    "text_unigram_tokenize": 7,
     # the global-window entries: each two-phase call pays one boundary
     # job and one per-bucket collect (operators/global_window.py)
     "agg_equidepth_histogram": 9,
