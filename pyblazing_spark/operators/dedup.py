@@ -26,12 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from pyblazing_spark.functions import array_lit
 from pyblazing_spark.functions import text as TXT
 from pyblazing_spark.functions import vectors as VEC
-from pyblazing_spark.session import local_frame
 
 
 # --------------------------------------------------------------- exact
@@ -211,18 +208,6 @@ def minhash_lsh_pairs(
     its join explosion is the same O(bucket^2) anyway. With b=8, r=4 the
     LSH S-curve crosses ~0.6; candidates are verified exactly, so the
     threshold is honest — LSH only bounds recall, never precision.
-
-    Why the singleton-shingle bloom pre-filter (VERDICT r6 #8,
-    :func:`_hot_shingle_filter`) is NOT applied here: this plan has no
-    per-shingle exchange to slim. Each document is ONE input row, so
-    the groupBy(doc) partial aggregation collapses to one row per doc
-    map-side and the only wide exchange carries per-doc
-    (signature, shingle-set) rows; dropping singleton shingles from
-    those sets would change the exact-Jaccard DENOMINATORS in the
-    verify stage — a semantics change (the "filtered-Jaccard" variant),
-    not an optimization. The pre-filter lives where it is sound and
-    pays: the inverted-index paths below, whose exchanges are keyed on
-    the shingle itself.
     """
     hashed = _hashed_shingle_rows(df, text_col, id_col)
     return minhash_pairs_from_hashed(
@@ -378,7 +363,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     bits: int = 64,
     token_hash=None,
-    materialize=None,
 ) -> DataFrame:
     """Pairs with hamming(simhash_a, simhash_b) <= max_hamming.
 
@@ -391,15 +375,12 @@ def simhash_pairs(
     without truncation the whole scan -> token explode -> per-token hash
     -> ``bits``-sum majority aggregation plans and runs TWICE
     (interleaved A/B at sf0.1: min 8.4 s -> 5.8 s, and 2x -> 1x corpus
-    bytes scanned/aggregated). ``materialize`` overrides the default
-    eager ``localCheckpoint`` for reliable-checkpoint pipelines."""
+    bytes scanned/aggregated)."""
     chunks = max_hamming + 1
     width = bits // chunks
-    sig = simhash(df, text_col, id_col, bits=bits, token_hash=token_hash)
-    if materialize is None:
-        sig = sig.localCheckpoint(eager=True)
-    else:
-        sig = materialize(sig)
+    sig = simhash(
+        df, text_col, id_col, bits=bits, token_hash=token_hash
+    ).localCheckpoint(eager=True)
 
     def _chunk(i: int) -> Column:
         shifted = F.shiftrightunsigned(F.col("simhash"), i * width)
@@ -436,77 +417,6 @@ def simhash_pairs(
     )
 
 
-# ----------------------------------------- singleton-shingle pre-filter
-_SGL_MAX_WORDS = 32768  # 1 Mbit bitmap cap (256 KiB literal), ~10 bits/key
-
-
-def _hot_shingle_filter(raw: DataFrame, shingle_col: str):
-    """Bloom PRE-FILTER condition certifying droppable singleton
-    shingles before the inverted-index exchanges (VERDICT r6 #8).
-
-    Soundness: a shingle contributing to ANY candidate pair occurs in
-    >= 2 documents, hence has >= 2 instance rows, hence its xxhash64
-    lands in the "hot" (instance-count >= 2) set and its bloom bits are
-    set — the test has no false negatives, so no pair-contributing
-    shingle is ever dropped. Every error mode KEEPS extra rows (bloom
-    false positives, within-one-doc repeats, 64-bit hash collisions):
-    the result is bit-identical to the unfiltered plan, only the wire
-    volume changes. Returns a boolean Column to ``where`` onto the
-    join-side rows, or ``None`` when no shingle is hot (no pair is
-    possible at all — callers can short-circuit to an empty result).
-
-    Cost model (honest): building the hot set is one NARROW exchange of
-    map-side-combined (hash8B, count8B) rows; the payoff is the
-    singleton fraction of the WIDE per-shingle exchanges (distinct +
-    self-join) it slims. Net win when singletons outweigh the count
-    pass — true for real web corpora (most shingles are unique); at
-    worst the plan keeps its shape with one extra narrow stage. The
-    bitmap is sized from the hot count (~10 bits/key, capped at 1 Mbit;
-    saturation degrades FPR gracefully — more singletons kept, never a
-    wrong result)."""
-    hot = (
-        raw.groupBy(F.xxhash64(shingle_col).alias("__h"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .where(F.col("__c") >= 2)
-        .select("__h")
-    )
-    n_words = max(2, min((10 * hot.count() + 31) // 32, _SGL_MAX_WORDS))
-    m = n_words * 32
-    word_rows = (
-        hot.select(
-            F.pmod(F.col("__h"), F.lit(m)).alias("__p1"),
-            F.pmod(F.xxhash64(F.col("__h"), F.lit(1)), F.lit(m)).alias("__p2"),
-        )
-        .select(F.explode(F.array("__p1", "__p2")).alias("__p"))
-        .groupBy(F.expr("__p div 32").alias("__w"))
-        .agg(
-            F.bit_or(
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__p % 32 AS INT))")
-            ).alias("__mask")
-        )
-        .collect()  # bounded by contract: <= _SGL_MAX_WORDS rows (256 KiB)
-    )
-    if not word_rows:
-        return None
-    masks = {int(r["__w"]): int(r["__mask"]) for r in word_rows}
-    # one py4j round-trip for the whole bitmap — F.lit(list) costs one
-    # py4j call PER WORD (33.4 s at the 32768 cap; see
-    # functions.array_lit, late r15)
-    bitmap = array_lit((masks.get(i, 0) for i in range(n_words)), LongType())
-    probes = (
-        f"pmod(xxhash64({shingle_col}), {m})",
-        f"pmod(xxhash64(xxhash64({shingle_col}), 1), {m})",
-    )
-    conds = []
-    for p in probes:
-        word = F.expr(f"CAST({p} div 32 AS INT)")
-        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({p} % 32 AS INT))")
-        conds.append(
-            F.element_at(bitmap, word + F.lit(1)).bitwiseAND(bit) != F.lit(0)
-        )
-    return conds[0] & conds[1]
-
-
 # ------------------------------------------------- exact n-gram jaccard
 def _shingle_positions(
     df: DataFrame, text_col: str, id_col: str, n: int
@@ -525,20 +435,13 @@ def _shingle_positions(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    threshold: float = 0.5,
-    prefilter_singletons: bool = False,
-    materialize=None,
+def _shingle_intersections(
+    df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """Exact character-n-gram Jaccard pairs via an inverted-index join.
-
-    Exact (no hashing) — use on bounded candidate sets; cost is
-    sum(bucket^2) over shingle buckets, so hot shingles explode. The
-    MinHash path above is the 100 TB variant.
+    """(id_a, id_b, __inter, __na, __nb): every doc pair id_a < id_b
+    sharing a character n-gram, with the shared distinct n-gram count
+    and each doc's distinct n-gram count — the inverted-index self-join
+    both exact similarity operators below finish from.
 
     Shingles are produced row-wise (explode positions, then substring)
     rather than as array expressions — same InferFiltersFromGenerate
@@ -546,40 +449,19 @@ def ngram_jaccard_pairs(
     Docs shorter than ``n`` chars have NO n-grams and are dropped before
     the explode: a ``greatest(1, ...)`` bound would instead hand them a
     single truncated shingle the SQL-oracle definition
-    (``generate_series(1, len-n+1)``) never produces.
-
-    ``prefilter_singletons`` drops bloom-certified singleton shingles
-    before the join-side distinct + self-join exchanges (result
-    bit-identical — see :func:`_hot_shingle_filter`); ``sizes`` is
-    always computed over the UNFILTERED shingle sets, so Jaccard
-    denominators are exact. Default OFF: the counting pass costs two
-    extra jobs, a net loss on corpora where most shingles repeat
-    (fixtures: 1.7% singleton instances); enable it on real web corpora
-    where singletons dominate the shingle mass.
-    """
+    (``generate_series(1, len-n+1)``) never produces."""
     pos = _shingle_positions(df, text_col, id_col, n)
-    raw = pos.select(
-        id_col, F.col("__t").substr(F.col("__i"), F.lit(n)).alias("__s")
-    )
     # the per-doc distinct shingle frame feeds BOTH self-join sides and
     # the size denominators: materialize it once or the scan -> explode
     # -> substring -> distinct subtree plans and runs 3x (r14; same
     # doctrine as the minhash/simhash signature frames, guide §7.2).
-    sh = raw.distinct()
-    sh = sh.localCheckpoint(eager=True) if materialize is None else materialize(sh)
+    sh = (
+        pos.select(id_col, F.col("__t").substr(F.col("__i"), F.lit(n)).alias("__s"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    join_side = sh
-    if prefilter_singletons:
-        cond = _hot_shingle_filter(raw, "__s")
-        if cond is None:  # every shingle is a singleton: no pair exists
-            idt = dict(df.dtypes)[id_col]
-            return local_frame(
-                df.sparkSession, [], f"id_a {idt}, id_b {idt}, jaccard double"
-            )
-        # distinct-then-filter == filter-then-distinct for a row-wise
-        # predicate on __s: reuse the materialized frame.
-        join_side = sh.where(cond)
-    a, b = join_side.alias("a"), join_side.alias("b")
+    a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(
             b,
@@ -593,9 +475,25 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__n", "__na")
     sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__n", "__nb")
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 8,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Exact character-n-gram Jaccard pairs via an inverted-index join
+    (:func:`_shingle_intersections`).
+
+    Exact (no hashing) — use on bounded candidate sets; cost is
+    sum(bucket^2) over shingle buckets, so hot shingles explode. The
+    MinHash path above is the 100 TB variant.
+    """
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_intersections(df, text_col, id_col, n)
         .withColumn(
             "jaccard", F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
         )
@@ -795,58 +693,19 @@ def containment_pairs(
     id_col: str = "doc_id",
     n: int = 8,
     threshold: float = 0.8,
-    prefilter_singletons: bool = False,
-    materialize=None,
 ) -> DataFrame:
     """Directed n-gram CONTAINMENT pairs: C(A→B) = |sh(A) ∩ sh(B)| /
     |sh(A)|. Flags documents mostly contained in another — the
     boilerplate/near-subset signal symmetric Jaccard misses (a short doc
     embedded in a long one has low Jaccard but containment ≈ 1).
 
-    Exact inverted-index formulation like :func:`ngram_jaccard_pairs`
+    Exact inverted-index formulation, the same
+    :func:`_shingle_intersections` as :func:`ngram_jaccard_pairs`
     (bounded-candidate use; the MinHash/LSH path is the 100 TB
     candidate generator). Each unordered intersection yields both
-    directions; only those ≥ threshold survive. Sub-``n``-char docs are
-    dropped with the same rationale as :func:`ngram_jaccard_pairs`,
-    and ``prefilter_singletons`` applies the same bit-identical bloom
-    pre-filter to the join side (containment denominators stay exact —
-    they come from the unfiltered sets).
+    directions; only those ≥ threshold survive.
     """
-    pos = _shingle_positions(df, text_col, id_col, n)
-    raw = pos.select(
-        id_col, F.col("__t").substr(F.col("__i"), F.lit(n)).alias("__s")
-    )
-    # see ngram_jaccard_pairs: 3 consumers of the distinct shingle
-    # frame -> materialize once (r14).
-    sh = raw.distinct()
-    sh = sh.localCheckpoint(eager=True) if materialize is None else materialize(sh)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    join_side = sh
-    if prefilter_singletons:
-        cond = _hot_shingle_filter(raw, "__s")
-        if cond is None:  # every shingle is a singleton: no pair exists
-            idt = dict(df.dtypes)[id_col]
-            return local_frame(
-                df.sparkSession,
-                [],
-                f"contained_id {idt}, container_id {idt}, containment double",
-            )
-        join_side = sh.where(cond)
-    a, b = join_side.alias("a"), join_side.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.__s") == F.col("b.__s"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__n", "__na")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__n", "__nb")
-    both = inter.join(sa, "id_a").join(sb, "id_b")
+    both = _shingle_intersections(df, text_col, id_col, n)
     # both directions come from ONE pass over the intersection rows: a
     # union of two projections would plan (and run) the whole self-join
     # aggregation tower once per branch — unpivot with stack instead

@@ -6,6 +6,13 @@ training-data / retrieval pipeline needs on top of the relational core:
 
 - ``text_bm25`` — Okapi BM25 relevance scoring of a document corpus
   against a query term set (the classic sparse-retrieval ranker).
+- ``retrieval_rrf_fusion`` and ``retrieval_context_pack`` — hybrid
+  retrieval: the BM25 ranking fused with an embedding-cosine ranking by
+  reciprocal rank, then (context pack) deduplicated and packed into a
+  token budget. One scorer (:func:`_bm25_scores`) and one fusion leg
+  (:func:`_rrf_fused`) serve all three entries; their DuckDB oracles
+  share one SQL fragment each (:func:`_sql_bm25`,
+  :func:`_sql_rrf_fused`).
 - ``join_edit_distance`` — fuzzy string matching via Levenshtein
   distance over a deduplicated dictionary (dictionary-level fuzzy join,
   the scalable formulation).
@@ -27,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from pyblazing_spark.functions import array_lit
-from pyblazing_spark.operators.global_window import global_ntile
+from pyblazing_spark.operators.global_window import global_ntile, ranked_topk
 from pyblazing_spark.plans.registry import register
 from pyblazing_spark.plans.tpch import money
 from pyblazing_spark.sources.tables import load_table as T
@@ -37,13 +44,14 @@ _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 
-@register(
-    "text_bm25",
-    tags=("llm", "retrieval", "scoring"),
-    oracle=rf"""
-WITH tok AS (
+def _sql_bm25(docs: str) -> str:
+    """The oracles' BM25 CTEs ``tok`` .. ``scored`` over the (doc_id,
+    text) relation ``docs``; ``scored`` is (doc_id, n_terms, score) with
+    score = round(raw + 1e-9, 4), like :func:`_bm25_scores`."""
+    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
+    return rf"""tok AS (
   SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM documents),
+  FROM {docs}),
  dl AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
   FROM tok WHERE token <> '' GROUP BY doc_id),
@@ -51,7 +59,7 @@ WITH tok AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl FROM dl),
  tf AS (
   SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token IN ('spark', 'hash', 'window')
+  FROM tok WHERE token IN ({terms})
   GROUP BY doc_id, token),
  idf AS (
   SELECT token,
@@ -61,27 +69,21 @@ WITH tok AS (
  scored AS (
   SELECT tf.doc_id,
          CAST(count(*) AS BIGINT) AS n_terms,
-         sum(idf.idf * tf.tf * ({_BM25_K1} + 1)
+         round(sum(idf.idf * tf.tf * ({_BM25_K1} + 1)
              / (tf.tf + {_BM25_K1} * (1 - {_BM25_B}
-                                      + {_BM25_B} * dl.dl / s.avgdl))) AS raw
+                                      + {_BM25_B} * dl.dl / s.avgdl))) + 1e-9, 4)
+           AS score
   FROM tf
   JOIN idf ON tf.token = idf.token
   JOIN dl ON tf.doc_id = dl.doc_id
   CROSS JOIN stats s
-  GROUP BY tf.doc_id),
- ranked AS (
-  SELECT doc_id, n_terms, round(raw + 1e-9, 4) AS score
-  FROM scored)
-SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER) AS rank,
-       doc_id, n_terms, score
-FROM ranked
-ORDER BY score DESC, doc_id
-LIMIT 15
-""",
-)
-def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 scoring (k1=1.2, b=0.75) of every document against the
-    query ``{spark, hash, window}``; top-15 by score.
+  GROUP BY tf.doc_id)"""
+
+
+def _bm25_scores(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_terms, score): Okapi BM25 (k1=1.2, b=0.75) of every
+    ``docs`` (doc_id, text) row against the query ``_BM25_TERMS``,
+    score = round(raw + 1e-9, 4). Docs holding no query term are absent.
 
     Scale plan (r14 one-pass form): doc length AND the per-term
     frequencies for the fixed query set come from ONE conditional
@@ -93,10 +95,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     into literals via a 1-row bounded collect; ``idf`` (|query| rows)
     stays a broadcast; tf rows unpivot from the per-doc frame with
     ``stack`` carrying dl alongside, so the old tf⋈dl doc_id join
-    disappears entirely. Scoring is embarrassingly parallel and the
-    final top-k is a TakeOrdered over per-partition top-k — no global
-    sort."""
-    docs = T(spark, sf_dir, "documents")
+    disappears entirely. Scoring is embarrassingly parallel."""
     tok = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     ).where(F.col("token") != "")
@@ -138,7 +137,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    scored = (
+    return (
         tf.join(F.broadcast(idf), "token")
         .groupBy("doc_id")
         .agg(
@@ -158,10 +157,33 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_terms", F.round(F.col("raw") + 1e-9, 4).alias("score")
         )
     )
-    from pyblazing_spark.operators.global_window import ranked_topk
 
+
+@register(
+    "text_bm25",
+    tags=("llm", "retrieval", "scoring"),
+    oracle=f"""
+WITH {_sql_bm25("documents")}
+SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER) AS rank,
+       doc_id, n_terms, score
+FROM scored
+ORDER BY score DESC, doc_id
+LIMIT 15
+""",
+)
+def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 scoring (k1=1.2, b=0.75) of every document against the
+    query ``{spark, hash, window}``; top-15 by score.
+
+    Scale: :func:`_bm25_scores`, then a TakeOrdered over per-partition
+    top-k — no global sort."""
     return (
-        ranked_topk(scored, 15, F.desc("score"), F.col("doc_id"))
+        ranked_topk(
+            _bm25_scores(T(spark, sf_dir, "documents")),
+            15,
+            F.desc("score"),
+            F.col("doc_id"),
+        )
         .select("rank", "doc_id", "n_terms", "score")
         .orderBy(F.desc("score"), "doc_id")
     )
@@ -202,47 +224,21 @@ _RRF_K = 60  # the standard reciprocal-rank-fusion constant
 _RRF_LIST = 20  # depth of each input ranking
 
 
-@register(
-    "retrieval_rrf_fusion",
-    tags=("llm", "retrieval", "rag", "hybrid", "fusion"),
-    oracle=rf"""
-WITH tok AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM documents WHERE doc_id >= 1),
- dl AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-  FROM tok WHERE token <> '' GROUP BY doc_id),
- stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl FROM dl),
- tf AS (
-  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token IN ('spark', 'hash', 'window')
-  GROUP BY doc_id, token),
- idf AS (
-  SELECT token,
-         ln(1 + (s.n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY token) d
-  CROSS JOIN stats s),
- bm AS (
-  SELECT tf.doc_id,
-         round(sum(idf.idf * tf.tf * ({_BM25_K1} + 1)
-             / (tf.tf + {_BM25_K1} * (1 - {_BM25_B}
-                                      + {_BM25_B} * dl.dl / s.avgdl))) + 1e-9, 4)
-           AS score
-  FROM tf
-  JOIN idf ON tf.token = idf.token
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats s
-  GROUP BY tf.doc_id),
+def _sql_rrf_fused(docs: str, corpus_emb: str) -> str:
+    """The fusion oracles' CTEs: :func:`_sql_bm25` over ``docs``, then
+    ``lex``/``qv``/``vecs``/``vec``/``fused`` with ``corpus_emb``
+    (vec_id, embedding) ranked against vec 0; ``fused`` is (doc_id,
+    lex_rank, vec_rank, rrf), like :func:`_rrf_fused`."""
+    return f"""{_sql_bm25(docs)},
  lex AS (
   SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
            AS lex_rank
-  FROM bm QUALIFY lex_rank <= {_RRF_LIST}),
+  FROM scored QUALIFY lex_rank <= {_RRF_LIST}),
  qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
  vecs AS (
   SELECT vec_id AS doc_id,
          round(list_cosine_similarity(embedding, qv.v) + 1e-9, 4) AS cos
-  FROM embeddings CROSS JOIN qv WHERE vec_id >= 1),
+  FROM {corpus_emb} CROSS JOIN qv),
  vec AS (
   SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT)
            AS vec_rank
@@ -253,7 +249,55 @@ WITH tok AS (
          coalesce(vec_rank, 0) AS vec_rank,
          round(coalesce(1.0 / ({_RRF_K} + lex_rank), 0)
                + coalesce(1.0 / ({_RRF_K} + vec_rank), 0) + 1e-9, 6) AS rrf
-  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id)
+  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id)"""
+
+
+def _rrf_fused(docs: DataFrame, corpus_emb: DataFrame, emb: DataFrame) -> DataFrame:
+    """(doc_id, lex_rank, vec_rank, rrf): the top-``_RRF_LIST`` BM25
+    ranking of ``docs`` (:func:`_bm25_scores`) and the top-``_RRF_LIST``
+    cosine ranking of ``corpus_emb`` (vec_id, embedding) against query
+    vector vec 0 of ``emb``, fused by reciprocal rank, rrf = Σ 1/(60 +
+    rank) over the lists a doc appears in (rank 0 = absent).
+
+    Scale: the BM25 leg shuffles only (doc_id, count) rows; the vector
+    leg streams the corpus once against one broadcast query vector;
+    fusion itself is a 20-by-20 full outer join."""
+    from pyblazing_spark.functions.vectors import cosine_udf, nudge_round
+
+    lex = ranked_topk(
+        _bm25_scores(docs), _RRF_LIST, F.desc("score"), "doc_id", out_col="lex_rank"
+    ).select("doc_id", F.col("lex_rank").cast("long").alias("lex_rank"))
+    qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    vec = ranked_topk(
+        corpus_emb.crossJoin(F.broadcast(qv)).select(
+            F.col("vec_id").alias("doc_id"),
+            nudge_round(cosine_udf(F.col("embedding"), F.col("qv")), 4).alias("cos"),
+        ),
+        _RRF_LIST,
+        F.desc("cos"),
+        "doc_id",
+        out_col="vec_rank",
+    ).select("doc_id", F.col("vec_rank").cast("long").alias("vec_rank"))
+    return lex.join(vec, "doc_id", "full").select(
+        "doc_id",
+        F.coalesce("lex_rank", F.lit(0)).alias("lex_rank"),
+        F.coalesce("vec_rank", F.lit(0)).alias("vec_rank"),
+        F.round(
+            F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
+            + F.coalesce(1.0 / (_RRF_K + F.col("vec_rank")), F.lit(0.0))
+            + 1e-9,
+            6,
+        ).alias("rrf"),
+    )
+
+
+@register(
+    "retrieval_rrf_fusion",
+    tags=("llm", "retrieval", "rag", "hybrid", "fusion"),
+    oracle=f"""
+WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id >= 1),
+ emb AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 1),
+ {_sql_rrf_fused("docs", "emb")}
 SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INTEGER) AS rank,
        doc_id, lex_rank, vec_rank, rrf
 FROM fused
@@ -271,88 +315,12 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent from that list), so the oracle catches a ranking, join, or
     fusion-arithmetic bug anywhere in either leg.
 
-    Scale: the BM25 leg is text_bm25's shuffle shape (only (doc_id,
-    count) pairs cross the wire); the vector leg streams the corpus
-    once against one broadcast query vector; fusion itself is a
-    20-by-20 full outer join."""
-    docs = T(spark, sf_dir, "documents").where(F.col("doc_id") >= 1)
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
-    ).where(F.col("token") != "")
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    tf = (
-        tok.where(F.col("token").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    idf = (
-        tf.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "token",
-            F.log(
-                1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    bm = (
-        tf.join(F.broadcast(idf), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("idf")
-                    * F.col("tf")
-                    * (_BM25_K1 + 1)
-                    / (
-                        F.col("tf")
-                        + _BM25_K1
-                        * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-                    )
-                )
-                + 1e-9,
-                4,
-            ).alias("score")
-        )
-    )
-    from pyblazing_spark.operators.global_window import ranked_topk
-
-    lex = ranked_topk(
-        bm, _RRF_LIST, F.desc("score"), "doc_id", out_col="lex_rank"
-    ).select("doc_id", F.col("lex_rank").cast("long").alias("lex_rank"))
-    from pyblazing_spark.functions.vectors import cosine_udf, nudge_round
-
+    Scale: :func:`_rrf_fused` (BM25 leg :func:`_bm25_scores`)."""
     emb = T(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    vec = ranked_topk(
-        emb.where(F.col("vec_id") >= 1)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            nudge_round(cosine_udf(F.col("embedding"), F.col("qv")), 4).alias("cos"),
-        ),
-        _RRF_LIST,
-        F.desc("cos"),
-        "doc_id",
-        out_col="vec_rank",
-    ).select("doc_id", F.col("vec_rank").cast("long").alias("vec_rank"))
-    fused = (
-        lex.join(vec, "doc_id", "full")
-        .select(
-            "doc_id",
-            F.coalesce("lex_rank", F.lit(0)).alias("lex_rank"),
-            F.coalesce("vec_rank", F.lit(0)).alias("vec_rank"),
-            F.round(
-                F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (_RRF_K + F.col("vec_rank")), F.lit(0.0))
-                + 1e-9,
-                6,
-            ).alias("rrf"),
-        )
+    fused = _rrf_fused(
+        T(spark, sf_dir, "documents").where(F.col("doc_id") >= 1),
+        emb.where(F.col("vec_id") >= 1),
+        emb,
     )
     return (
         ranked_topk(fused, 10, F.desc("rrf"), "doc_id")
@@ -1104,8 +1072,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = pernode.agg(
         F.expr("sum(n_triangles) div 3").alias("total_triangles")
     ).crossJoin(F.broadcast(edges.agg(F.count(F.lit(1)).alias("n_edges"))))
-    from pyblazing_spark.operators.global_window import ranked_topk
-
     return (
         ranked_topk(
             pernode.crossJoin(F.broadcast(tot)), 5, F.desc("n_triangles"), "node"
@@ -1660,51 +1626,7 @@ WITH docs2 AS MATERIALIZED (
   SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 1
   UNION ALL SELECT vec_id + {_CTX_OFF}, embedding FROM embeddings
             WHERE vec_id >= 1),
- tok AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM docs2),
- dl AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-  FROM tok WHERE token <> '' GROUP BY doc_id),
- stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl FROM dl),
- tf AS (
-  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-  FROM tok WHERE token IN ('spark', 'hash', 'window')
-  GROUP BY doc_id, token),
- idf AS (
-  SELECT token, ln(1 + (s.n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY token) d
-  CROSS JOIN stats s),
- bm AS (
-  SELECT tf.doc_id,
-         round(sum(idf.idf * tf.tf * ({_BM25_K1} + 1)
-             / (tf.tf + {_BM25_K1} * (1 - {_BM25_B}
-                                      + {_BM25_B} * dl.dl / s.avgdl))) + 1e-9, 4)
-           AS score
-  FROM tf JOIN idf ON tf.token = idf.token
-  JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN stats s
-  GROUP BY tf.doc_id),
- lex AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-           AS lex_rank
-  FROM bm QUALIFY lex_rank <= {_RRF_LIST}),
- qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
- vecs AS (
-  SELECT vec_id AS doc_id,
-         round(list_cosine_similarity(embedding, qv.v) + 1e-9, 4) AS cos
-  FROM emb2 CROSS JOIN qv),
- vec AS (
-  SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT)
-           AS vec_rank
-  FROM vecs QUALIFY vec_rank <= {_RRF_LIST}),
- fused AS (
-  SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
-         coalesce(lex_rank, 0) AS lex_rank,
-         coalesce(vec_rank, 0) AS vec_rank,
-         round(coalesce(1.0 / ({_RRF_K} + lex_rank), 0)
-               + coalesce(1.0 / ({_RRF_K} + vec_rank), 0) + 1e-9, 6) AS rrf
-  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id),
+ {_sql_rrf_fused("docs2", "emb2")},
  ranked AS (
   SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank,
          doc_id, rrf FROM fused),
@@ -1729,7 +1651,7 @@ FROM packd ORDER BY rank
 def retrieval_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG context-window ASSEMBLY — the step between hybrid retrieval
     and the prompt: fuse the lexical (BM25) and vector legs by
-    reciprocal rank (the retrieval_rrf_fusion machinery), DEDUP the
+    reciprocal rank (:func:`_rrf_fused`, as retrieval_rrf_fusion), DEDUP the
     retrieved passages by content fingerprint (mirrored/quoted passages
     retrieve together and waste context — first occurrence by rank
     wins), then pack survivors greedily in rank order into a
@@ -1742,15 +1664,14 @@ def retrieval_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the fused top-20 at all three SFs), the same planted-duplicate
     pattern as dedup_semantic_exhaustive.
 
-    Scale shape: both retrieval legs keep their entries' contracts
-    (BM25 shuffles only (doc_id, count) pairs; the vector leg streams
-    the corpus once against one broadcast query vector); everything
+    Scale shape: the fusion leg is :func:`_rrf_fused` over the doubled
+    corpus (BM25 shuffles only (doc_id, count) rows; the vector leg
+    streams the corpus once against one broadcast query vector); everything
     after fusion — fingerprint join, dedup window, cumulative pack —
     runs on the LIST-DEPTH-bounded candidate set (<= 2x20 rows), so
     the unpartitioned windows are bounded by construction, never
     corpus-sized."""
     from pyblazing_spark.functions import text as TXT
-    from pyblazing_spark.functions.vectors import cosine_udf, nudge_round
 
     base_docs = T(spark, sf_dir, "documents").where(F.col("doc_id") >= 1)
     docs2 = base_docs.select("doc_id", "text").unionAll(
@@ -1758,84 +1679,12 @@ def retrieval_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + _CTX_OFF).alias("doc_id"), "text"
         )
     )
-    tok = docs2.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token"),
-    ).where(F.col("token") != "")
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        tok.where(F.col("token").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    idf = (
-        tf.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "token",
-            F.log(
-                1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    bm = (
-        tf.join(F.broadcast(idf), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("idf")
-                    * F.col("tf")
-                    * (_BM25_K1 + 1)
-                    / (
-                        F.col("tf")
-                        + _BM25_K1
-                        * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-                    )
-                )
-                + 1e-9,
-                4,
-            ).alias("score")
-        )
-    )
-    from pyblazing_spark.operators.global_window import ranked_topk
-
-    lex = ranked_topk(
-        bm, _RRF_LIST, F.desc("score"), "doc_id", out_col="lex_rank"
-    ).select("doc_id", F.col("lex_rank").cast("long").alias("lex_rank"))
     emb = T(spark, sf_dir, "embeddings")
     base_emb = emb.where(F.col("vec_id") >= 1).select("vec_id", "embedding")
     emb2 = base_emb.unionAll(
         base_emb.select((F.col("vec_id") + _CTX_OFF).alias("vec_id"), "embedding")
     )
-    qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    vec = ranked_topk(
-        emb2.crossJoin(F.broadcast(qv)).select(
-            F.col("vec_id").alias("doc_id"),
-            nudge_round(cosine_udf(F.col("embedding"), F.col("qv")), 4).alias(
-                "cos"
-            ),
-        ),
-        _RRF_LIST,
-        F.desc("cos"),
-        "doc_id",
-        out_col="vec_rank",
-    ).select("doc_id", F.col("vec_rank").cast("long").alias("vec_rank"))
-    fused = lex.join(vec, "doc_id", "full").select(
-        "doc_id",
-        F.round(
-            F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (_RRF_K + F.col("vec_rank")), F.lit(0.0))
-            + 1e-9,
-            6,
-        ).alias("rrf"),
-    )
+    fused = _rrf_fused(docs2, emb2, emb)
     ranked = ranked_topk(fused, _RRF_LIST, F.desc("rrf"), "doc_id").select(
         F.col("rank").cast("long").alias("rank"), "doc_id"
     )

@@ -93,55 +93,17 @@ def test_lsh_ann_recall(spark, sf_dir):
             assert abs(exact_scores[(r.query_id, r.neighbor_id)] - r.cos) < 1e-6
 
 
-def test_singleton_prefilter_bit_identical(spark, sf_dir):
-    """The bloom singleton pre-filter (VERDICT r6 #8) is a pure wire
-    optimization: filtered and unfiltered inverted-index plans must
-    produce BIT-IDENTICAL pair sets (the filter certifies only shingles
-    that cannot contribute to any pair), and the bloom membership test
-    must appear as a Filter stage in the physical plan."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where("doc_id < 200")
-        .select("doc_id", "text")
-    )
-    on = DD.ngram_jaccard_pairs(
-        docs, threshold=0.0, prefilter_singletons=True
-    ).orderBy("id_a", "id_b").collect()
-    off = DD.ngram_jaccard_pairs(
-        docs, threshold=0.0, prefilter_singletons=False
-    ).orderBy("id_a", "id_b").collect()
-    assert on == off and len(on) > 0
-    c_on = DD.containment_pairs(
-        docs, threshold=0.0, prefilter_singletons=True
-    ).orderBy("contained_id", "container_id").collect()
-    c_off = DD.containment_pairs(
-        docs, threshold=0.0, prefilter_singletons=False
-    ).orderBy("contained_id", "container_id").collect()
-    assert c_on == c_off and len(c_on) > 0
-    # plan: the bloom test runs as a Filter BEFORE the join exchange
-    plan = DD.containment_pairs(
-        docs, threshold=0.6, prefilter_singletons=True
-    )._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert any(
-        "element_at" in b and "xxhash64" in b and "shiftleft" in b
-        for b in plan.split("\n\n")
-        if ") Filter" in b
-    ), plan
-
-
-def test_singleton_prefilter_all_singletons_short_circuits(spark):
-    """A corpus where every shingle is unique has no possible pair: the
-    pre-filter's empty hot set short-circuits to an empty result with
-    the operator's normal schema."""
+def test_no_shared_shingle_returns_empty_with_schema(spark):
+    """A corpus where every shingle is unique has no possible pair: both
+    inverted-index operators return an empty result with their normal
+    schema."""
     docs = spark.createDataFrame(
         [(1, "abcdefghijk"), (2, "zyxwvutsrqp")], "doc_id long, text string"
     )
-    jac = DD.ngram_jaccard_pairs(docs, prefilter_singletons=True)
+    jac = DD.ngram_jaccard_pairs(docs)
     assert jac.count() == 0
     assert jac.columns == ["id_a", "id_b", "jaccard"]
-    cont = DD.containment_pairs(docs, prefilter_singletons=True)
+    cont = DD.containment_pairs(docs)
     assert cont.count() == 0
     assert cont.columns == ["contained_id", "container_id", "containment"]
 
@@ -773,5 +735,69 @@ def test_keyword_fast_path_equals_automaton():
         assert [text.count(k) for k in kws] == count_matches(
             text, auto, len(kws)
         )
+
+    check()
+
+
+def _naive_bm25(texts, terms, k1=1.2, b=0.75):
+    """Plain-Python Okapi BM25: {doc_id: (n_terms, round(raw + 1e-9, 4))}
+    for the docs holding a query term. N and avgdl count the docs with
+    at least one whitespace token; idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
+    Rounds half-up on the shortest decimal form, as Spark's ``round``."""
+    import math
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    toks = {i: [t for t in re.split(r"\s+", x) if t] for i, x in enumerate(texts)}
+    toks = {i: ts for i, ts in toks.items() if ts}
+    if not toks:
+        return {}
+    n = len(toks)
+    avgdl = sum(len(ts) for ts in toks.values()) / n
+    df = {t: sum(1 for ts in toks.values() if t in ts) for t in terms}
+    out = {}
+    for i, ts in toks.items():
+        hit = [t for t in terms if t in ts]
+        if not hit:
+            continue
+        raw = 0.0
+        for t in hit:
+            tf = ts.count(t)
+            idf = math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+            raw += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(ts) / avgdl))
+        score = Decimal(repr(raw + 1e-9)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        out[i] = (len(hit), float(score))
+    return out
+
+
+def test_bm25_scores_match_naive_okapi(spark):
+    """plans/retrieval.py::_bm25_scores (the one-pass conditional
+    aggregation + stack unpivot every BM25 entry runs) equals a naive
+    per-document Okapi BM25 over small random corpora: empty and
+    whitespace-only texts, repeated query terms, near-miss tokens
+    ("Spark", "sparks"), docs with no query term, one-doc corpora."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from pyblazing_spark.plans.retrieval import _BM25_TERMS, _bm25_scores
+
+    words = st.sampled_from(_BM25_TERMS + ("a", "bb", "Spark", "sparks"))
+    space = st.sampled_from(["", " ", "  ", "\t", " \n "])
+    gap = st.sampled_from([" ", "  ", "\t ", "\n"])
+    text = st.tuples(space, st.lists(st.tuples(words, gap), max_size=8), space).map(
+        lambda t: t[0] + "".join(w + g for w, g in t[1]) + t[2]
+    )
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(text, min_size=1, max_size=6))
+    def check(texts):
+        docs = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        got = {
+            r.doc_id: (r.n_terms, r.score)
+            for r in _bm25_scores(docs).collect()
+        }
+        assert got == _naive_bm25(texts, _BM25_TERMS), texts
 
     check()

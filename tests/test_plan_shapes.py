@@ -107,6 +107,15 @@ EXPECTED_JOBS: dict[str, int] = {
     "sort_pareto_frontier": 11,
     "sort_zorder_cluster": 9,
     "win_global_scaled": 5,
+    # the retrieval family: one BM25 scorer (per-doc checkpoint, N/avgdl
+    # collect) and one RRF fusion leg (plans/retrieval.py)
+    "text_bm25": 8,
+    "retrieval_rrf_fusion": 9,
+    "retrieval_context_pack": 12,
+    # the inverted-index dedup entries: shingle checkpoint, then the
+    # self-join
+    "dedup_ngram_jaccard": 9,
+    "dedup_containment": 9,
 }
 
 
